@@ -269,7 +269,7 @@ object ArtifactMaintenance {
       * artifact. Caller starts/stops the returned writer and owns the
       * checkpoint location, as all MicroBatch jobs here do. */
     def maintain(docs: DataFrame): DataStreamWriter[Row] =
-      docs.writeStream
+      MicroBatch.writeStream(docs)
         .outputMode("append")
         .trigger(Trigger.ProcessingTime(0L))
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -928,7 +928,7 @@ object ArtifactMaintenance {
 
     /** Wire a streaming (doc_id, text) feed to maintain the store. */
     def maintain(docs: DataFrame): DataStreamWriter[Row] =
-      docs.writeStream
+      MicroBatch.writeStream(docs)
         .outputMode("append")
         .trigger(Trigger.ProcessingTime(0L))
         .foreachBatch { (batch: DataFrame, batchId: Long) =>

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
@@ -101,6 +101,13 @@ object MicroBatch {
         col("window.end").as("win_end"),
         col("event_type"), col("n_events"), col("sum_value"))
 
+  /** The writer every stream of the program starts from, so checkpoint
+    * storage policy lives in one place ([[CheckpointFs.install]]). */
+  def writeStream(df: DataFrame): DataStreamWriter[Row] = {
+    CheckpointFs.install(df.sparkSession)
+    df.writeStream
+  }
+
   /** Start a pipeline into a sink with durable offsets (the W2 fix). */
   def start(
       pipeline: DataFrame,
@@ -108,12 +115,12 @@ object MicroBatch {
       checkpointDir: String,
       queryName: String,
       trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    pipeline.writeStream
+    writeStream(pipeline)
       .queryName(queryName)
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
       .trigger(trigger)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         sink.write(batch.toDF(), batchId)
       }
       .start()

@@ -195,7 +195,7 @@ class GlobalOrderSpec extends SparkSpec {
         li.select(col("l_orderkey")).distinct().count())
     } finally {
       spark.conf.set("graft.checkpoint.reliable", "false")
-      hadDir.foreach(sc.setCheckpointDir)
+      sc.setCheckpointDir(hadDir.orNull)
     }
   }
 
@@ -223,7 +223,7 @@ class GlobalOrderSpec extends SparkSpec {
       }
     } finally {
       spark.conf.set("graft.checkpoint.reliable", "false")
-      hadDir.foreach(sc.setCheckpointDir)
+      sc.setCheckpointDir(hadDir.orNull)
       graft.model.Fs.deleteRecursively(java.nio.file.Paths.get(dir))
     }
   }
@@ -239,7 +239,7 @@ class GlobalOrderSpec extends SparkSpec {
       assert(e.getMessage.contains("setCheckpointDir"), e.getMessage)
     } finally {
       spark.conf.set("graft.checkpoint.reliable", "false")
-      hadDir.foreach(sc.setCheckpointDir)
+      sc.setCheckpointDir(hadDir.orNull)
     }
   }
 

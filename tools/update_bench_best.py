@@ -76,16 +76,26 @@ def load_bench(path):
     return out
 
 
+def is_query_min(key, value):
+    """A per-query seconds entry; anything else (e.g. the `_host_factors`
+    object) is metadata that the min-fold must not compare against."""
+    return key.startswith("q") and isinstance(value, (int, float))
+
+
 def main(paths):
     best = {}
     if os.path.exists(BEST):
         best = json.load(open(BEST))
+    meta = {k: v for k, v in best.items() if not is_query_min(k, v)}
+    best = {k: v for k, v in best.items() if is_query_min(k, v)}
     for p in paths:
         for q, v in load_bench(p).items():
+            if not is_query_min(q, v):
+                continue
             if q not in best or v < best[q]:
                 best[q] = v
     with open(BEST, "w") as f:
-        json.dump(dict(sorted(best.items())), f, indent=0, sort_keys=True)
+        json.dump({**meta, **best}, f, indent=0, sort_keys=True)
         f.write("\n")
     print(f"{BEST}: {len(best)} queries")
 
