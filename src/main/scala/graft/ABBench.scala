@@ -7,10 +7,10 @@ import org.apache.spark.sql.SparkSession
  * queries under two values of one runtime conf, interleaved
  * (A,B,A,B,…) so host drift lands on both arms equally, and reports
  * min-of-reps per arm. Complements Bench (which measures one tree):
- * this measures one TREE under two CONFS — used for the r18 rank-only
- * codegen decision (graft.groupedOrder.rankCodegen) and the AQE
- * coalesce settings. Not part of the driver contract; never run by
- * the driver.
+ * this measures one TREE under two CONFS (e.g. the AQE coalesce
+ * settings). A toggle added for an A/B is deleted, with its losing
+ * path, once the A/B settles it. Not part of the driver contract;
+ * never run by the driver.
  *
  * Usage: runMain graft.ABBench <sfDir> <conf=key> <valA> <valB> <q1,q2,...> [reps]
  */

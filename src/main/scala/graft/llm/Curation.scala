@@ -241,10 +241,10 @@ object Curation {
    * into consecutive bins of ~[[BinTokenBudget]] whitespace tokens —
    * the sharding step that turns a scored corpus into fixed-budget
    * training chunks. The running token sum comes from
-   * [[graft.ops.GlobalOrder.withRankAndPrefix]]'s distributed global
-   * prefix sum — a literal `SUM() OVER (ORDER BY …)` would funnel the
-   * corpus through ONE window task; the two-phase form
-   * (range-repartition + per-partition sums + a partitions-bound
+   * [[graft.ops.GlobalOrder.groupedRankAndPrefix]]'s distributed
+   * global prefix sum (`keys = Nil`) — a literal `SUM() OVER (ORDER BY
+   * …)` would funnel the corpus through ONE window task; the two-phase
+   * form (range-repartition + per-partition sums + a driver-side
    * offset fold) keeps every partition working. Bin assignment is
    * integer division of the EXCLUSIVE prefix, so a document always
    * lands in the bin that was open when it arrived.
@@ -253,8 +253,9 @@ object Curation {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("n_chars"),
         size(split(col("text"), " ")).cast("long").as("n_tokens"))
-    graft.ops.GlobalOrder.withRankAndPrefix(docs,
-        Seq(col("n_chars").desc, col("doc_id")), Some(col("n_tokens")))
+    graft.ops.GlobalOrder.groupedRankAndPrefix(docs, keys = Nil,
+        order = Seq(col("n_chars").desc, col("doc_id")),
+        values = Seq((col("n_tokens").cast("long"), "g_prefix")))
       .withColumn("bin", expr(s"g_prefix div ${BinTokenBudget}"))
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("tok_sum"),

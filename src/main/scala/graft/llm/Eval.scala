@@ -27,10 +27,11 @@ object Eval {
    * bound it at ≤ 10⁶ rows regardless of corpus size) carrying
    * (n_pos, n_neg) per score; concordant pairs are
    * Σ_s n_pos(s) · [negatives strictly below s], with the running
-   * negative count from [[graft.ops.GlobalOrder.withRankAndPrefix]] —
-   * the two-phase distributed prefix sum, no single-task window. One
-   * group-less aggregate folds the per-score products into the final
-   * single-row report: (n_pos, n_neg, n_concordant, n_tied, auc_ppm).
+   * negative count from [[graft.ops.GlobalOrder.groupedRankAndPrefix]]
+   * with `keys = Nil` — the two-phase distributed prefix sum, no
+   * single-task window. One group-less aggregate folds the per-score
+   * products into the final single-row report: (n_pos, n_neg,
+   * n_concordant, n_tied, auc_ppm).
    */
   def qualityAuc(spark: SparkSession, dir: String): DataFrame =
     qualityAucOf(Tables.documents(spark, dir))
@@ -63,8 +64,9 @@ object Eval {
     val perScore = graft.ops.GlobalOrder.pin(scored.groupBy(col("score"))
       .agg(sum(when(col("pos"), 1L).otherwise(0L)).as("np"),
         sum(when(col("pos"), 0L).otherwise(1L)).as("nn")))
-    val ranked = graft.ops.GlobalOrder.withRankAndPrefix(
-      perScore, Seq(col("score")), value = Some(col("nn")))
+    val ranked = graft.ops.GlobalOrder.groupedRankAndPrefix(
+      perScore, keys = Nil, order = Seq(col("score")),
+      values = Seq((col("nn").cast("long"), "g_prefix")))
     ranked.agg(
         sum(col("np")).as("n_pos"),
         sum(col("nn")).as("n_neg"),
@@ -133,7 +135,8 @@ object Eval {
    * picked from it is an exact operating point.
    *
    * Scale: the decile comes from
-   * [[graft.ops.GlobalOrder.withRankAndPrefix]]'s distributed rank +
+   * [[graft.ops.GlobalOrder.groupedRankAndPrefix]]'s distributed rank
+   * (`keys = Nil`) +
    * [[graft.ops.GlobalOrder.ntileFromRank]] (bit-equal to `NTILE(n)
    * OVER (ORDER BY …)`, the q134/q188 discipline) — a literal ntile
    * window would move every row into ONE task. One 10-row aggregate
@@ -144,9 +147,9 @@ object Eval {
     // pinned: the scored projection (split + stopword filter over every
     // document) is expensive relative to its narrow output; unpinned,
     // the range sampler re-runs it wholesale (guide §2.4)
-    val ranked = graft.ops.GlobalOrder.withRankAndPrefix(
+    val ranked = graft.ops.GlobalOrder.groupedRankAndPrefix(
       graft.ops.GlobalOrder.pin(scoredDocs(Tables.documents(spark, dir))),
-      Seq(col("score"), col("doc_id")))
+      keys = Nil, order = Seq(col("score"), col("doc_id")))
     ranked
       .withColumn("decile", graft.ops.GlobalOrder.ntileFromRank(
         col("g_rank"), col("g_total_rows"), buckets))
@@ -176,7 +179,7 @@ object Eval {
    * integer ppm, so ≤ 10^6+1 rows by construction — the bounded-domain
    * exemption the count-min/bloom sketches use); both cumulative sides
    * come from the two-phase distributed prefix
-   * ([[graft.ops.GlobalOrder.withRankAndPrefix]] — never a one-task
+   * ([[graft.ops.GlobalOrder.groupedRankAndPrefix]] — never a one-task
    * window); class totals broadcast as the single-row scalar pattern.
    * All-integer ppm divisions, bit-replayable. tp+fp ≥ 1 always (the
    * threshold is an observed score, so at least its own docs are
@@ -211,12 +214,11 @@ object Eval {
   /** [[prCurve]] computed from an ALREADY-BUILT per-score table (the
     * batch aggregate or its streamed twin). */
   private[graft] def prCurveFrom(perScore: DataFrame): DataFrame = {
-    // BOTH cumulative counts ride ONE rank pass: the former chain of
-    // two withRankAndPrefix calls paid the range exchange + pin +
-    // offset fold + broadcast join twice for the same (score) order —
-    // groupedRankAndPrefix with no keys is the same global exclusive
-    // prefix machinery with any number of value columns (r18; guide
-    // §2.4 "remove shuffles outright"; same-session A/B below)
+    // BOTH cumulative counts ride ONE rank pass: two single-value
+    // passes would pay the range exchange + pin + offset fold +
+    // broadcast join twice for the same (score) order — the global
+    // (keys = Nil) form takes any number of value columns (r18; guide
+    // §2.4 "remove shuffles outright")
     val withBoth = graft.ops.GlobalOrder.groupedRankAndPrefix(
       perScore, keys = Nil, order = Seq(col("score")),
       values = Seq((col("nn"), "cum_nn_below"), (col("np"), "cum_np_below")))

@@ -514,8 +514,9 @@ object MixPlan {
    * proxy — low rare_ppm = conventional text, high = novel/noisy) and
    * split it into `k` contiguous training phases, the schedule a
    * curriculum-learning run feeds batches from (Bengio et al. 2009).
-   * The global ordering uses [[graft.ops.GlobalOrder.withRankAndPrefix]]
-   * — range-partitioned two-phase ranks, NEVER a one-task global
+   * The global ordering uses
+   * [[graft.ops.GlobalOrder.groupedRankAndPrefix]] with `keys = Nil` —
+   * range-partitioned two-phase ranks, NEVER a one-task global
    * window — and the bucket math is
    * [[graft.ops.GlobalOrder.ntileFromRank]], bit-equal to ANSI
    * `ntile(k)`, so the oracle can say `NTILE(4) OVER (ORDER BY ...)`
@@ -529,8 +530,8 @@ object MixPlan {
     // pass twice (guide §2.4)
     val nov = graft.ops.GlobalOrder.pin(bigramNovelty(spark, dir)
       .select(col("doc_id"), col("rare_ppm")))
-    graft.ops.GlobalOrder.withRankAndPrefix(
-        nov, order = Seq(col("rare_ppm"), col("doc_id")))
+    graft.ops.GlobalOrder.groupedRankAndPrefix(
+        nov, keys = Nil, order = Seq(col("rare_ppm"), col("doc_id")))
       .select(col("doc_id"), col("rare_ppm"),
         col("g_rank").as("rank"),
         graft.ops.GlobalOrder.ntileFromRank(

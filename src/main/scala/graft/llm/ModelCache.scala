@@ -189,6 +189,11 @@ object ModelCache {
     case _ => ()
   }
 
+  /** Memoizes a driver-side model built from `corpus`. A
+    * Dataset-typed result must be forced inside `train` (as
+    * [[memoIndex]] does with one `count()`): local pins are lazy, so an
+    * unforced pinned build would defer its compute into the first
+    * serving query's timed rep instead of the build ledger. */
   def memo[T <: AnyRef](corpus: DataFrame, tag: String)(train: => T): T =
     corpusKey(corpus, tag) match {
       case None      => train
@@ -215,7 +220,7 @@ object ModelCache {
         getOrBuild(full, tag) {
           val built = build
           // Force materialization INSIDE the timed build (one count over
-          // the artifact): under graft.pin.lazy a pinned build would
+          // the artifact): local pins are lazy, so a pinned build would
           // otherwise defer its compute into the FIRST SERVING QUERY's
           // timed rep — build cost must stay on the build ledger.
           built.count()

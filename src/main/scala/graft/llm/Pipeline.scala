@@ -546,9 +546,9 @@ object Pipeline {
       buckets: Int = 10): DataFrame = {
     // pinned: the scored projection is a full corpus scoring pass; the
     // rank operator's range sampler would re-run it (guide §2.4)
-    val ranked = graft.ops.GlobalOrder.withRankAndPrefix(
+    val ranked = graft.ops.GlobalOrder.groupedRankAndPrefix(
       graft.ops.GlobalOrder.pin(Eval.scoredDocs(Tables.documents(spark, dir))),
-      Seq(col("score"), col("doc_id")))
+      keys = Nil, order = Seq(col("score"), col("doc_id")))
     val dup = nearDupClusters(spark, dir)
       .select(col("doc_id")).withColumn("is_dup", lit(1L))
     ranked
@@ -612,8 +612,9 @@ object Pipeline {
     // array folds per document) is the most expensive row-local work in
     // the query, and the rank operator's range sampler is a second full
     // execution of unpinned lineage (guide §2.4)
-    val ranked = graft.ops.GlobalOrder.withRankAndPrefix(
-        graft.ops.GlobalOrder.pin(base), Seq(col("score"), col("doc_id")))
+    val ranked = graft.ops.GlobalOrder.groupedRankAndPrefix(
+        graft.ops.GlobalOrder.pin(base),
+        keys = Nil, order = Seq(col("score"), col("doc_id")))
       .withColumn("decile", graft.ops.GlobalOrder.ntileFromRank(
         col("g_rank"), col("g_total_rows"), buckets))
       .withColumn("keep_id",

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DecimalType, LongType}
 
@@ -12,18 +11,20 @@ import org.apache.spark.sql.types.{DataType, DecimalType, LongType}
  * into one task: correct at test SF, a single-executor bottleneck at
  * 100 TB.
  *
- * The classic two-phase formulation instead:
+ * The classic two-phase formulation instead ([[groupedRankAndPrefix]];
+ * `keys = Nil` is the global form):
  *  1. range-repartition on the TOTAL order (the same exchange a global
- *     sort plans) and sort within partitions; one `mapPartitions` pass
- *     assigns each row its LOCAL rank and exclusive running sum — all
+ *     sort plans) and sort within partitions; a local pass assigns
+ *     each row its LOCAL rank and exclusive running sum — all
  *     partitions work in parallel, and no second exchange is needed
  *     (a `Window.partitionBy(pid)` here would re-shuffle everything on
- *     pid; the imperative per-partition pass is exactly the
- *     "genuine per-partition logic" tier);
+ *     pid). Rank-only callers stay inside whole-stage codegen; running
+ *     sums take one imperative `mapPartitions` pass;
  *  2. per-partition row/value totals (a map-side partial aggregate —
  *     ONE row per partition crosses the wire) fold into exclusive
- *     offsets, broadcast back, and compose: global rank = partition
- *     offset + local rank, global prefix = value offset + local sum.
+ *     offsets ON THE DRIVER, come back as a broadcast LocalRelation,
+ *     and compose: global rank = partition offset + local rank, global
+ *     prefix = value offset + local sum. The plan has no window.
  *
  * The ranged-and-sorted data is materialized ONCE (`localCheckpoint`)
  * and both phases read it: this is load-bearing, not an optimization —
@@ -62,33 +63,34 @@ object GlobalOrder {
    * silent downgrade: a durability opt-in that quietly fell back to
    * executor-local blocks would leave a spot-fleet job believing it is
    * failure-safe when it is not.
+   *
+   * Local pins are LAZY: materialization rides the first consumer job
+   * (Spark fills in any partitions that job skipped right after it),
+   * so the pin costs no job of its own and no separate read-back pass.
+   * All consumers share ONE checkpointed RDD, so the range exchange
+   * samples once and partition contents are facts after first
+   * materialization. The invariant this buys into: a plan that reads
+   * one lazily pinned RDD twice within its FIRST job (say a union of
+   * two legs over the same pin) may compute a partition twice before
+   * any block is stored, and the two legs may see different
+   * within-partition row orders. Consumers of such a plan must be
+   * order-insensitive or re-sort — or pin and `count()` first, which
+   * stores every block before the second reader runs. RELIABLE pins
+   * stay eager: a durability opt-in that defers its write until some
+   * later job leaves a spot-fleet job unprotected exactly when it
+   * believes it is covered.
    */
   def pin(df: DataFrame): DataFrame = {
     val sc = df.sparkSession.sparkContext
     val reliable = df.sparkSession.conf
       .get("graft.checkpoint.reliable", "false").toBoolean
-    // graft.pin.lazy (default true, r18) defers materialization to the
-    // first consumer job (Spark fills in any partitions that job
-    // skipped immediately after it): the pin's OWN job and its separate
-    // read-back pass disappear — measured −5% over twenty pin-family
-    // queries at sf0.1, up to −23% (q134) where the pin job was pure
-    // overhead. Row-stability is unchanged: lazy or eager, all
-    // consumers share ONE checkpointed RDD, so the range exchange
-    // samples once and partition contents are facts after first
-    // materialization. ModelCache force-materializes built artifacts
-    // inside the timed build so build cost never leaks into a serve
-    // rep. RELIABLE pins stay eager regardless: a durability opt-in
-    // that defers its write until some later job leaves a spot-fleet
-    // job unprotected exactly when it believes it is covered.
-    val eager = !df.sparkSession.conf
-      .get("graft.pin.lazy", "true").toBoolean
     if (reliable) {
       require(sc.getCheckpointDir.isDefined,
         "graft.checkpoint.reliable=true but no checkpoint dir is set: " +
           "call sparkContext.setCheckpointDir(<reliable storage path>) " +
           "so the pin actually survives executor loss, or unset the flag")
       df.checkpoint()
-    } else df.localCheckpoint(eager)
+    } else df.localCheckpoint(eager = false)
   }
 
   /**
@@ -129,151 +131,6 @@ object GlobalOrder {
     pinned
   }
 
-  /**
-   * Adds to `df`:
-   *  - `rankCol`: the 1-based global rank under `order` (LongType);
-   *  - `prefixCol` (if `value` is set): the global EXCLUSIVE prefix sum
-   *    of `value` under `order` — the sum over all strictly-preceding
-   *    rows (0 for the first row). `value` must be integral (it is
-   *    summed as Long, keeping prefixes exact — the repo's integer
-   *    discipline; widen doubles yourself via a scaled decimal if ever
-   *    needed);
-   *  - `totalRowsCol`: total row count N in every row (the offset fold
-   *    has it for free, and ntile-style bucketing needs it).
-   */
-  def withRankAndPrefix(
-      df: DataFrame,
-      order: Seq[Column],
-      value: Option[Column] = None,
-      rankCol: String = "g_rank",
-      prefixCol: String = "g_prefix",
-      totalRowsCol: String = "g_total_rows"): DataFrame = {
-    val spark = df.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val sorted = pin(df
-      .withColumn("__v", value.getOrElse(lit(0L)).cast("long"))
-      .repartitionByRange(parts, order: _*)
-      .sortWithinPartitions(order: _*))
-    // phase-1 local pass: rank + exclusive running sum, no exchange.
-    // Rank-only callers stay INSIDE whole-stage codegen: over the
-    // pinned blocks `monotonically_increasing_id()` is, by its
-    // documented construction, (partitionId << 33) + rowIndex — so the
-    // local rank and the partition id are two bit-ops on one generated
-    // column, and the Deserialize→MapPartitions→Serialize boundary
-    // (per-row external Row allocation, a codegen break measured at
-    // ~15-25% of these queries' serve time at sf0.1) vanishes. The pin
-    // makes partition ids and in-partition positions facts, so the
-    // nondeterministic id is stable across re-reads. The running-sum
-    // path keeps the imperative pass — an exclusive in-partition scan
-    // has no codegen'd equivalent.
-    val rankCodegen = spark.conf
-      .get("graft.groupedOrder.rankCodegen", "true").toBoolean
-    val local = value match {
-      case None if rankCodegen =>
-        sorted
-          .withColumn("__mid", monotonically_increasing_id())
-          .withColumn("__pid",
-            shiftrightunsigned(col("__mid"), 33).cast("long"))
-          .withColumn("__lrank",
-            col("__mid").bitwiseAND(lit((1L << 33) - 1)) + 1L)
-          .withColumn("__lsum", lit(0L))
-          .drop("__mid")
-      case _ =>
-        val vIdx = sorted.schema.fieldIndex("__v")
-        val outSchema = sorted.schema
-          .add("__pid", LongType, nullable = false)
-          .add("__lrank", LongType, nullable = false)
-          .add("__lsum", LongType, nullable = false)
-        sorted.mapPartitions { rows =>
-          val pid = org.apache.spark.TaskContext.getPartitionId().toLong
-          var rank = 0L
-          var cum = 0L
-          rows.map { r =>
-            rank += 1
-            val before = cum
-            if (!r.isNullAt(vIdx)) cum += r.getLong(vIdx)
-            Row.fromSeq(r.toSeq :+ pid :+ rank :+ before)
-          }
-        }(Encoders.row(outSchema))
-    }
-    // phase-2 offsets: one partial-aggregated row per partition, read
-    // from the SAME pinned blocks as phase 1
-    val offsets = sorted
-      .withColumn("__pid", spark_partition_id().cast("long"))
-      .groupBy(col("__pid"))
-      .agg(count(lit(1)).as("__n"), sum(col("__v")).as("__s"))
-    // exclusive offsets over the partitions-bound table — this window
-    // IS one-task, over ≤ `parts` rows, which is the point
-    val ow = Window.orderBy(col("__pid"))
-    val folded = offsets
-      .withColumn("__rank_off",
-        coalesce(sum(col("__n")).over(ow.rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-      .withColumn("__sum_off",
-        coalesce(sum(col("__s")).over(ow.rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-      .withColumn(totalRowsCol, sum(col("__n")).over(
-        ow.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      .select(col("__pid"), col("__rank_off"), col("__sum_off"), col(totalRowsCol))
-    val joined = local.join(broadcast(folded), Seq("__pid"))
-      .withColumn(rankCol, col("__rank_off") + col("__lrank"))
-    val withPrefix = value match {
-      case Some(_) => joined.withColumn(prefixCol, col("__sum_off") + col("__lsum"))
-      case None => joined
-    }
-    withPrefix.drop("__pid", "__v", "__lrank", "__lsum", "__rank_off", "__sum_off")
-  }
-
-  /**
-   * GROUPED rank and prefix sums: per-key `row_number` / running sums
-   * without a per-key window — the scale-safe replacement for
-   * `Window.partitionBy(fewKeys).orderBy(...)`, which shuffles a
-   * fact-scale table into key-cardinality reducer tasks and sorts
-   * there (a 1000-core cluster doing the work of ≤25 cores, one hot
-   * key serializing it further).
-   *
-   * Same two-phase trick as [[withRankAndPrefix]], composed per key:
-   *  1. range-repartition on (keys ++ order) — all partitions carry
-   *     contiguous (key, order) slices, so every partition works
-   *     regardless of key cardinality — sort within, pin, and one
-   *     local pass assigns each row its rank/exclusive sums WITHIN its
-   *     (key, partition) segment (the pass watches the key tuple and
-   *     resets at boundaries);
-   *  2. per-(partition, key) segment totals fold into per-key
-   *     exclusive offsets. Because a key's rows occupy CONTIGUOUS
-   *     partitions under the range exchange, the segments table has at
-   *     most `distinctKeys + partitions − 1` rows — metadata-size by
-   *     construction. It folds on the DRIVER (the k-row-collect
-   *     class) and rebuilds as a LocalRelation, so the broadcast back
-   *     is provably bounded and the final plan contains NO window at
-   *     all — fact-scale or otherwise.
-   *
-   * Adds `rankCol` (1-based per-key rank, Long), `totalRowsCol`
-   * (per-key row count N_k — `percent_rank = (rank−1)/(N_k−1)`,
-   * `cume_dist = rank/N_k` under a total order, and
-   * [[ntileFromRank]] all derive from these two), and one exclusive
-   * per-key prefix column per `values` entry.
-   *
-   * `values` columns must be integral (summed exactly as Long) or
-   * DecimalType (summed exactly as BigDecimal, emitted at
-   * decimal(38, s) — the same widen-before-sum discipline as the
-   * window formulations this replaces). Doubles are rejected: a
-   * float running sum is evaluation-order dependent, which this
-   * operator exists to keep deterministic.
-   *
-   * Envelope: designed for key cardinality ≪ cluster parallelism
-   * (the regime where a plain window is a parallelism ceiling). With
-   * millions of keys the segments table grows toward `K + parts` rows
-   * — still fine to fold, but a plain per-key window already
-   * parallelizes there and is the simpler plan.
-   *
-   * Callers MUST pass a total order per key (include a unique
-   * tiebreak) — same caveat as [[withRankAndPrefix]]. And note the
-   * range partitioner SAMPLES its input in a separate pass, so `df`'s
-   * lineage executes twice — callers whose upstream is expensive
-   * (joins/aggregates, or a union reading one subplan twice) should
-   * [[pin]] it first (q140 does).
-   */
   /** Shared staging for the grouped operators: materialize key/value
     * columns (integral values normalized to Long; doubles rejected —
     * float running sums are evaluation-order dependent, which these
@@ -335,6 +192,56 @@ object GlobalOrder {
       }.toArray)
   }
 
+  /**
+   * GROUPED rank and prefix sums: per-key `row_number` / running sums
+   * without a per-key window — the scale-safe replacement for
+   * `Window.partitionBy(fewKeys).orderBy(...)`, which shuffles a
+   * fact-scale table into key-cardinality reducer tasks and sorts
+   * there (a 1000-core cluster doing the work of ≤25 cores, one hot
+   * key serializing it further).
+   *
+   * The class doc's two-phase trick, composed per key:
+   *  1. range-repartition on (keys ++ order) — all partitions carry
+   *     contiguous (key, order) slices, so every partition works
+   *     regardless of key cardinality — sort within, pin, and one
+   *     local pass assigns each row its rank/exclusive sums WITHIN its
+   *     (key, partition) segment (the pass watches the key tuple and
+   *     resets at boundaries);
+   *  2. per-(partition, key) segment totals fold into per-key
+   *     exclusive offsets. Because a key's rows occupy CONTIGUOUS
+   *     partitions under the range exchange, the segments table has at
+   *     most `distinctKeys + partitions − 1` rows — metadata-size by
+   *     construction. It folds on the DRIVER (the k-row-collect
+   *     class) and rebuilds as a LocalRelation, so the broadcast back
+   *     is provably bounded and the final plan contains NO window at
+   *     all — fact-scale or otherwise.
+   *
+   * Adds `rankCol` (1-based per-key rank, Long), `totalRowsCol`
+   * (per-key row count N_k — `percent_rank = (rank−1)/(N_k−1)`,
+   * `cume_dist = rank/N_k` under a total order, and
+   * [[ntileFromRank]] all derive from these two), and one exclusive
+   * per-key prefix column per `values` entry.
+   *
+   * `values` columns must be integral (summed exactly as Long) or
+   * DecimalType (summed exactly as BigDecimal, emitted at
+   * decimal(38, s) — the same widen-before-sum discipline as the
+   * window formulations this replaces). Doubles are rejected: a
+   * float running sum is evaluation-order dependent, which this
+   * operator exists to keep deterministic.
+   *
+   * Envelope: designed for key cardinality ≪ cluster parallelism
+   * (the regime where a plain window is a parallelism ceiling). With
+   * millions of keys the segments table grows toward `K + parts` rows
+   * — still fine to fold, but a plain per-key window already
+   * parallelizes there and is the simpler plan.
+   *
+   * Callers MUST pass a total order per key (include a unique
+   * tiebreak) — same caveat as the class doc. And note the
+   * range partitioner SAMPLES its input in a separate pass, so `df`'s
+   * lineage executes twice — callers whose upstream is expensive
+   * (joins/aggregates, or a union reading one subplan twice) should
+   * [[pin]] it first (q140 does).
+   */
   def groupedRankAndPrefix(
       df: DataFrame,
       keys: Seq[Column],
@@ -359,18 +266,12 @@ object GlobalOrder {
       sch.add(s"__ls$i", prefixType(i), nullable = false)
     }
     val nv = values.size
-    // Measurement toggle for the rank-only codegen path (r17 batch 5,
-    // settled with sf1 data in r18): false routes rank-only callers
-    // through the same imperative per-partition pass the running-sum
-    // path uses, so the two formulations can be A/B'd at any SF in one
-    // session. Default true — the codegen path.
-    val useCodegen = nv == 0 && spark.conf
-      .get("graft.groupedOrder.rankCodegen", "true").toBoolean
+    val rankOnly = nv == 0
     // phase-1 local pass. RANK-ONLY callers (every groupedQuantiles,
-    // the distribution-rank family) stay INSIDE whole-stage codegen
-    // (r17 optimization round, the withRankAndPrefix discipline): over
-    // the pinned blocks monotonically_increasing_id() is, by its
-    // documented construction, (pid << 33) + rowIndex — the PARTITION
+    // the distribution-rank family, the global ntile buckets) stay
+    // INSIDE whole-stage codegen: over the pinned blocks
+    // monotonically_increasing_id() is, by its documented
+    // construction, (pid << 33) + rowIndex — the PARTITION
     // rank; the per-(key, segment) rank is recovered after the offset
     // join as (partition rank − segment start + 1), with each
     // segment's start collected by phase 2 as min(partition rank).
@@ -382,7 +283,7 @@ object GlobalOrder {
       .withColumn("__plrank", col("__mid").bitwiseAND(lit((1L << 33) - 1)) + 1L)
       .drop("__mid")
     val local =
-      if (useCodegen) withMid(sorted)
+      if (rankOnly) withMid(sorted)
       else sorted.mapPartitions { rows =>
         val pid = org.apache.spark.TaskContext.getPartitionId().toLong
         var curKey: Seq[Any] = null
@@ -428,7 +329,7 @@ object GlobalOrder {
     // mid is stable across the two reads because the blocks are pinned
     // and the id is a pure function of (partition, iteration position)
     val segAggs =
-      if (useCodegen) Seq(count(lit(1)).as("__n"),
+      if (rankOnly) Seq(count(lit(1)).as("__n"),
         min(col("__plrank")).as("__segstart"))
       else count(lit(1)).as("__n") +:
         values.indices.map(i => sum(col(s"__v$i")).as(s"__s$i"))
@@ -441,7 +342,7 @@ object GlobalOrder {
     // when the guard passes the limited collect IS the full segment
     // set (length ≤ maxSegs < limit)
     val segSrc =
-      if (useCodegen) withMid(sorted)
+      if (rankOnly) withMid(sorted)
       else sorted.withColumn("__pid", spark_partition_id().cast("long"))
     val segs = segSrc
       .groupBy((col("__pid") +: kCols.map(col)): _*)
@@ -474,7 +375,7 @@ object GlobalOrder {
           // (min partition rank) so the join can recover the per-key
           // local rank as (__plrank − __segstart + 1)
           val tail: Seq[Any] =
-            if (useCodegen) Seq(rankOff, totalN, r.getLong(2 + nKeys))
+            if (rankOnly) Seq(rankOff, totalN, r.getLong(2 + nKeys))
             else rankOff +: totalN +: offs
           foldedRows.add(Row.fromSeq(
             (r.getLong(0) +: (0 until nKeys).map(i => r.get(1 + i))) ++ tail))
@@ -495,12 +396,12 @@ object GlobalOrder {
       .add("__rank_off", LongType, nullable = false)
       .add(totalRowsCol, LongType, nullable = false)
     val foldSchema =
-      if (useCodegen) foldBase.add("__segstart", LongType, nullable = false)
+      if (rankOnly) foldBase.add("__segstart", LongType, nullable = false)
       else values.indices.foldLeft(foldBase) { (st, i) =>
         st.add(s"__off$i", prefixType(i), nullable = false)
       }
     val keepF = Seq(col(s"f.__rank_off"), col(s"f.$totalRowsCol")) ++
-      (if (useCodegen) Seq(col("f.__segstart"))
+      (if (rankOnly) Seq(col("f.__segstart"))
        else values.indices.map(i => col(s"f.__off$i")))
     // null-safe on keys: a usingColumns join would drop null-key rows
     val l = local.alias("l")
@@ -510,7 +411,7 @@ object GlobalOrder {
     var out = l.join(f, cond.reduce(_ && _))
       .select((col("l.*") +: keepF): _*)
       .withColumn(rankCol,
-        if (useCodegen)
+        if (rankOnly)
           col("__rank_off") + (col("__plrank") - col("__segstart") + 1L)
         else col("__rank_off") + col("__lrank"))
     values.zipWithIndex.foreach { case ((_, name), i) =>
@@ -745,7 +646,8 @@ object GlobalOrder {
   /** ANSI ntile bucket (1-based) from a global rank: the first
     * `N mod k` buckets carry `N div k + 1` rows, the rest `N div k` —
     * exactly DuckDB/Spark `ntile(k)` semantics, computed from
-    * [[withRankAndPrefix]]'s rank instead of a one-task window. */
+    * [[groupedRankAndPrefix]]'s `keys = Nil` rank and total instead of
+    * a one-task window. */
   def ntileFromRank(rank: Column, totalRows: Column, k: Int): Column = {
     val n = totalRows.cast("long")
     val size = idiv(n, lit(k.toLong))

@@ -22,16 +22,17 @@ object Relational6 {
    * shape (equal-height histograms are what engines keep for
    * selectivity estimation). A literal `ntile() OVER (ORDER BY …)`
    * would move EVERY row into one window task; the bucket instead
-   * comes from [[GlobalOrder.withRankAndPrefix]]'s distributed global
-   * rank (range-repartition + per-partition rank + a partitions-bound
-   * offset fold) with [[GlobalOrder.ntileFromRank]] reproducing ANSI
-   * ntile semantics exactly — the DuckDB oracle still runs the literal
+   * comes from [[GlobalOrder.groupedRankAndPrefix]]'s distributed
+   * global rank (`keys = Nil`: range-repartition + per-partition rank +
+   * a driver-side offset fold) with [[GlobalOrder.ntileFromRank]]
+   * reproducing ANSI ntile semantics exactly — the DuckDB oracle still runs the literal
    * window formulation, so matching hashes prove the plan-only swap.
    */
   def equidepthHistogram(spark: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_totalprice"))
-    GlobalOrder.withRankAndPrefix(o, Seq(col("o_totalprice"), col("o_orderkey")))
+    GlobalOrder.groupedRankAndPrefix(o, keys = Nil,
+        order = Seq(col("o_totalprice"), col("o_orderkey")))
       .withColumn("bucket", GlobalOrder.ntileFromRank(
         col("g_rank"), col("g_total_rows"), HistBuckets))
       .groupBy(col("bucket"))

@@ -17,7 +17,8 @@ class GlobalOrderSpec extends SparkSpec {
 
   test("distributed global rank equals the single-partition window rank") {
     val order = Seq(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber"))
-    val got = GlobalOrder.withRankAndPrefix(li, order, Some(col("q")))
+    val got = GlobalOrder.groupedRankAndPrefix(li, keys = Nil, order,
+        values = Seq((col("q"), "g_prefix")))
       .select(col("l_orderkey"), col("l_linenumber"), col("g_rank"), col("g_prefix"))
       .orderBy(col("g_rank")).collect()
     val w = Window.orderBy(order: _*)
@@ -34,7 +35,7 @@ class GlobalOrderSpec extends SparkSpec {
   test("rank is invariant to input partitioning") {
     val order = Seq(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber"))
     def run(parts: Int) =
-      GlobalOrder.withRankAndPrefix(li.repartition(parts), order)
+      GlobalOrder.groupedRankAndPrefix(li.repartition(parts), keys = Nil, order)
         .select(col("l_orderkey"), col("l_linenumber"), col("g_rank"))
         .orderBy(col("g_rank")).collect()
     assert(run(1).sameElements(run(13)))
@@ -43,7 +44,7 @@ class GlobalOrderSpec extends SparkSpec {
   test("ntileFromRank reproduces ANSI ntile semantics for awkward N/k") {
     // 6000 rows / 7 buckets: 6000 = 7*857 + 1 → first bucket one larger
     val order = Seq(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber"))
-    val got = GlobalOrder.withRankAndPrefix(li, order)
+    val got = GlobalOrder.groupedRankAndPrefix(li, keys = Nil, order)
       .withColumn("b", GlobalOrder.ntileFromRank(col("g_rank"), col("g_total_rows"), 7))
       .groupBy("b").count().orderBy("b").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
@@ -160,19 +161,37 @@ class GlobalOrderSpec extends SparkSpec {
   }
 
   test("grouped plan: no window anywhere; offsets return as a LocalRelation broadcast") {
-    val df = GlobalOrder.groupedRankAndPrefix(liK,
-      Seq(col("l_returnflag")),
-      Seq(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber")),
-      values = Seq((col("q"), "pfx")))
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
-    assert(plan.contains("MapPartitions"), s"expected mapPartitions pass:\n$plan")
-    assert(!plan.contains("Window ["), s"grouped form must plan NO window:\n$plan")
-    assert(plan.contains("BroadcastExchange") || plan.contains("BroadcastHashJoin"),
-      s"offsets must come back as a broadcast:\n$plan")
-    // the offsets side is a LocalRelation — provably bounded, so the
-    // broadcast hint passes the forced-broadcast audit
-    assert(graft.plans.PlanChecks.forcedBroadcastViolations(df).isEmpty)
+    val order = Seq(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber"))
+    // AQE's rendering repeats nodes under "== Initial Plan ==" — audit
+    // the final plan section only
+    def finalPlan(df: org.apache.spark.sql.DataFrame): String = {
+      df.collect()
+      val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+      assert(!plan.contains("Window ["), s"grouped form must plan NO window:\n$plan")
+      assert(plan.contains("BroadcastExchange") || plan.contains("BroadcastHashJoin"),
+        s"offsets must come back as a broadcast:\n$plan")
+      // the offsets side is a LocalRelation — provably bounded, so the
+      // broadcast hint passes the forced-broadcast audit
+      assert(graft.plans.PlanChecks.forcedBroadcastViolations(df).isEmpty)
+      plan
+    }
+    // running sums keep the imperative per-partition pass (an
+    // exclusive scan has no codegen equivalent), keyed or global
+    val keyed = finalPlan(GlobalOrder.groupedRankAndPrefix(liK,
+      Seq(col("l_returnflag")), order, values = Seq((col("q"), "pfx"))))
+    assert(keyed.contains("MapPartitions"), s"expected mapPartitions pass:\n$keyed")
+    val globalSum = finalPlan(GlobalOrder.groupedRankAndPrefix(li, keys = Nil, order,
+      values = Seq((col("q"), "g_prefix"))))
+    assert(globalSum.contains("MapPartitions"),
+      s"prefix-sum phase 1 keeps the imperative pass:\n$globalSum")
+    // the RANK-ONLY global path stays inside whole-stage codegen: local
+    // rank and pid are bit-ops on monotonically_increasing_id over the
+    // pinned blocks — no Deserialize→MapPartitions→Serialize boundary
+    val globalRank = finalPlan(GlobalOrder.groupedRankAndPrefix(li, keys = Nil, order))
+    assert(!globalRank.contains("MapPartitions"),
+      s"rank-only phase 1 must not leave codegen:\n$globalRank")
+    assert(globalRank.contains("shiftrightunsigned"),
+      s"expected the mid-derived pid projection:\n$globalRank")
   }
 
   test("pin honors the reliable-checkpoint escape hatch") {
@@ -274,41 +293,6 @@ class GlobalOrderSpec extends SparkSpec {
     } finally {
       spark.conf.unset("graft.groupedOrder.maxTailContribs")
     }
-  }
-
-  test("no global window touches the big input; one tiny offset fold remains") {
-    val df = GlobalOrder.withRankAndPrefix(li,
-      Seq(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber")))
-    df.collect()
-    // AQE's rendering repeats nodes under "== Initial Plan ==" — audit
-    // the final plan section only
-    val full = df.queryExecution.executedPlan.toString
-    val plan = full.split("== Initial Plan ==").head
-    // phase 1 of the RANK-ONLY path stays inside whole-stage codegen
-    // (r17 optimization round): local rank and pid are bit-ops on
-    // monotonically_increasing_id over the pinned blocks — no
-    // Deserialize→MapPartitions→Serialize boundary, and no window
-    assert(!plan.contains("MapPartitions"),
-      s"rank-only phase 1 must not leave codegen:\n$plan")
-    assert(plan.contains("shiftrightunsigned"),
-      s"expected the mid-derived pid projection:\n$plan")
-    // the running-sum path keeps the imperative per-partition pass (an
-    // exclusive scan has no codegen equivalent) — pin that here too
-    val withVal = GlobalOrder.withRankAndPrefix(li,
-      Seq(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber")),
-      value = Some(col("q")))
-    withVal.collect()
-    val vPlan = withVal.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==").head
-    assert(vPlan.contains("MapPartitions"),
-      s"prefix-sum phase 1 keeps the imperative pass:\n$vPlan")
-    // exactly ONE window survives: the offset fold over the
-    // partitions-bound table (≤ shuffle.partitions rows) — its input is
-    // the per-partition aggregate, never the row data
-    val windows = "Window \\[".r.findAllMatchIn(plan).length
-    assert(windows == 1, s"expected exactly the tiny offset-fold window:\n$plan")
-    assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastExchange"),
-      s"offsets must come back as a broadcast:\n$plan")
   }
 
   test("pinnedSliver: loud failure past the bound, complete set within it") {

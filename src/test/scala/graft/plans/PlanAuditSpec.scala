@@ -371,11 +371,12 @@ class PlanAuditSpec extends SparkSpec {
       // q186: the boundary aggregate reuses the packing window's
       // (source, shard) partitioning — no third exchange
       "q186_pack_boundaries"    -> (2, 0, 0, 1),
-      // q188: two-phase GlobalOrder ranks — the one Window in the plan
-      // is the exclusive-offset fold over ≤ shuffle-partitions rows
-      // (bounded by construction, not by data), broadcast back; the
-      // corpus itself sees only the range partition and the output sort
-      "q188_curriculum"         -> (2, 1, 1, 1),
+      // q188: two-phase GlobalOrder ranks — the exclusive offsets fold
+      // on the driver over ≤ shuffle-partitions rows and come back as a
+      // broadcast LocalRelation, so the plan has no window and no
+      // offset-aggregate exchange; the only shuffle is the output sort
+      // (the range partition sits below the pin)
+      "q188_curriculum"         -> (1, 1, 1, 0),
       // q189: one per-doc window (corpus-cardinality key) + output sort
       "q189_chunk_pairs"        -> (2, 0, 0, 1),
       // q190: exactly q32's serve shape — the pair pipeline — with the
