@@ -160,38 +160,27 @@ class GlobalOrderSpec extends SparkSpec {
     }
   }
 
+  // AQE's rendering repeats nodes under "== Initial Plan ==" — audit the
+  // final plan section only. Every rank/prefix plan, keyed or global,
+  // carries no window and gets its offsets back as a broadcast
+  // LocalRelation — provably bounded, so the broadcast hint passes the
+  // forced-broadcast audit.
+  private def offsetBroadcastPlan(df: org.apache.spark.sql.DataFrame): String = {
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    assert(!plan.contains("Window ["), s"rank/prefix must plan NO window:\n$plan")
+    assert(plan.contains("BroadcastExchange") || plan.contains("BroadcastHashJoin"),
+      s"offsets must come back as a broadcast:\n$plan")
+    assert(graft.plans.PlanChecks.forcedBroadcastViolations(df).isEmpty)
+    plan
+  }
+
   test("grouped plan: no window anywhere; offsets return as a LocalRelation broadcast") {
-    val order = Seq(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber"))
-    // AQE's rendering repeats nodes under "== Initial Plan ==" — audit
-    // the final plan section only
-    def finalPlan(df: org.apache.spark.sql.DataFrame): String = {
-      df.collect()
-      val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
-      assert(!plan.contains("Window ["), s"grouped form must plan NO window:\n$plan")
-      assert(plan.contains("BroadcastExchange") || plan.contains("BroadcastHashJoin"),
-        s"offsets must come back as a broadcast:\n$plan")
-      // the offsets side is a LocalRelation — provably bounded, so the
-      // broadcast hint passes the forced-broadcast audit
-      assert(graft.plans.PlanChecks.forcedBroadcastViolations(df).isEmpty)
-      plan
-    }
-    // running sums keep the imperative per-partition pass (an
-    // exclusive scan has no codegen equivalent), keyed or global
-    val keyed = finalPlan(GlobalOrder.groupedRankAndPrefix(liK,
-      Seq(col("l_returnflag")), order, values = Seq((col("q"), "pfx"))))
-    assert(keyed.contains("MapPartitions"), s"expected mapPartitions pass:\n$keyed")
-    val globalSum = finalPlan(GlobalOrder.groupedRankAndPrefix(li, keys = Nil, order,
-      values = Seq((col("q"), "g_prefix"))))
-    assert(globalSum.contains("MapPartitions"),
-      s"prefix-sum phase 1 keeps the imperative pass:\n$globalSum")
-    // the RANK-ONLY global path stays inside whole-stage codegen: local
-    // rank and pid are bit-ops on monotonically_increasing_id over the
-    // pinned blocks — no Deserialize→MapPartitions→Serialize boundary
-    val globalRank = finalPlan(GlobalOrder.groupedRankAndPrefix(li, keys = Nil, order))
-    assert(!globalRank.contains("MapPartitions"),
-      s"rank-only phase 1 must not leave codegen:\n$globalRank")
-    assert(globalRank.contains("shiftrightunsigned"),
-      s"expected the mid-derived pid projection:\n$globalRank")
+    val plan = offsetBroadcastPlan(GlobalOrder.groupedRankAndPrefix(liK,
+      Seq(col("l_returnflag")),
+      Seq(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber")),
+      values = Seq((col("q"), "pfx"))))
+    assert(plan.contains("MapPartitions"), s"expected mapPartitions pass:\n$plan")
   }
 
   test("pin honors the reliable-checkpoint escape hatch") {
@@ -293,6 +282,27 @@ class GlobalOrderSpec extends SparkSpec {
     } finally {
       spark.conf.unset("graft.groupedOrder.maxTailContribs")
     }
+  }
+
+  test("no global window touches the big input; one tiny offset fold remains") {
+    // the global (keys = Nil) form: the one offset fold runs on the
+    // driver over the partitions-bound table (<= shuffle.partitions rows)
+    // and returns as a broadcast LocalRelation, so no window is planned
+    val order = Seq(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber"))
+    // phase 1 of the RANK-ONLY path stays inside whole-stage codegen:
+    // local rank and pid are bit-ops on monotonically_increasing_id over
+    // the pinned blocks — no Deserialize→MapPartitions→Serialize boundary
+    val plan = offsetBroadcastPlan(GlobalOrder.groupedRankAndPrefix(li, keys = Nil, order))
+    assert(!plan.contains("MapPartitions"),
+      s"rank-only phase 1 must not leave codegen:\n$plan")
+    assert(plan.contains("shiftrightunsigned"),
+      s"expected the mid-derived pid projection:\n$plan")
+    // the running-sum path keeps the imperative per-partition pass (an
+    // exclusive scan has no codegen equivalent) — pin that here too
+    val vPlan = offsetBroadcastPlan(GlobalOrder.groupedRankAndPrefix(li, keys = Nil, order,
+      values = Seq((col("q"), "g_prefix"))))
+    assert(vPlan.contains("MapPartitions"),
+      s"prefix-sum phase 1 keeps the imperative pass:\n$vPlan")
   }
 
   test("pinnedSliver: loud failure past the bound, complete set within it") {
