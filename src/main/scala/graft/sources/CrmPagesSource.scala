@@ -2,6 +2,7 @@ package graft.sources
 
 import java.util
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions
@@ -9,6 +10,8 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.aggregate
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -38,10 +41,15 @@ import org.apache.spark.unsafe.types.UTF8String
  *    fields are parsed out of the JSON;
  *  - S5 limit → `SupportsPushDownLimit`, readers stop after their share.
  *
- * Scale: one InputPartition per page ⇒ a 1000-executor cluster reads
- * 1000 pages concurrently; the cursor chain (`paging.next.after`) is
- * validated once at planning time from the page listing, not followed
- * serially.
+ * Scale: pages are packed into read tasks by Spark's own small-file
+ * rule ([[CrmPagesSource.packPages]]): contiguous runs in cursor order,
+ * each at most `FilePartition.maxSplitBytes` (driven by
+ * `spark.sql.files.maxPartitionBytes`, `openCostInBytes` and
+ * `minPartitionNum`, which defaults to the default parallelism). On 4
+ * cores 20 small pages are 4 tasks; on a 1000-executor cluster 1000
+ * pages are still read concurrently. The cursor chain
+ * (`paging.next.after`) is validated once at planning time from the
+ * page listing, not followed serially.
  *
  * Usage: `spark.read.format("graft.sources.CrmPagesSource").load(dir)`.
  */
@@ -152,9 +160,87 @@ object CrmPagesSource {
   @volatile private[sources] var pageTransport: (PageFetch, FetchPolicy) =
     (FilePageFetch, FetchPolicy())
 
+  /** One page's bytes through the transport. A [[RateLimited]] fetch
+    * retries the same page with bounded backoff (the reference's
+    * RATE_LIMIT semantics); any other fetch failure fails the task
+    * fast — retrying a 500 or an auth error re-sends a request the
+    * server already refused for a non-transient reason. */
+  private[sources] def fetchWithBackoff(
+      file: String, fetch: PageFetch, policy: FetchPolicy): Array[Byte] = {
+    var attempt = 0
+    var out: Array[Byte] = null
+    var fetched = false
+    while (!fetched) {
+      try {
+        out = fetch.fetch(file)
+        // A null return is a broken PageFetch, not a retryable state —
+        // looping on it would spin the task forever with no bound
+        // (only RateLimited counts attempts). Fail loud instead.
+        require(out != null, s"PageFetch returned null for $file — " +
+          "fetch must return bytes or throw")
+        fetched = true
+      } catch {
+        case e: RateLimited =>
+          attempt += 1
+          if (attempt > policy.maxRetries) throw e // bounded, loud
+          policy.sleep(policy.backoffMs)
+      }
+    }
+    out
+  }
+
+  /** The `results` array of one page, fetched with backoff. A page that
+    * does not parse as an envelope (truncated upload, mid-write read)
+    * reads as no records in a batch scan, as its header does at
+    * planning time. A stream (`strict`) fails instead, naming the page:
+    * its offset counts pages, so reading the page as empty would move
+    * the offset past its records and lose them. */
+  private[sources] def fetchResults(file: String, fetch: PageFetch,
+      policy: FetchPolicy, strict: Boolean): JsonNode = {
+    val node =
+      try mapper.readTree(fetchWithBackoff(file, fetch, policy))
+      catch {
+        case e: com.fasterxml.jackson.core.JacksonException =>
+          if (strict) throw new java.io.IOException(
+            s"CRM page $file does not parse: ${e.getOriginalMessage}", e)
+          null
+      }
+    if (node != null && node.path("results").isArray) node.get("results")
+    else if (strict) throw new java.io.IOException(
+      s"CRM page $file is not a search envelope (no results array)")
+    else mapper.createArrayNode()
+  }
+
+  /** Read tasks for pages in cursor order, by Spark's small-file rule:
+    * `FilePartition.maxSplitBytes` over the pages' bytes, each page
+    * costing its length plus `spark.sql.files.openCostInBytes`, packed
+    * next-fit with no size sort. Keeping cursor order means a reducer
+    * sees rows in the same order whatever the group count, so a replay
+    * planned on a different number of cores reproduces the sink's
+    * chunk signatures. */
+  private[sources] def packPages(pages: Seq[(String, Long)]): Array[InputPartition] = {
+    val openCost = SQLConf.get.filesOpenCostInBytes
+    val maxSplit = FilePartition.maxSplitBytes(
+      SparkSession.active, pages.iterator.map(_._2 + openCost).sum)
+    val groups = Array.newBuilder[InputPartition]
+    var group = Vector.empty[String]
+    var size = 0L
+    pages.foreach { case (file, bytes) =>
+      if (group.nonEmpty && size + bytes > maxSplit) {
+        groups += CrmPages(group)
+        group = Vector.empty
+        size = 0L
+      }
+      group :+= file
+      size += bytes + openCost
+    }
+    if (group.nonEmpty) groups += CrmPages(group)
+    groups.result()
+  }
+
   /** One envelope header per page, parsed once per scan at planning time.
     * An unparsable page keeps unbounded ts bounds (unprunable) and zero
-    * rows — the reader agrees. `nTsRows` counts rows with a non-null
+    * rows — the batch reader agrees ([[fetchResults]]). `nTsRows` counts rows with a non-null
     * `ts_ms` (what any ts-bounded aggregate can see); `pMin`/`pMax`
     * keep their sentinel values when the page carries no stats. */
   private[sources] case class PageEnvelope(
@@ -344,13 +430,14 @@ class CrmPagesScanBuilder(path: String)
    *  - **complete** pushdown (one task, one row, zero rows parsed) when the
    *    headers answer exactly: no pushed filters, or — COUNT(*) only — every
    *    page surviving min/max pruning lies fully inside the ts bounds;
-   *  - **partial** pushdown otherwise: each page emits one pre-aggregated
-   *    row (count/min/max of its passing records) and Spark folds the
-   *    page-partials, so a 100 TB count ships one row per page instead of
+   *  - **partial** pushdown otherwise: each page group (one read task,
+   *    [[CrmPagesSource.packPages]]) emits one pre-aggregated row
+   *    (count/min/max of its passing records) and Spark folds the
+   *    partials, so a 100 TB count ships one row per task instead of
    *    re-materializing every record through the scan.
    *
    * Spark only attempts this when every filter was pushed (residuals veto
-   * it), which is exactly the correctness condition for per-page partials.
+   * it), which is exactly the correctness condition for per-group partials.
    */
   override def supportCompletePushDown(aggregation: Aggregation): Boolean =
     translateAggs(aggregation).exists(headersAnswerExactly)
@@ -490,10 +577,10 @@ class CrmPagesScan(path: String, required: StructType,
 
   // page-level min/max pruning (the S2 pushdown, server-side style)
   override def planInputPartitions(): Array[InputPartition] =
-    prunedEnvelopes.map(e => CrmPage(e.file): InputPartition).toArray
+    CrmPagesSource.packPages(prunedEnvelopes.map(e => (e.file, e.bytes)))
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new CrmPageReaderFactory(required, filters ++ runtime, limit)
+    new CrmPagesReaderFactory(required, filters ++ runtime, limit, strict = false)
 
   /** Streaming mode: the reference's poll loop with durable offsets —
     * the offset IS the page cursor position (replacing the in-memory
@@ -520,73 +607,41 @@ class CrmPagesMicroBatchStream(path: String, required: StructType,
       start: streaming.Offset, end: streaming.Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[PageOffset].pages
     val e = end.asInstanceOf[PageOffset].pages
-    CrmPagesSource.pageChain(path).slice(s, e)
-      .map(p => CrmPage(s"$path/$p"): InputPartition).toArray
+    CrmPagesSource.packPages(CrmPagesSource.pageChain(path).slice(s, e).map { p =>
+      val file = s"$path/$p"
+      (file, new java.io.File(file).length())
+    })
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new CrmPageReaderFactory(required, filters, Int.MaxValue)
+    new CrmPagesReaderFactory(required, filters, Int.MaxValue, strict = true)
 }
 
-case class CrmPage(file: String) extends InputPartition
+/** A contiguous run of pages, in cursor order, read by one task. */
+case class CrmPages(files: Seq[String]) extends InputPartition
 
-class CrmPageReaderFactory(required: StructType, filters: Array[Filter],
-    limit: Int) extends PartitionReaderFactory {
+class CrmPagesReaderFactory(required: StructType, filters: Array[Filter],
+    limit: Int, strict: Boolean) extends PartitionReaderFactory {
   // captured at factory construction (driver, scan planning time) and
   // serialized to executors — cluster-correct injection, no global
   // state on the worker side
   private val (fetch, policy) = CrmPagesSource.pageTransport
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new CrmPageReader(partition.asInstanceOf[CrmPage].file, required,
-      filters, limit, fetch, policy)
+    new CrmPagesReader(partition.asInstanceOf[CrmPages].files, required,
+      filters, limit, fetch, policy, strict)
 }
 
-/** Reads one page envelope; applies residual row filters, projection and
-  * the (per-partition) limit while parsing. A malformed page (truncated
-  * upload, mid-write read) yields zero rows instead of failing the task
-  * — the streaming reader will see the corrected page as a new offset.
-  * A [[CrmPagesSource.RateLimited]] fetch retries the same page with
-  * bounded backoff (the reference's RATE_LIMIT semantics); any other
-  * fetch failure fails the task fast — retrying a 500 or an auth
-  * error re-sends a request the server already refused for a
-  * non-transient reason. */
-class CrmPageReader(file: String, required: StructType,
+/** Streams through a group of page envelopes, fetching each page only
+  * when the previous one is exhausted; applies residual row filters,
+  * projection and the limit across the whole group while parsing.
+  * Fetch and parse failures follow [[CrmPagesSource.fetchResults]]. */
+class CrmPagesReader(files: Seq[String], required: StructType,
     filters: Array[Filter], limit: Int,
-    fetch: CrmPagesSource.PageFetch = CrmPagesSource.FilePageFetch,
-    policy: CrmPagesSource.FetchPolicy = CrmPagesSource.FetchPolicy())
+    fetch: CrmPagesSource.PageFetch, policy: CrmPagesSource.FetchPolicy,
+    strict: Boolean)
     extends PartitionReader[InternalRow] {
 
-  private def fetchWithBackoff(): Array[Byte] = {
-    var attempt = 0
-    var out: Array[Byte] = null
-    var fetched = false
-    while (!fetched) {
-      try {
-        out = fetch.fetch(file)
-        // A null return is a broken PageFetch, not a retryable state —
-        // looping on it would spin the task forever with no bound
-        // (only RateLimited counts attempts). Fail loud instead.
-        require(out != null, s"PageFetch returned null for $file — " +
-          "fetch must return bytes or throw")
-        fetched = true
-      } catch {
-        case e: CrmPagesSource.RateLimited =>
-          attempt += 1
-          if (attempt > policy.maxRetries) throw e // bounded, loud
-          policy.sleep(policy.backoffMs)
-      }
-    }
-    out
-  }
-
-  private val results: JsonNode =
-    try {
-      val node = CrmPagesSource.mapper.readTree(fetchWithBackoff())
-      if (node == null || !node.has("results")) CrmPagesSource.mapper.createArrayNode()
-      else node.get("results")
-    } catch {
-      case _: com.fasterxml.jackson.core.JacksonException =>
-        CrmPagesSource.mapper.createArrayNode()
-    }
+  private val pages = files.iterator
+  private var results: JsonNode = CrmPagesSource.mapper.createArrayNode()
   private var i = 0
   private var emitted = 0
   private var current: InternalRow = _
@@ -608,14 +663,19 @@ class CrmPageReader(file: String, required: StructType,
   }
 
   override def next(): Boolean = {
-    while (i < results.size() && emitted < limit) {
-      val rec = results.get(i)
-      i += 1
-      if (passes(rec)) {
-        current = toRow(rec)
-        emitted += 1
-        return true
-      }
+    while (emitted < limit) {
+      if (i < results.size()) {
+        val rec = results.get(i)
+        i += 1
+        if (passes(rec)) {
+          current = toRow(rec)
+          emitted += 1
+          return true
+        }
+      } else if (pages.hasNext) {
+        results = CrmPagesSource.fetchResults(pages.next(), fetch, policy, strict)
+        i = 0
+      } else return false
     }
     false
   }
@@ -674,24 +734,24 @@ class CrmPagesAggScan(path: String, filters: Array[Filter],
         case CrmAgg.CountStar => java.lang.Long.valueOf(0L)
         case _                => null
       }.toArray))
-    } else kept.map(e => CrmAggPage(e.file): InputPartition).toArray
+    } else CrmPagesSource.packPages(kept.map(e => (e.file, e.bytes)))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new CrmAggReaderFactory(aggs, filters)
 }
 
-/** A page whose partial aggregate the reader computes executor-side. */
-case class CrmAggPage(file: String) extends InputPartition
 /** An aggregate row fully computed at planning time from page headers. */
 case class CrmAggRow(values: Array[Any]) extends InputPartition
 
 class CrmAggReaderFactory(aggs: Seq[CrmAgg], filters: Array[Filter])
     extends PartitionReaderFactory {
+  // the row reader's transport, captured the same way
+  private val (fetch, policy) = CrmPagesSource.pageTransport
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
       case CrmAggRow(values) => new SingleRowReader(InternalRow.fromSeq(values.toIndexedSeq))
-      case CrmAggPage(file)  => new CrmPageAggReader(file, aggs, filters)
+      case CrmPages(files)   => new CrmPagesAggReader(files, aggs, filters, fetch, policy)
     }
 }
 
@@ -703,39 +763,35 @@ private[sources] class SingleRowReader(row: InternalRow)
   override def close(): Unit = ()
 }
 
-/** Folds one page's passing records into a single partial-aggregate row
-  * (exact row-level filter evaluation, same as the row reader). */
-class CrmPageAggReader(file: String, aggs: Seq[CrmAgg],
-    filters: Array[Filter]) extends PartitionReader[InternalRow] {
+/** Folds a page group's passing records into a single partial-aggregate
+  * row (exact row-level filter evaluation, pages fetched through the
+  * same transport and backoff as the row reader). */
+class CrmPagesAggReader(files: Seq[String], aggs: Seq[CrmAgg],
+    filters: Array[Filter], fetch: CrmPagesSource.PageFetch,
+    policy: CrmPagesSource.FetchPolicy) extends PartitionReader[InternalRow] {
 
   private var done = false
   private lazy val row: InternalRow = {
-    val results: JsonNode =
-      try {
-        val node = CrmPagesSource.mapper.readTree(new java.io.File(file))
-        if (node == null || !node.has("results")) CrmPagesSource.mapper.createArrayNode()
-        else node.get("results")
-      } catch {
-        case _: com.fasterxml.jackson.core.JacksonException =>
-          CrmPagesSource.mapper.createArrayNode()
-      }
     var count = 0L
     var tsSeen = 0L
     var minTs = Long.MaxValue
     var maxTs = Long.MinValue
-    var i = 0
-    while (i < results.size()) {
-      val rec = results.get(i)
-      if (CrmPagesSource.passes(filters, rec)) {
-        count += 1
-        if (rec.hasNonNull("ts_ms")) {
-          tsSeen += 1
-          val ts = rec.get("ts_ms").asLong
-          if (ts < minTs) minTs = ts
-          if (ts > maxTs) maxTs = ts
+    files.foreach { file =>
+      val results = CrmPagesSource.fetchResults(file, fetch, policy, strict = false)
+      var i = 0
+      while (i < results.size()) {
+        val rec = results.get(i)
+        if (CrmPagesSource.passes(filters, rec)) {
+          count += 1
+          if (rec.hasNonNull("ts_ms")) {
+            tsSeen += 1
+            val ts = rec.get("ts_ms").asLong
+            if (ts < minTs) minTs = ts
+            if (ts > maxTs) maxTs = ts
+          }
         }
+        i += 1
       }
-      i += 1
     }
     val values: Array[Any] = aggs.map {
       case CrmAgg.CountStar => java.lang.Long.valueOf(count)

@@ -7,18 +7,24 @@ import org.apache.spark.sql.functions._
 
 class CrmPagesSourceSpec extends SparkSpec {
 
+  private lazy val fixtureRows = Tables.events(spark, sf)
+    .select(col("event_id"), Tables.epochMs(col("ts")).as("ts_ms"),
+      col("event_type"), col("value"), col("props"))
+    .orderBy("event_id")
+    .collect()
+
   /** Fabricate a page directory from the events fixture: 100 records per
     * page, envelope with cursor chain + page min/max stats (the shape of
     * the reference's search-API responses). */
-  private lazy val pageDir: Path = {
-    val dir = Files.createTempDirectory("crmpages")
-    val rows = Tables.events(spark, sf)
-      .select(col("event_id"), Tables.epochMs(col("ts")).as("ts_ms"),
-        col("event_type"), col("value"), col("props"))
-      .orderBy("event_id")
-      .collect()
+  private lazy val pageDir: Path = writePages("crmpages", 100)
+  /** The same records as 20 pages of 50. */
+  private lazy val twentyPageDir: Path = writePages("crmpages20", 50)
+
+  private def writePages(prefix: String, perPage: Int): Path = {
+    val dir = Files.createTempDirectory(prefix)
+    val rows = fixtureRows
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val pages = rows.grouped(100).toSeq
+    val pages = rows.grouped(perPage).toSeq
     pages.zipWithIndex.foreach { case (page, idx) =>
       val root = mapper.createObjectNode()
       root.put("total", rows.length)
@@ -64,11 +70,12 @@ class CrmPagesSourceSpec extends SparkSpec {
     val plan = filtered.queryExecution.executedPlan.toString
     assert(plan.contains("CrmPagesScan") && plan.contains("GreaterThanOrEqual(ts_ms"),
       s"ts filter not pushed:\n$plan")
-    // page pruning: partitions planned < total pages
+    // page pruning: pages inside the planned partitions < total pages
+    // (partitions pack several pages, so counting them would prove nothing)
     val scan = new CrmPagesScan(pageDir.toString, CrmPagesSource.Schema,
       Array(org.apache.spark.sql.sources.GreaterThanOrEqual("ts_ms", lo)), Int.MaxValue)
     val all = CrmPagesSource.pageChain(pageDir.toString).size
-    assert(scan.planInputPartitions().length < all,
+    assert(plannedPages(scan.planInputPartitions()).size < all,
       s"no page pruned (of $all)")
     // and results match the equivalent parquet-side query
     val expected = Tables.events(spark, sf)
@@ -182,9 +189,11 @@ class CrmPagesSourceSpec extends SparkSpec {
     val plan = agged.queryExecution.executedPlan.toString
     assert(plan.contains("CrmPagesAggScan") && plan.contains("mode=partial"),
       s"aggregate not partially pushed:\n$plan")
-    // one partial row per surviving page, not one row per record
-    val parts = batchScan(agged).inputPartitions.length
-    assert(parts > 1 && parts < CrmPagesSource.pageChain(pageDir.toString).size)
+    // one partial row per group of surviving pages, not one row per
+    // record; the groups hold only the pages that survive pruning
+    val parts = batchScan(agged).inputPartitions
+    assert(parts.length > 1 &&
+      plannedPages(parts.toArray).size < CrmPagesSource.pageChain(pageDir.toString).size)
     val got = agged.collect()(0)
     val twin = Tables.events(spark, sf)
       .select(Tables.epochMs(col("ts")).as("ts_ms")).filter(col("ts_ms") >= lo)
@@ -369,6 +378,115 @@ class CrmPagesSourceSpec extends SparkSpec {
     Files.writeString(dir.resolve("page-00001.json"), "{\"results\": [{trunca")
     val df = spark.read.format("graft.sources.CrmPagesSource").load(dir.toString)
     assert(df.count() == 100) // the good page only; no task failure
+  }
+
+  test("filtered aggregate fetches through the transport: rate limits retry, stays exact") {
+    val lo = 1704671999000L // partial pushdown: the readers fold rows
+    def agged = read.filter(col("ts_ms") >= lo)
+      .agg(count(lit(1)).as("n"), min("ts_ms").as("mn"), max("ts_ms").as("mx"))
+    val want = agged.collect()(0)
+    FlakyFetch.reset(failTimes = 2)
+    val saved = CrmPagesSource.pageTransport
+    try {
+      CrmPagesSource.pageTransport = (FlakyFetch.RateLimitedThenClean,
+        CrmPagesSource.FetchPolicy(maxRetries = 3, backoffMs = 7L,
+          sleep = FlakyFetch.recordSleep))
+      val df = agged
+      assert(df.queryExecution.executedPlan.toString.contains("mode=partial"))
+      val got = df.collect()(0)
+      assert(got == want, s"got $got, want $want")
+      import scala.jdk.CollectionConverters._
+      val planned = plannedPages(batchScan(df).inputPartitions.toArray)
+      assert(FlakyFetch.attempts.keySet.asScala == planned.toSet,
+        "every surviving page must be fetched through the transport")
+      assert(FlakyFetch.attempts.values.asScala.forall(_ == 3),
+        "each page must be fetched exactly 3 times (2 rate-limits + 1 ok)")
+      assert(FlakyFetch.sleeps.size == 2 * planned.size)
+    } finally CrmPagesSource.pageTransport = saved
+  }
+
+  /** The pages inside planned partitions, in plan order. */
+  private def plannedPages(parts: Array[org.apache.spark.sql.connector.read.InputPartition]) =
+    parts.toSeq.flatMap { case CrmPages(files) => files }
+
+  /** Run `body` with the session's `spark.sql.files.minPartitionNum`
+    * set (None: Spark's default, the default parallelism). */
+  private def withMinPartitionNum[T](n: Option[Int])(body: => T): T = {
+    val key = "spark.sql.files.minPartitionNum"
+    val saved = spark.conf.getOption(key)
+    n match {
+      case Some(v) => spark.conf.set(key, v.toLong)
+      case None    => spark.conf.unset(key)
+    }
+    try body
+    finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
+  private def fullScan(dir: Path, limit: Int = Int.MaxValue) =
+    new CrmPagesScan(dir.toString, CrmPagesSource.Schema, Array.empty, limit)
+
+  test("page packing: every page planned once, in contiguous cursor-ordered groups") {
+    val chain = CrmPagesSource.pageChain(twentyPageDir.toString)
+      .map(p => twentyPageDir.resolve(p).toString)
+    assert(chain.size == 20)
+    Seq(Some(1), Some(2), Some(3), Some(7), Some(20), Some(64), None).foreach { n =>
+      val groups = withMinPartitionNum(n)(fullScan(twentyPageDir).planInputPartitions())
+        .toSeq.map { case CrmPages(files) => files }
+      assert(groups.forall(_.nonEmpty), s"minPartitionNum=$n: empty group")
+      // concatenating the groups gives the cursor order back: each page
+      // once, no page moved out of its run
+      assert(groups.flatten == chain, s"minPartitionNum=$n: $groups")
+      n.foreach(k => assert(groups.size <= math.min(k + 1, chain.size),
+        s"minPartitionNum=$k: ${groups.size} groups"))
+    }
+    // a stream plans its offset range by the same rule
+    val stream = new CrmPagesMicroBatchStream(twentyPageDir.toString,
+      CrmPagesSource.Schema, Array.empty)
+    val streamed = withMinPartitionNum(Some(3))(
+      stream.planInputPartitions(PageOffset(4), PageOffset(16)))
+    assert(plannedPages(streamed) == chain.slice(4, 16))
+    assert(streamed.length == 3)
+  }
+
+  test("20 pages on local[4] plan 4 partitions; 20 cores would keep 20") {
+    assert(spark.sparkContext.defaultParallelism == 4)
+    val four = withMinPartitionNum(None)(fullScan(twentyPageDir).planInputPartitions())
+    assert(four.length == 4, plannedPages(four))
+    assert(four.forall { case CrmPages(files) => files.size == 5 })
+    val twenty = withMinPartitionNum(Some(20))(fullScan(twentyPageDir).planInputPartitions())
+    assert(twenty.length == 20)
+    // and the packed scan still reads every record exactly once
+    val ids = spark.read.format("graft.sources.CrmPagesSource")
+      .load(twentyPageDir.toString).select("event_id").collect().map(_.getLong(0))
+    assert(ids.length == fixtureRows.length && ids.distinct.length == ids.length)
+  }
+
+  test("limit holds across a page group, and later pages are never fetched") {
+    // one group of all 20 pages (50 records each); a limit of 70 ends
+    // inside the second page
+    val parts = withMinPartitionNum(Some(1))(fullScan(twentyPageDir, limit = 70)
+      .planInputPartitions())
+    assert(parts.length == 1)
+    FlakyFetch.reset(failTimes = 0)
+    val saved = CrmPagesSource.pageTransport
+    try {
+      CrmPagesSource.pageTransport = (FlakyFetch.RateLimitedThenClean,
+        CrmPagesSource.FetchPolicy(sleep = FlakyFetch.recordSleep))
+      val reader = fullScan(twentyPageDir, limit = 70).createReaderFactory()
+        .createReader(parts(0))
+      var n = 0
+      while (reader.next()) n += 1
+      reader.close()
+      assert(n == 70)
+      assert(FlakyFetch.attempts.size == 2, s"fetched ${FlakyFetch.attempts}")
+    } finally CrmPagesSource.pageTransport = saved
+    val limited = withMinPartitionNum(Some(1))(
+      spark.read.format("graft.sources.CrmPagesSource")
+        .load(twentyPageDir.toString).limit(70).collect())
+    assert(limited.length == 70)
   }
 
   test("micro-batch stream: page cursor is the offset; new pages arrive incrementally") {
