@@ -240,9 +240,10 @@ object CrmPagesSource {
 
   /** One envelope header per page, parsed once per scan at planning time.
     * An unparsable page keeps unbounded ts bounds (unprunable) and zero
-    * rows — the batch reader agrees ([[fetchResults]]). `nTsRows` counts rows with a non-null
-    * `ts_ms` (what any ts-bounded aggregate can see); `pMin`/`pMax`
-    * keep their sentinel values when the page carries no stats. */
+    * rows — the batch reader agrees ([[fetchResults]]). `nTsRows`
+    * counts rows with a non-null `ts_ms` (what any ts-bounded aggregate
+    * can see); `pMin`/`pMax` keep their sentinel values when the page
+    * carries no stats. */
   private[sources] case class PageEnvelope(
       file: String, pMin: Long, pMax: Long, nRows: Long, nTsRows: Long,
       bytes: Long) {

@@ -489,6 +489,18 @@ class CrmPagesSourceSpec extends SparkSpec {
     assert(limited.length == 70)
   }
 
+  test("a malformed page inside a batch page group reads as empty; its neighbours still read") {
+    val dir = Files.createTempDirectory("crmbadgroup")
+    val good = CrmPagesSource.pageChain(pageDir.toString).take(2)
+    Files.copy(pageDir.resolve(good(0)), dir.resolve("page-00000.json"))
+    Files.writeString(dir.resolve("page-00001.json"), "{\"results\": [{trunca")
+    Files.copy(pageDir.resolve(good(1)), dir.resolve("page-00002.json"))
+    val rows = withMinPartitionNum(Some(1))(
+      spark.read.format("graft.sources.CrmPagesSource").load(dir.toString)
+        .select("event_id").collect())
+    assert(rows.length == 200)
+  }
+
   test("micro-batch stream: page cursor is the offset; new pages arrive incrementally") {
     // dedicated directory: seed with the first 2 pages, then append one
     val streamDir = Files.createTempDirectory("crmstream")
