@@ -94,9 +94,10 @@ class CrmPagesIngestSpec extends SparkSpec {
     }
     val crashes = new java.util.concurrent.atomic.AtomicInteger()
     try {
-      // the regrouping is real: one read task first, four on replay
+      // the regrouping is real: four read tasks on replay, one first
       assert(planned(4).size == 4)
       assert(planned(1).size == 1)
+      spark.conf.set(key, 1L)
       // every sink partition dies after its second chunk is acked and
       // marked, so the replay must match both markers of every partition
       ExactlyOnceSink.crashPoint = l =>
