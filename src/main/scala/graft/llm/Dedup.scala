@@ -1,7 +1,7 @@
 package graft.llm
 
 import graft.model.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -345,8 +345,9 @@ object Dedup {
     * the lineage so every later stage ships a KiB-sized plan. */
   private[llm] def bandTable(docs: DataFrame): DataFrame =
     // memoized per corpus (ModelCache): the band table IS the stored
-    // dedup index — q32/q69/q72/q101/q133 all serve from one signing
-    // pass, as a deployed dedup store would
+    // signature index — q101's incremental dedup joins against it, and
+    // the `lsh-pairs` build reads it once; the pair consumers (q32, q69,
+    // q72, q133, ...) serve from the pinned pair set, not from here
     ModelCache.memoIndex(docs, "lsh-bands") {
       // band i = salts (2i, 2i+1); posexplode keeps one narrow band table
       val bandCols = (0 until NumBands).map(b =>
@@ -357,13 +358,16 @@ object Dedup {
     }
 
   /** [[minhashLsh]] over an arbitrary documents frame (spec entry point
-    * for degenerate-corpus behavior). Memoized per corpus: the
-    * verified pair set is consumed by q32 itself, the cluster builders
-    * (q69/q72), and the contamination matrix (q133) — one bucket-join
-    * + verify serves all of them (checkpointed intermediates make
-    * re-actions sliver-cost). */
+    * for degenerate-corpus behavior). Memoized per corpus as a PINNED
+    * artifact: the verified pair set is consumed by q32 itself, the
+    * cluster builders (q69/q72/q257), and the contamination matrix
+    * (q133) — one bucket-join + verify + output sort, forced by
+    * `memoIndex`'s count, and every hit serves the pinned rows (a plan
+    * of `LogicalRDD` leaves) instead of re-running the candidate ⋈
+    * shingle ⋈ shingle verify. The pin keeps the sort's row order. */
   private[llm] def minhashLshFrom(docs: DataFrame): DataFrame =
-    ModelCache.memoIndex(docs, "lsh-pairs")(minhashLshImpl(docs))
+    ModelCache.memoIndex(docs, "lsh-pairs")(
+      graft.ops.GlobalOrder.pin(minhashLshImpl(docs)))
 
   private def minhashLshImpl(docs: DataFrame): DataFrame = {
     // the shingle table is ~two orders of magnitude wider than the
@@ -935,22 +939,26 @@ object Dedup {
    *  - SMALL-STAR: for every u with smaller neighbors N(u), emit
    *    (w, min(N(u))) for w ∈ N(u) ∪ {u} minus the minimum itself —
    *    u and its smaller neighbors all re-attach to the smallest.
-   * Each is one groupBy(min) + one equi-join back — edge-list-sized
-   * shuffles (the `lsh-pairs` artifact sliver, never the corpus), and
-   * `distinct` collapses the multigraph between rounds.
+   * Each is one windowed `min` over the same rows (partitioned by the
+   * star center: `src` for LARGE-STAR, `big` for SMALL-STAR) — one
+   * edge-list-sized exchange each, the `lsh-pairs` artifact sliver,
+   * never the corpus; the per-key skew is that of the equi-join back
+   * it replaces. `distinct` collapses the multigraph between rounds.
    *
    * Convergence via the endpoint-sum invariant (the q72 discipline,
    * lifted from labels to edges): both ops replace an edge's partner
    * with a value ≤ it and dedup only removes rows, so the sum of all
    * canonical endpoints (DECIMAL — Long endpoint sums overflow at
-   * 100 TB edge counts) strictly decreases on ANY change; an unchanged
-   * sum IS the fixpoint — one scalar aggregate per round, no
-   * next-vs-previous diff join. `localCheckpoint` truncates lineage at
-   * each round boundary exactly like [[graft.llm.Pipeline.nearDupClusters]].
+   * 100 TB edge counts; 0 for no edges) strictly decreases on ANY
+   * change; an unchanged sum IS the fixpoint — no next-vs-previous diff
+   * join, and no job of its own: the sum is an unnamed `Observation`
+   * collected by the round's checkpoint job. `localCheckpoint`
+   * truncates lineage at each round boundary exactly like
+   * [[graft.llm.Pipeline.nearDupClusters]]. The pair set is already a
+   * pinned artifact ([[minhashLshFrom]]), so it is read as is.
    */
   def ccStarClusters(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = minhashLsh(spark, dir)
-      .select(col("id_a"), col("id_b")).localCheckpoint()
+    val pairs = minhashLsh(spark, dir).select(col("id_a"), col("id_b"))
     val sym = pairs
       .union(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
       .toDF("src", "dst")
@@ -980,24 +988,25 @@ object Dedup {
       // LARGE-STAR over the symmetric view: m(u) = min(Γ(u) ∪ {u})
       val symE = edges.select(col("big").as("src"), col("small").as("dst"))
         .union(edges.select(col("small").as("src"), col("big").as("dst")))
-      val mins = symE.groupBy(col("src"))
-        .agg(min(col("dst")).as("mn"))
-        .select(col("src").as("u"), least(col("src"), col("mn")).as("m"))
-      val large = symE.filter(col("dst") > col("src"))
-        .join(mins, col("src") === col("u"))
+      val large = symE
+        .withColumn("m", least(col("src"),
+          min(col("dst")).over(Window.partitionBy(col("src")))))
+        .filter(col("dst") > col("src"))
         .select(col("dst").as("big"), col("m").as("small"))
         .filter(col("big") > col("small")).distinct().localCheckpoint()
       // SMALL-STAR over the canonical view: m(u) = min of smaller nbrs
-      val smins = large.groupBy(col("big").as("u"))
-        .agg(min(col("small")).as("m"))
-      val joined = large.join(smins, col("big") === col("u"))
+      val joined = large
+        .withColumn("m", min(col("small")).over(Window.partitionBy(col("big"))))
+      val sumObs = Observation()
       val next = joined
         .filter(col("small") > col("m"))
         .select(col("small").as("big"), col("m").as("small"))
         .union(joined.select(col("big"), col("m").as("small")))
-        .distinct().localCheckpoint()
-      val s = next.agg(sum(col("big").cast("decimal(38,0)") +
-          col("small").cast("decimal(38,0)"))).first().getDecimal(0)
+        .distinct()
+        .observe(sumObs, coalesce(sum(col("big").cast("decimal(38,0)") +
+          col("small").cast("decimal(38,0)")), lit(0).cast("decimal(38,0)")).as("s"))
+        .localCheckpoint()
+      val s = sumObs.get("s").asInstanceOf[java.math.BigDecimal]
       edges = next
       converged = prevSum.exists(p => p.compareTo(s) == 0)
       prevSum = Some(s)

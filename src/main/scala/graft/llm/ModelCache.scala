@@ -22,8 +22,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
  *
  * Key discipline: models are cached ONLY for file-backed corpora —
  * every leaf of the analyzed plan must be a file relation — keyed by
- * (hyperparameters, the relations' root paths, the canonicalized
- * plan). Plans over in-memory test relations train fresh:
+ * (hyperparameters, the relations' root paths and leaf-file versions,
+ * the canonicalized plan). Plans over in-memory test relations train fresh:
  * `LocalRelation`'s canonical form does not include its data, so two
  * different planted fixtures with one schema would collide.
  *
@@ -229,7 +229,11 @@ object ModelCache {
     }
 
   /** Cache key for a file-backed corpus plan; None (do not cache) if
-    * any leaf is not a file relation. */
+    * any leaf is not a file relation. The key carries every leaf file's
+    * (path, length, mtime), taken from the relation's file index — the
+    * listing the read already made, so keying costs no I/O and no job.
+    * An in-place append (a new part file) or overwrite (new length or
+    * mtime) is a different key, i.e. a rebuild, never a stale hit. */
   private def corpusKey(corpus: DataFrame, tag: String): Option[String] = {
     val plan = corpus.queryExecution.analyzed
     val leaves = plan.collectLeaves()
@@ -241,7 +245,11 @@ object ModelCache {
     else {
       val paths = plan.collect {
         case lr: LogicalRelation => lr.relation match {
-          case h: HadoopFsRelation => h.location.rootPaths.mkString(",")
+          case h: HadoopFsRelation =>
+            val files = h.location.listFiles(Nil, Nil).flatMap(_.files)
+              .map(f => s"${f.getPath}@${f.getLen}@${f.getModificationTime}")
+              .sorted
+            h.location.rootPaths.mkString(",") + files.mkString("[", ",", "]")
           case other => other.toString
         }
       }.mkString(";")

@@ -1,21 +1,40 @@
 package graft.model
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /**
  * Loaders for the driver-generated fixture tables (FIXTURES.md).
  *
- * Design note (scale): every loader is a plain `spark.read.parquet` so
- * Catalyst sees a vanilla `FileSourceScanExec` — predicate pushdown,
- * column pruning and row-group min/max pruning all apply. At 100 TB the
- * same loaders work unchanged over a partitioned directory tree; nothing
- * here assumes single-file inputs.
+ * Design note (scale): every loader is a plain parquet read so Catalyst
+ * sees a vanilla `FileSourceScanExec` — predicate pushdown, column
+ * pruning and row-group min/max pruning all apply. At 100 TB the same
+ * loaders work unchanged over a partitioned directory tree; nothing here
+ * assumes single-file inputs.
+ *
+ * Schema: each read declares the schema it would have inferred, built
+ * from ONE driver-side footer read ([[footerSchema]]: Spark's own
+ * footer-to-schema conversion under the session's SQLConf). Inference
+ * through `spark.read.parquet` launches a Spark job per table read —
+ * per query, per rep — for the same footer; the declared form launches
+ * none. There is no hand-written schema table to keep in sync: the
+ * files are the contract, read fresh on every call (a fixture
+ * regeneration that flips an encoding is seen at once).
  */
 object Tables {
 
-  private def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private def read(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(footerSchema(spark, path)).parquet(path)
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame   = read(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame   = read(spark, dir, "nation")
@@ -80,17 +99,45 @@ object Tables {
    */
   def parquetRowCount(spark: SparkSession, path: String): Long = {
     val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
+    parquetFiles(conf, path).map(f =>
+      footer(conf, f).getBlocks.asScala.map(_.getRowCount).sum).sum
+  }
+
+  /**
+   * The Spark schema of a parquet table from ONE driver-side footer read
+   * — what `spark.read.parquet(path).schema` infers (without
+   * `mergeSchema`, Spark too converts a single footer), minus the
+   * inference job. The conversion is Spark's own (`readSchemaFromFooter`:
+   * a Spark-written file's stored row schema, else the parquet schema
+   * converted under the session's SQLConf — so `nanosAsLong` and the
+   * NTZ inference setting apply exactly as they would to inference).
+   */
+  private[graft] def footerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val first = parquetFiles(conf, path).headOption.getOrElse(
+      throw new IllegalArgumentException(s"no parquet data file under $path"))
+    ParquetFileFormat.readSchemaFromFooter(
+      new Footer(first.getPath, footer(conf, first)),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
+  /** The parquet data files of a table path: the file itself, or the
+    * `.parquet` files directly under the directory, by name. */
+  private def parquetFiles(conf: org.apache.hadoop.conf.Configuration,
+      path: String): Array[FileStatus] = {
+    val p = new Path(path)
     val fs = p.getFileSystem(conf)
-    val files =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      else Array(fs.getFileStatus(p))
-    files.map { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try reader.getRecordCount finally reader.close()
-    }.sum
+    val st = fs.getFileStatus(p)
+    if (st.isDirectory)
+      fs.listStatus(p).filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+        .sortBy(_.getPath.getName)
+    else Array(st)
+  }
+
+  private def footer(conf: org.apache.hadoop.conf.Configuration,
+      f: FileStatus): ParquetMetadata = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+    try reader.getFooter finally reader.close()
   }
 
   /** Epoch milliseconds of a µs timestamp column (floor). Used for

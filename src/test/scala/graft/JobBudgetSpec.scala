@@ -1,0 +1,122 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import graft.model.Tables
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+
+/**
+ * Job budgets: Spark jobs counted with a `SparkListener` over a drained
+ * listener bus, so every count here is exact and host-independent (wall
+ * time is not). The scheduling layer dominates at fixture scale, so a
+ * change that adds jobs to a serve path fails here, not as bench noise.
+ */
+class JobBudgetSpec extends SparkSpec {
+
+  /** `body`'s value and the number of Spark jobs it launched. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val n = new AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(l)
+    try {
+      val v = body
+      ListenerBusDrain(sc)
+      (v, n.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  private def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  private val loaders = Seq[(String, (org.apache.spark.sql.SparkSession, String) => DataFrame)](
+    "region" -> Tables.region, "nation" -> Tables.nation,
+    "customer" -> Tables.customer, "supplier" -> Tables.supplier,
+    "part" -> Tables.part, "orders" -> Tables.orders,
+    "lineitem" -> Tables.lineitem, "documents" -> Tables.documents,
+    "embeddings" -> Tables.embeddings, "events" -> Tables.events)
+
+  test("every Tables loader launches 0 jobs") {
+    loaders.foreach { case (name, load) =>
+      val (df, jobs) = jobsOf { val df = load(spark, sf); df.schema; df }
+      assert(jobs == 0, s"Tables.$name launched $jobs jobs to build its frame")
+      assert(df.columns.nonEmpty)
+    }
+  }
+
+  test("footer schema equals the inferred schema for every fixture table") {
+    // Tables.events reads under nanosAsLong; compare under the same conf
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    loaders.map(_._1).foreach { name =>
+      val p = s"$sf/$name.parquet"
+      assert(Tables.footerSchema(spark, p) == spark.read.parquet(p).schema,
+        s"$name: footer schema drifted from inference")
+    }
+  }
+
+  test("footer schema equals the inferred schema for both events ts encodings") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // written by parquet-hadoop, not Spark: no stored Spark row schema,
+    // so the footer's parquet types are converted exactly as inference
+    // converts them (NANOS → Long under nanosAsLong, MICROS non-UTC → NTZ)
+    Seq("NANOS" -> 1000L, "MICROS" -> 1L).foreach { case (unit, scale) =>
+      val path = java.nio.file.Files.createTempDirectory(s"events-$unit")
+        .resolve("events.parquet").toString
+      val schema = MessageTypeParser.parseMessageType(
+        s"""message events { optional int64 event_id;
+           |  optional int64 ts (TIMESTAMP($unit,false));
+           |  optional binary event_type (STRING); }""".stripMargin)
+      val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(path))
+        .withType(schema).build()
+      val g = new SimpleGroupFactory(schema)
+      try (0 until 3).foreach { i =>
+        w.write(g.newGroup().append("event_id", i.toLong)
+          .append("ts", (1704067200000000L + i) * scale).append("event_type", s"e$i"))
+      } finally w.close()
+      val inferred = spark.read.parquet(path).schema
+      assert(Tables.footerSchema(spark, path) == inferred, s"$unit: $inferred")
+      val (ev, jobs) = jobsOf(Tables.events(spark, path.stripSuffix("/events.parquet")))
+      assert(jobs == 0, s"$unit: Tables.events launched $jobs jobs")
+      assert(ev.select("ts_ns").collect().map(_.getLong(0)).toSeq ==
+        (0 until 3).map(i => (1704067200000000L + i) * 1000L))
+    }
+  }
+
+  test("an lsh-pairs memo hit serves the pinned pair set: only LogicalRDD leaves") {
+    graft.llm.ModelCache.invalidate()
+    val built = graft.llm.Dedup.minhashLsh(spark, sf)
+    val (hit, jobs) = jobsOf(graft.llm.Dedup.minhashLsh(spark, sf))
+    assert(hit eq built, "a hit must return the memoized frame")
+    assert(jobs == 0, s"a memo hit launched $jobs jobs")
+    val leaves = hit.queryExecution.analyzed.collectLeaves()
+    assert(leaves.nonEmpty && leaves.forall(_.isInstanceOf[LogicalRDD]),
+      s"lsh-pairs hit re-plans its build:\n${hit.queryExecution.analyzed}")
+    graft.llm.ModelCache.invalidate()
+  }
+
+  test("a warm q257_cc_stars launches at most 21 jobs") {
+    // 21 = the count measured when this budget was set (sf0.001,
+    // local[4], 4 shuffle partitions; 46 before it): 14 while the frame
+    // is built — the memo-hit pair set costs none, the canonical edge
+    // set 2, each of the 2 star rounds 6 (two windowed mins, two
+    // distincts; the convergence sum rides the round's checkpoint job
+    // as an Observation) — and 7 to execute the label/degree plan
+    graft.llm.ModelCache.invalidate()
+    val q = SparkEntry.queries("q257_cc_stars")
+    noop(q(spark, sf)) // memo-cold: builds lsh-bands and lsh-pairs
+    val (df, construct) = jobsOf(q(spark, sf))
+    val (_, execute) = jobsOf(noop(df))
+    assert(construct + execute <= 21,
+      s"warm q257 launched $construct + $execute jobs (budget 21)")
+    graft.llm.ModelCache.invalidate()
+  }
+}

@@ -279,7 +279,8 @@ class PropertySpec extends SparkSpec {
         es <- Gen.listOfN(m,
           Gen.zip(Gen.choose(0L, n - 1L), Gen.choose(0L, n - 1L)))
       } yield es.filter { case (a, b) => a != b }, 6)
-    cases.filter(_.nonEmpty).foreach { es =>
+    // the empty graph is a case too: no edges, no labels
+    (List.empty[(Long, Long)] +: cases).foreach { es =>
       // ground truth: union-find, components labeled by their minimum
       val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct
       val parent = scala.collection.mutable.Map(nodes.map(v => v -> v): _*)

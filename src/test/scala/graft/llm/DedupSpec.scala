@@ -327,4 +327,14 @@ class DedupSpec extends SparkSpec {
     assert(labs.forall(_.getLong(1) == 0L),
       "every chain node must label to the component minimum 0")
   }
+
+  test("star contraction on an empty edge set returns no labels within two rounds") {
+    import spark.implicits._
+    // a corpus with no near-duplicate pairs hands q257 an empty graph:
+    // the endpoint sum over no edges is 0, not NULL, and must converge
+    val sym = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val (labels, rounds) = Dedup.ccStarLabels(sym)
+    assert(rounds <= 2, s"empty graph took $rounds rounds")
+    assert(labels.collect().isEmpty)
+  }
 }

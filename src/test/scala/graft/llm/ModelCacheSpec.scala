@@ -136,4 +136,41 @@ class ModelCacheSpec extends SparkSpec {
     assert(v.collect().nonEmpty)
     ModelCache.invalidate()
   }
+
+  test("memo key carries leaf-file versions: an in-place append or " +
+    "overwrite of the corpus is a miss, never a stale hit") {
+    import spark.implicits._
+    ModelCache.invalidate()
+    val path = java.nio.file.Files.createTempDirectory("memo-versions")
+      .resolve("corpus.parquet").toString
+    def write(ids: Range, mode: String): Unit =
+      ids.map(i => (i.toLong, s"text $i")).toDF("doc_id", "text")
+        .write.mode(mode).parquet(path)
+    def serve(): (Long, Long) = {
+      val corpus = spark.read.parquet(path)
+      val r = ModelCache.memoIndex(corpus, "spec-versions") {
+        graft.ops.GlobalOrder.pin(
+          corpus.agg(count(lit(1)).as("n"), sum(col("doc_id")).as("s")))
+      }.first()
+      (r.getLong(0), r.getLong(1))
+    }
+    def builds = ModelCache.buildCounts.getOrElse("spec-versions", 0)
+    val b0 = builds
+    write(0 until 100, "overwrite")
+    assert(serve() == ((100L, 4950L)))
+    assert(builds == b0 + 1)
+    assert(serve() == ((100L, 4950L)))
+    assert(builds == b0 + 1, "an unchanged corpus must still hit")
+    // in-place append: a new part file under the same root path
+    write(100 until 250, "append")
+    assert(serve() == ((250L, 31125L)), "append served a stale artifact")
+    assert(builds == b0 + 2, "an append must miss")
+    // overwrite with the same row count, different rows
+    write(1000 until 1100, "overwrite")
+    assert(serve() == ((100L, 104950L)), "overwrite served a stale artifact")
+    assert(builds == b0 + 3, "an overwrite must miss")
+    assert(serve() == ((100L, 104950L)))
+    assert(builds == b0 + 3)
+    ModelCache.invalidate()
+  }
 }
