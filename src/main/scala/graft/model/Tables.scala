@@ -2,6 +2,7 @@ package graft.model
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
@@ -123,8 +124,7 @@ object Tables {
 
   /** The parquet data files of a table path: the file itself, or the
     * `.parquet` files directly under the directory, by name. */
-  private def parquetFiles(conf: org.apache.hadoop.conf.Configuration,
-      path: String): Array[FileStatus] = {
+  private def parquetFiles(conf: Configuration, path: String): Array[FileStatus] = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
     val st = fs.getFileStatus(p)
@@ -134,8 +134,7 @@ object Tables {
     else Array(st)
   }
 
-  private def footer(conf: org.apache.hadoop.conf.Configuration,
-      f: FileStatus): ParquetMetadata = {
+  private def footer(conf: Configuration, f: FileStatus): ParquetMetadata = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
     try reader.getFooter finally reader.close()
   }
