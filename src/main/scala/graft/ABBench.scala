@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Same-session A/B timer for optimization rounds: times a set of
  * queries under two values of one runtime conf, interleaved
@@ -15,25 +13,13 @@ import org.apache.spark.sql.SparkSession
  * Usage: runMain graft.ABBench <sfDir> <conf=key> <valA> <valB> <q1,q2,...> [reps]
  */
 object ABBench {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Session.run() { spark =>
     val sfDir = args(0)
     val key = args(1).stripPrefix("conf=")
     val valA = args(2)
     val valB = args(3)
     val names = args(4).split(",").toSeq
     val reps = if (args.length > 5) args(5).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-ab-wh").toString)
-      .config("spark.cleaner.periodicGC.interval", "24h")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     def run(name: String): Double = {
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, sfDir)
@@ -69,6 +55,5 @@ object ABBench {
       println(s"""[ab] $n: $key=$valA ${fmt(a)} s | $key=$valB ${fmt(b)} s | B/A ${fmt(b / a)}""")
     }
     println(s"[ab] TOTALS: A=${fmt(results.map(_._2).sum)} s  B=${fmt(results.map(_._3).sum)} s")
-    spark.stop()
   }
 }

@@ -1,31 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Session.run() { spark =>
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // managed tables (the bucketed-layout queries) land in a temp
-      // warehouse, never the checkout; deleted after spark.stop() — a
-      // run otherwise leaves a full bucketed fact copy in /tmp
-      .config("spark.sql.warehouse.dir", Bench.tempWarehouse())
-      // Dead checkpoint pins are released between queries by an
-      // EXPLICIT System.gc() below — never by the periodic GC timer. A
-      // timer-driven full GC lands at arbitrary points INSIDE timed
-      // regions (measured: the 2-minute interval inflated the suite
-      // total 89 s -> 108 s, scattering multi-second spikes onto
-      // whichever queries the timer happened to hit, min-of-reps
-      // included since every rep was exposed). Between-query GC frees
-      // the same blocks at a point where no clock is running.
-      .config("spark.cleaner.periodicGC.interval", "24h")
-      // engine-wide extensions, exactly as a deployed session would run
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup at the smallest SF: JIT + codegen cache + parquet
     // footer reads, so timed numbers measure the plans, not JVM startup.
     val warmupDir = "/root/testdata/sf0.001"
@@ -276,19 +252,7 @@ object Bench {
     val remeasureErrsJson = remeasureErrs.toSeq.sortBy(_._1)
       .map { case (k, n) => "\"" + k + "\":" + n }.mkString("{", ",", "}")
     println(s"""{"queries":$qs,"reps":$reps,"extra_reps":$extraReps,"sf":"$sfDir","slowest":$top,"build":${jmap(build)},"build_total":${fmt(buildTotal)},"build_tags_warmup_only":$warmupOnlyJson,"max_spread":${fmt(maxSpread)},"noisy":$noisy,"remeasured":$remeasured,"remeasure_errs":$remeasureErrsJson,"isolated":$isolatedJson,"regressions":$regressions,"n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"metric":"total","value":${fmt(total)},"unit":"sec"}""")
-    spark.stop()
-    Bench.deleteTempWarehouse()
   }
-
-  private var warehouseDir: java.nio.file.Path = _
-
-  private[graft] def tempWarehouse(): String = {
-    warehouseDir = java.nio.file.Files.createTempDirectory("graft-warehouse")
-    warehouseDir.toString
-  }
-
-  private[graft] def deleteTempWarehouse(): Unit =
-    if (warehouseDir != null) graft.model.Fs.deleteRecursively(warehouseDir)
 
   /** Best-known per-query mins (flat {"q":sec} JSON, strictly that
     * shape — written by tools/update_bench_best.py). Parsed with a

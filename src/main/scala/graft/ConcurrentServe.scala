@@ -58,21 +58,13 @@ object ConcurrentServe {
   /** Shared artifact tags whose build must be paid once per storm. */
   private val SharedTags = Seq("bigram-lm", "para-scores", "doc-scores")
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit =
+    if (Session.run(fair = true)(serve).nonEmpty) sys.exit(1)
+
+  /** Runs the four phases, prints the JSON report, returns the gate
+    * violations. */
+  private def serve(spark: SparkSession): Seq[String] = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-conc-wh").toString)
-      .config("spark.cleaner.periodicGC.interval", "24h")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     def run(name: String, dir: String): Unit =
       SparkEntry.queries(name)(spark, dir)
@@ -208,7 +200,6 @@ object ConcurrentServe {
       s""""speedup":${fmt(sequentialSum / math.max(wall, 1e-9))},""" +
       s""""violations":${bad.map(v => "\"" + v.replace("\"", "'") + "\"")
         .mkString("[", ",", "]")},"sf":"$sfDir"}""")
-    spark.stop()
-    if (bad.nonEmpty) sys.exit(1)
+    bad
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -15,16 +14,9 @@ import org.apache.spark.sql.functions._
  * Usage: runMain graft.LayoutMeasure [sfDir] [nFiles]
  */
 object LayoutMeasure {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Session.run() { spark =>
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val nFiles = if (args.length > 1) args(1).toInt else 64
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val out = java.nio.file.Files.createTempDirectory("graft-layout-measure")
     try {
       val paths = graft.ops.Layout.writeLayouts(spark, sfDir, out.toString, nFiles)
@@ -39,9 +31,6 @@ object LayoutMeasure {
               f""""files":${m.filesListed},"buckets_hit":${m.bucketsHit},""" +
               f""""read_pct":$pct%.2f}""")
         }
-    } finally {
-      graft.model.Fs.deleteRecursively(out)
-      spark.stop()
-    }
+    } finally graft.model.Fs.deleteRecursively(out)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -42,22 +42,10 @@ import org.apache.spark.sql.functions._
  * Usage: runMain graft.MakeScale <srcDir> <outDir> [factor=10]
  */
 object MakeScale {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Session.run() { spark =>
     val src = args(0)
     val out = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    // getOrCreate may adopt a live session (a test JVM's); only a
-    // session THIS main created gets stopped at the end
-    val adopted = SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession).isDefined
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     def table(name: String): DataFrame =
       spark.read.parquet(s"$src/$name.parquet")
@@ -138,6 +126,5 @@ object MakeScale {
     }, "embeddings", 2)
 
     println(s"""{"made": "$out", "factor": $factor}""")
-    if (!adopted) spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Per-query PLAN FINGERPRINTS for the regression gate (round-13
  * verdict #3): a bench regression flag is only acceptable as
@@ -18,10 +16,9 @@ import org.apache.spark.sql.SparkSession
  * refreshes the stored file after a green run, so the baseline is
  * always "the plan of the last green round".
  *
- * Usage: runMain graft.PlanShapes [sfDir] [outPath] [dumpDir]
- * With `dumpDir`, also writes each query's NORMALIZED plan text to
- * `dumpDir/<query>.txt` so a fingerprint flip can be diffed to its
- * exact operator instead of guessed at (the q163/q247 triage tool).
+ * Usage: runMain graft.PlanShapes [sfDir] [outPath]
+ * To diff a fingerprint flip to its exact operator, [[Profile]] writes
+ * each query's normalized plan text with the same md5.
  */
 object PlanShapes {
 
@@ -123,38 +120,20 @@ object PlanShapes {
   private[graft] def fingerprint(plan: String): String =
     md5hex(normalize(plan))
 
-  def main(args: Array[String]): Unit = {
+  /** Shuffle width of the plan tools' session, PINNED rather than
+    * core-derived: partition counts render into plan strings
+    * (rangepartitioning(x, 32)), so a fingerprint taken at 16 CPUs
+    * would spuriously differ from one taken at 32 — the gate would
+    * then misread host-config drift as a plan change. 32 matches the
+    * driver's bench session. */
+  private[graft] val Partitions = 32
+
+  def main(args: Array[String]): Unit = Session.run(Partitions) { spark =>
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outPath = if (args.length > 1) args(1) else "/tmp/plan_shapes.json"
-    // shuffle width is PINNED, not env-derived: partition counts render
-    // into plan strings (rangepartitioning(x, 32)), so a fingerprint
-    // taken at 16 CPUs would spuriously differ from one taken at 32 —
-    // the gate would then misread host-config drift as a plan change.
-    // 32 matches the driver's bench session.
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-shapes-wh").toString)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val dumpDir = if (args.length > 2) Some(args(2)) else None
-    dumpDir.foreach(d =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
     val shapes = SparkEntry.queries.toSeq.map { case (name, fn) =>
-      val fp = try {
-        val df = fn(spark, sfDir)
-        // render + normalize ONCE; the fingerprint is md5 of the
-        // normalized text, so the optional dump and the hash cannot
-        // disagree (and the 270-query gate pays one regex pass each)
-        val norm = normalize(df.queryExecution.executedPlan.toString)
-        dumpDir.foreach(d => java.nio.file.Files.write(
-          java.nio.file.Paths.get(d, s"$name.txt"), norm.getBytes("UTF-8")))
-        md5hex(norm)
-      } catch { case e: Throwable =>
+      val fp = try fingerprint(fn(spark, sfDir).queryExecution.executedPlan.toString)
+      catch { case e: Throwable =>
         // class name only: exception MESSAGES carry quotes/backslashes
         // (would corrupt the hand-built JSON) and host paths (would
         // make an ERR state spuriously "change plan" across hosts)
@@ -167,6 +146,5 @@ object PlanShapes {
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       json.getBytes("UTF-8"))
     println(s"[plan-shapes] wrote ${shapes.size} fingerprints to $outPath")
-    spark.stop()
   }
 }

@@ -1,32 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Session.run() { spark =>
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query-name filter (local iteration)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // managed tables (the bucketed-layout queries) land in a temp
-      // warehouse, never the checkout; deleted after spark.stop()
-      .config("spark.sql.warehouse.dir", Bench.tempWarehouse())
-      // release dead per-serve checkpoint pins during the run (see
-      // Bench: the 30 min default never fires inside one invocation)
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      // engine-wide extensions, exactly as a deployed session would run:
-      // custom functions + TopKPerKey strategy + the InferTopKPerKey
-      // rewrite apply to EVERY query, not just per-query opt-ins
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Failures must be LOUD in the artifacts: a query that throws would
     // otherwise just be missing its output dir and silently vanish from
@@ -68,7 +49,5 @@ object Verify {
     // exit 0 even on failures: the driver must still run the DuckDB
     // compare over the queries that DID produce output; failed.json +
     // the stdout count are the loud signal.
-    spark.stop()
-    Bench.deleteTempWarehouse()
   }
 }

@@ -6,13 +6,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /**
  * SparkSessionExtensions wiring for graft's custom expressions, so SQL
- * users get them too:
+ * users get them too. [[graft.Session]] installs it on every session it
+ * builds (`spark.sql.extensions=graft.functions.GraftExtensions`); a
+ * session built elsewhere takes `.withExtensions(new GraftExtensions)`:
  *
  * {{{
- * SparkSession.builder()
- *   .withExtensions(new GraftExtensions)
- *   // or: .config("spark.sql.extensions", "graft.functions.GraftExtensions")
- *   ...
  * spark.sql("SELECT dot_product_d(a.embedding, b.embedding) FROM ...")
  * }}}
  */

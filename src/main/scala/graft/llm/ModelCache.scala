@@ -190,15 +190,20 @@ object ModelCache {
   }
 
   /** Memoizes a driver-side model built from `corpus`. A
-    * Dataset-typed result must be forced inside `train` (as
-    * [[memoIndex]] does with one `count()`): local pins are lazy, so an
-    * unforced pinned build would defer its compute into the first
-    * serving query's timed rep instead of the build ledger. */
-  def memo[T <: AnyRef](corpus: DataFrame, tag: String)(train: => T): T =
-    corpusKey(corpus, tag) match {
-      case None      => train
-      case Some(key) => getOrBuild(key, tag)(train).asInstanceOf[T]
+    * Dataset-typed result is rejected: frames are memoized through
+    * [[memoIndex]]. */
+  def memo[T <: AnyRef](corpus: DataFrame, tag: String)(train: => T): T = {
+    def model: T = train match {
+      case _: org.apache.spark.sql.Dataset[_] =>
+        throw new IllegalArgumentException(
+          s"ModelCache.memo('$tag') built a Dataset; memoize frames with memoIndex")
+      case m => m
     }
+    corpusKey(corpus, tag) match {
+      case None      => model
+      case Some(key) => getOrBuild(key, tag)(model).asInstanceOf[T]
+    }
+  }
 
   /**
    * [[memo]] for the STORED INDEX itself (a pinned DataFrame): one

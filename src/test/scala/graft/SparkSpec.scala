@@ -17,11 +17,12 @@ object TestSpark {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // the shared suite session carries the full engine (strategy +
-    // optimizer rule), matching how Verify/Bench sessions are built
-    // (`spark.sql.extensions`). Installed via `experimental` rather
-    // than the extensions config so that `newSession()` baselines in
-    // the TopK specs stay genuinely vanilla — builder-config
-    // extensions would propagate to every new session.
+    // optimizer rule), matching the sessions graft.Session builds for
+    // every main (`spark.sql.extensions`). Installed via
+    // `experimental` rather than the extensions config so that
+    // `newSession()` baselines in the TopK specs stay genuinely
+    // vanilla — builder-config extensions would propagate to every
+    // new session.
     graft.plans.TopK.ensureOptimizations(s)
     s
   }

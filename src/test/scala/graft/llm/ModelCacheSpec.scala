@@ -119,6 +119,19 @@ class ModelCacheSpec extends SparkSpec {
     ModelCache.invalidate()
   }
 
+  test("memo rejects a Dataset result and names memoIndex, the frame path") {
+    ModelCache.invalidate()
+    val e = intercept[IllegalArgumentException] {
+      ModelCache.memo(corpus, "spec-memo-frame") {
+        corpus.groupBy(col("source")).agg(count(lit(1)).as("n"))
+      }
+    }
+    assert(e.getMessage.contains("memoIndex"), e.getMessage)
+    // the rejected build retired its key: a driver-side model still builds
+    assert(ModelCache.memo(corpus, "spec-memo-frame")(Array(1, 2)).toSeq == Seq(1, 2))
+    ModelCache.invalidate()
+  }
+
   test("a FAILED build is not cached: the waiter and later callers retry") {
     ModelCache.invalidate()
     val builds = new AtomicInteger(0)
