@@ -37,7 +37,7 @@ import org.apache.spark.sql.SparkSession
 object Session {
 
   /** Local cores for a created session. */
-  val cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+  private val cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors())
 
   /**
