@@ -94,6 +94,10 @@ object PlanShapes {
       .replaceAll("plan_id=\\d+", "plan_id=")       // AQE plan ids
       .replaceAll("@[0-9a-f]{6,}", "@")             // object hashes
       .replaceAll("Lambda\\$\\d+/0x[0-9a-f]+", "Lambda") // JVM lambda ids
+      // Column-API lambda variables (functions.filter(c, x => …)) are
+      // named x_N from a JVM-global counter: the same plan renders
+      // x_1 or x_7 depending on what the JVM built before it
+      .replaceAll("lambda x_\\d+", "lambda x_")
       .replaceAll("splits=\\d+", "splits=") // Range splits = core count
       .replaceAll("file:[^\\s\\],)]*", "path")       // local paths
       // ANY multi-segment absolute path, not just well-known roots: a

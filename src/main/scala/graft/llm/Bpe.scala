@@ -76,6 +76,18 @@ object Bpe {
       })
   }
 
+  /** The `limit` most frequent adjacent symbol pairs of a (wc, s)
+    * table, as (pa, pb, n) under the total order (n desc, pa, pb) —
+    * a vocab-scale aggregate; self-pairs excluded (class doc). */
+  private def topPairs(syms: DataFrame, limit: Int): DataFrame =
+    syms
+      .select(col("wc"), explode(Grams.pairs("s", "pa", "pb")).as("p"))
+      .filter(col("p.pa") =!= col("p.pb"))
+      .groupBy(col("p.pa").as("pa"), col("p.pb").as("pb"))
+      .agg(sum(col("wc")).as("n"))
+      .orderBy(col("n").desc, col("pa"), col("pb"))
+      .limit(limit)
+
   /** Count-weighted word-frequency table: (word, wc) — the
     * Heaps-sublinear table BPE learning actually consumes, and a
     * MERGEABLE aggregate (counts sum), so it is also the streamed
@@ -110,20 +122,7 @@ object Bpe {
         counts.select(col("wc"), split(col("word"), "").as("s")))
       val out = Seq.newBuilder[Merge]
       for (_ <- 1 to m) {
-        // vocab-scale pair aggregate; self-pairs excluded (class doc).
-        // Single-symbol words are filtered BEFORE the explode: Spark's
-        // sequence(1, 0) DESCENDS rather than being empty, so an
-        // unguarded size-1 array would probe element_at(s, 2)
-        val best = syms
-          .filter(size(col("s")) >= 2)
-          .select(col("wc"), explode(expr(
-            "transform(sequence(1, size(s) - 1), " +
-              "i -> struct(element_at(s, i) AS pa, element_at(s, i + 1) AS pb))")).as("p"))
-          .filter(col("p.pa") =!= col("p.pb"))
-          .groupBy(col("p.pa").as("pa"), col("p.pb").as("pb"))
-          .agg(sum(col("wc")).as("n"))
-          .orderBy(col("n").desc, col("pa"), col("pb"))
-          .limit(1)
+        val best = topPairs(syms, 1)
           .as[(String, String, Long)]
           .collect() // 1-row model read — the bounded-argmax exemption
         best.foreach { case (pa, pb, n) =>
@@ -174,16 +173,7 @@ object Bpe {
       wordCounts(docs).select(col("wc"), split(col("word"), "").as("s")))
     val out = Seq.newBuilder[Seq[Merge]]
     for (_ <- 1 to iters) {
-      val top = syms
-        .filter(size(col("s")) >= 2)
-        .select(col("wc"), explode(expr(
-          "transform(sequence(1, size(s) - 1), " +
-            "i -> struct(element_at(s, i) AS pa, element_at(s, i + 1) AS pb))")).as("p"))
-        .filter(col("p.pa") =!= col("p.pb"))
-        .groupBy(col("p.pa").as("pa"), col("p.pb").as("pb"))
-        .agg(sum(col("wc")).as("n"))
-        .orderBy(col("n").desc, col("pa"), col("pb"))
-        .limit(4 * j + 4)
+      val top = topPairs(syms, 4 * j + 4)
         .as[(String, String, Long)]
         .collect() // bounded candidate read (≤ 4j+4 rows)
       val picked = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]

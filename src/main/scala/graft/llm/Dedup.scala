@@ -37,23 +37,13 @@ import org.apache.spark.sql.functions._
 object Dedup {
 
   /** 3-word shingles of the space-tokenized text, distinct per doc.
-    * Output: (doc_id, shingle). Guarded for docs with <3 tokens — and
-    * the shingle expression is additionally TOTAL (greatest-clamped
-    * sequence + try_element_at, identical output on every ≥3-token
-    * row): a downstream explode's inferred constraints can land in
-    * the same Filter as the length guard, where interpreted-mode
-    * common-subexpression elimination evaluates the transform EAGERLY,
-    * before the AND short-circuits — so under ANSI semantics a plain
-    * element_at threw on short docs whenever the input was RDD-backed
-    * (streaming micro-batches; LocalRelation inputs fold the filter
-    * at optimization time and masked it). */
+    * Output: (doc_id, shingle). Docs with <3 tokens have no shingle
+    * and emit no row; the [[Grams]] window is total, so no guard is
+    * needed, RDD-backed inputs (streaming micro-batches) included. */
   def shingles(docs: DataFrame): DataFrame =
     docs
       .withColumn("w", split(col("text"), " "))
-      .filter(size(col("w")) >= 3)
-      .withColumn("s", explode(array_distinct(expr(
-        "transform(sequence(1, greatest(size(w) - 2, 1)), i -> " +
-          "concat_ws('_', try_element_at(w,i), try_element_at(w,i+1), try_element_at(w,i+2)))"))))
+      .withColumn("s", explode(array_distinct(Grams.joined("w", 3, "_"))))
       .select(col("doc_id"), col("s"))
 
   /**
@@ -318,14 +308,14 @@ object Dedup {
   }
 
   /** The distinct 3-word shingle ARRAY of each document, as a column —
-    * the row-local twin of [[shingles]] (same guard, same `_` join). */
+    * the row-local twin of [[shingles]] (same windows, same `_` join).
+    * Docs with <3 tokens are dropped rather than kept with an empty
+    * array: the oracles have no row for them. */
   private[graft] def withShingleArray(docs: DataFrame): DataFrame =
     docs
       .withColumn("w", split(col("text"), " "))
       .filter(size(col("w")) >= 3)
-      .withColumn("sh", expr(
-        "array_distinct(transform(sequence(1, greatest(size(w) - 2, 1)), i -> " +
-          "concat_ws('_', try_element_at(w,i), try_element_at(w,i+1), try_element_at(w,i+2))))"))
+      .withColumn("sh", array_distinct(Grams.joined("w", 3, "_")))
 
   /**
    * MinHash + LSH near-dup detection, end to end:
@@ -644,11 +634,7 @@ object Dedup {
   private[graft] def sourceGramProjection(docs: DataFrame): DataFrame =
     docs
       .withColumn("w", split(col("text"), " "))
-      .filter(size(col("w")) >= 3)
-      .select(col("source"), explode(array_distinct(expr(
-        "transform(sequence(1, greatest(size(w) - 2, 1)), i -> " +
-          "concat_ws('_', try_element_at(w,i), try_element_at(w,i+1), try_element_at(w,i+2)))")))
-        .as("s"))
+      .select(col("source"), explode(array_distinct(Grams.joined("w", 3, "_"))).as("s"))
       .select(col("source"), md5(col("s")).as("h"))
       .distinct()
 

@@ -224,10 +224,7 @@ object MixPlan {
   private[graft] def bigramsKeyed(docs: DataFrame, key: String): DataFrame =
     docs
       .select(col(key), split(col("text"), " ").as("ws"))
-      .filter(size(col("ws")) >= 2)
-      .select(col(key), explode(expr(
-        "transform(sequence(1, size(ws) - 1), " +
-          "i -> struct(element_at(ws, i) AS w1, element_at(ws, i + 1) AS w2))")).as("b"))
+      .select(col(key), explode(Grams.pairs("ws", "w1", "w2")).as("b"))
       .select(col(key), col("b.w1"), col("b.w2"))
 
   def bigramNovelty(
@@ -854,11 +851,7 @@ object MixPlan {
   private[graft] def scoredParagraphsUnder(
       corpus: DataFrame, model: DataFrame): DataFrame = {
     val slots = explodedParagraphs(corpus)
-      .filter(size(col("para")) >= 2)
-      .select(col("doc_id"), col("pi"), explode(expr(
-        "transform(sequence(1, size(para) - 1), " +
-          "i -> struct(element_at(para, i) AS w1, " +
-          "element_at(para, i + 1) AS w2))")).as("b"))
+      .select(col("doc_id"), col("pi"), explode(Grams.pairs("para", "w1", "w2")).as("b"))
       .select(col("doc_id"), col("pi"), col("b.w1"), col("b.w2"))
     graft.ops.GlobalOrder.pin(slots
       .join(model, Seq("w1", "w2"))

@@ -100,16 +100,9 @@ object Selection {
   private[graft] def dsirGrams(docs: DataFrame, buckets: Int): DataFrame =
     docs
       .select(col("doc_id"), col("source"), split(col("text"), " ").as("w"))
-      .filter(size(col("w")) >= 2)
+      .select(col("doc_id"), col("source"), explode(Grams.joined("w", 2)).as("g"))
       .select(col("doc_id"), col("source"),
-        explode(expr("sequence(1, size(w) - 1)")).as("i"),
-        col("w"))
-      .select(col("doc_id"), col("source"),
-        pmod(
-          conv(substring(md5(concat(
-            element_at(col("w"), col("i")), lit(" "),
-            element_at(col("w"), col("i") + 1))), 1, 8), 16, 10)
-            .cast("long"),
+        pmod(conv(substring(md5(col("g")), 1, 8), 16, 10).cast("long"),
           lit(buckets.toLong)).as("b"))
 
   /** The MERGEABLE half of the DSIR model: per-bucket target/raw

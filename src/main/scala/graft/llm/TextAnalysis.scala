@@ -250,13 +250,7 @@ object TextAnalysis {
       // split() re-tokenizes per lambda element (no subexpression
       // elimination inside higher-order functions)
       .select(split(col("text"), " ").as("ws"))
-      // guard: Spark sequence(1, 0) counts DOWN, so single-token docs
-      // would index element 0 — exclude them (DuckDB's range is empty
-      // there, so the oracle needs no guard)
-      .filter(size(col("ws")) >= 2)
-      .select(explode(expr(
-        "transform(sequence(1, size(ws) - 1), " +
-          "i -> struct(element_at(ws, i) AS w1, element_at(ws, i + 1) AS w2))")).as("b"))
+      .select(explode(Grams.pairs("ws", "w1", "w2")).as("b"))
       .select(col("b.w1"), col("b.w2"))
     val counts = pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n_bigram"))
     val firsts = counts.groupBy(col("w1")).agg(sum(col("n_bigram")).as("n_first"))
@@ -377,17 +371,13 @@ object TextAnalysis {
    * 5-gram explode is row-local (a `transform` over the doc's own
    * token array); the only shuffle keys on (doc_id, md5(gram)) — the
    * 16-byte digest, never 5-gram text (the q143/q144 discipline).
-   * Documents under 5 tokens carry no 5-gram and are excluded (the
-   * oracle mirrors; also dodges Spark's DESCENDING `sequence` when
-   * the range would be empty).
+   * Documents under 5 tokens carry no 5-gram, so they emit no row
+   * (the oracle mirrors).
    */
   def repetitionScore(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .filter(size(col("w")) >= 5)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(w) - 4), i -> concat_ws(' ', slice(w, i, 5)))"))
-        .as("g"))
+      .select(col("doc_id"), explode(Grams.joined("w", 5)).as("g"))
       .groupBy(col("doc_id"), md5(col("g")).as("h"))
       .agg(count(lit(1)).as("cnt"))
       .groupBy(col("doc_id"))
@@ -418,10 +408,7 @@ object TextAnalysis {
     val uni = toks.groupBy(col("w")).agg(count(lit(1)).as("n_w"))
     val totalToks = uni.agg(sum(col("n_w")).as("n1"))
     val pairs = ws
-      .filter(size(col("ws")) >= 2)
-      .select(explode(expr(
-        "transform(sequence(1, size(ws) - 1), " +
-          "i -> struct(element_at(ws, i) AS w1, element_at(ws, i + 1) AS w2))")).as("b"))
+      .select(explode(Grams.pairs("ws", "w1", "w2")).as("b"))
       .select(col("b.w1"), col("b.w2"))
     val bi = pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n_xy"))
     val totalBi = bi.agg(sum(col("n_xy")).as("n2"))
@@ -450,10 +437,7 @@ object TextAnalysis {
   def repetitionRatio(spark: SparkSession, dir: String): DataFrame = {
     val bigrams = Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .filter(size(col("ws")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(ws) - 1), " +
-          "i -> concat_ws(' ', element_at(ws, i), element_at(ws, i + 1)))")).as("bg"))
+      .select(col("doc_id"), explode(Grams.joined("ws", 2)).as("bg"))
     val counts = bigrams.groupBy(col("doc_id"), col("bg")).agg(count(lit(1)).as("n"))
     // top bigram via ONE map-side-combinable aggregate instead of the
     // former exchange + sort + two windows: min(struct(-n, bg)) picks
@@ -506,13 +490,9 @@ object TextAnalysis {
    */
   def repeatedPassages(spark: SparkSession, dir: String,
       n: Int = 5, limit: Int = 100): DataFrame = {
-    val gram = (0 until n).map(j => s"element_at(ws, i + $j)").mkString(", ")
     Tables.documents(spark, dir)
       .select(col("doc_id"), tokens.as("ws"))
-      .filter(size(col("ws")) >= n)
-      .select(col("doc_id"), explode(expr(
-        s"transform(sequence(1, size(ws) - ${n - 1}), i -> concat_ws(' ', $gram))"))
-        .as("passage"))
+      .select(col("doc_id"), explode(Grams.joined("ws", n)).as("passage"))
       .groupBy(col("passage"), col("doc_id"))
       .agg(count(lit(1)).as("occ"))
       .groupBy(col("passage"))
@@ -564,10 +544,8 @@ object TextAnalysis {
     * (`doc_id`, `text`) — the spec plants known repeated passages. */
   /** Array of 16-hex md5 hashes of every `k`-token gram of the token
     * array `ws` — the winnowing gram table, as one row-local HOF. */
-  private def gramHashes(k: Int): String = {
-    val gram = (0 until k).map(j => s"element_at(ws, i + $j)").mkString(", ")
-    s"transform(sequence(1, size(ws) - ${k - 1}), i -> substring(md5(concat_ws(' ', $gram)), 1, 16))"
-  }
+  private def gramHashes(k: Int): String =
+    Grams.windows("ws", k)(i => s"substring(md5(concat_ws(' ', slice(ws, $i, $k))), 1, 16)")
 
   /** Per-window rightmost-min (fp, pos) structs over the gram-hash
     * array `hs` as ONE left-to-right fold per window: replace on `<=`
@@ -577,12 +555,12 @@ object TextAnalysis {
     * measured 2.2 s → 1.5 s at sf0.1). The '~' init sorts after every
     * lowercase-hex string, so position 1 always seeds the fold. */
   private def winnowFold(w: Int): String =
-    s"""transform(sequence(1, size(hs) - ${w - 1}), p ->
-       |  aggregate(sequence(p, p + ${w - 1}),
-       |    named_struct('fp', '~', 'pos', 0),
-       |    (a, j) -> if(element_at(hs, j) <= a.fp,
-       |                 named_struct('fp', element_at(hs, j), 'pos', j),
-       |                 a)))""".stripMargin
+    Grams.windows("hs", w)(p =>
+      s"""aggregate(sequence($p, $p + ${w - 1}),
+         |    named_struct('fp', '~', 'pos', 0),
+         |    (a, j) -> if(element_at(hs, j) <= a.fp,
+         |                 named_struct('fp', element_at(hs, j), 'pos', j),
+         |                 a))""".stripMargin)
 
   private[llm] def winnowedFingerprintsOf(docs: DataFrame,
       k: Int, w: Int, limit: Int): DataFrame = {
@@ -590,7 +568,6 @@ object TextAnalysis {
     val winnow = winnowFold(w)
     docs
       .select(col("doc_id"), tokens.as("ws"))
-      .filter(size(col("ws")) >= k + w - 1)
       .select(col("doc_id"), expr(gramHashes(k)).as("hs"))
       // window overlap re-selects the same (hash, pos); every duplicate
       // comes from the SAME document row, so array_distinct dedups
@@ -665,13 +642,9 @@ object TextAnalysis {
     * plants a shared span across two docs and asserts exact gram and
     * coverage counts). */
   def dupSpanCoverageOf(docs: DataFrame, k: Int = 7): DataFrame = {
-    val t = docs
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .filter(size(col("w")) >= k)
+    val t = docs.select(col("doc_id"), split(col("text"), " ").as("w"))
     val grams = t.select(col("doc_id"), size(col("w")).cast("long").as("n_tokens"),
-      explode(expr(
-        s"transform(sequence(1, size(w) - ${k - 1}), " +
-          s"i -> struct(i AS pos, md5(concat_ws(' ', slice(w, i, $k))) AS g))")).as("p"))
+      explode(Grams.md5s("w", k, withPos = true)).as("p"))
       .select(col("doc_id"), col("n_tokens"), col("p.pos"), col("p.g"))
     // grams seen in more than one document — the duplicated sliver,
     // built once per corpus (planted in-memory test frames are not
@@ -734,10 +707,7 @@ object TextAnalysis {
     * bounds are bit-compatible with the batch build. */
   private[graft] def spanGramBounds(docs: DataFrame, k: Int = 7): DataFrame =
     docs.select(col("doc_id"), split(col("text"), " ").as("w"))
-      .filter(size(col("w")) >= k)
-      .select(col("doc_id"), explode(expr(
-        s"transform(sequence(1, size(w) - ${k - 1}), " +
-          s"i -> md5(concat_ws(' ', slice(w, i, $k))))")).as("g"))
+      .select(col("doc_id"), explode(Grams.md5s("w", k)).as("g"))
       .groupBy(col("g"))
       .agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
 
@@ -746,10 +716,7 @@ object TextAnalysis {
   private[llm] def dupSpanTrimOf(docs: DataFrame, k: Int = 7): DataFrame = {
     val t = docs.select(col("doc_id"), split(col("text"), " ").as("w"))
     val grams = t
-      .filter(size(col("w")) >= k)
-      .select(col("doc_id"), explode(expr(
-        s"transform(sequence(1, size(w) - ${k - 1}), " +
-          s"i -> struct(i AS pos, md5(concat_ws(' ', slice(w, i, $k))) AS g))")).as("p"))
+      .select(col("doc_id"), explode(Grams.md5s("w", k, withPos = true)).as("p"))
       .select(col("doc_id"), col("p.pos"), col("p.g"))
     // gram → its lowest-id (canonical) holder, duplicated grams only
     val keepers = ModelCache.memoIndex(docs, s"dup-gram-keepers|$k") {
@@ -822,7 +789,6 @@ object TextAnalysis {
       w: Int = 4): DataFrame =
     docs
       .select(col("doc_id"), tokens.as("ws"))
-      .filter(size(col("ws")) >= k + w - 1)
       .select(col("doc_id"), expr(gramHashes(k)).as("hs"))
       .select(col("doc_id"), explode(array_distinct(
         expr(s"transform(${winnowFold(w)}, x -> x.fp)"))).as("fp"))
@@ -1353,14 +1319,10 @@ object TextAnalysis {
     docs
       .withColumn("ws", expr("filter(split(text, ' '), x -> x <> '')"))
       .filter(size(col("ws")) > 0)
-      // guard: Spark's sequence(4, n) turns DESCENDING for n < 4 —
-      // short docs get no interior boundary candidates, not a reversed
-      // range (DuckDB's range(4, n+1) is simply empty there)
+      // candidate ends: the last token of every 4-token window
       .withColumn("ends0", expr(
-        """if(size(ws) >= 4,
-          |  filter(sequence(4, size(ws)), i ->
-          |    substring(md5(array_join(slice(ws, i - 3, 4), ' ')), 1, 1) = '0'),
-          |  cast(array() as array<int>))""".stripMargin))
+        s"""filter(${Grams.windows("ws", 4)(i => s"$i + 3")}, i ->
+           |  substring(md5(array_join(slice(ws, i - 3, 4), ' ')), 1, 1) = '0')""".stripMargin))
       .withColumn("ends", expr(
         """if(size(ends0) > 0 AND element_at(ends0, -1) = size(ws),
           |  ends0, concat(ends0, array(size(ws))))""".stripMargin))

@@ -73,7 +73,7 @@ class BenchSpec extends AnyFunSuite {
   }
 
   test("loadBestKnown parses the flat best file and tolerates absence") {
-    val p = java.nio.file.Files.createTempFile("best", ".json")
+    val p = graft.TestDirs.file("best", ".json")
     java.nio.file.Files.write(p,
       """{"q1_a": 0.5,
         |"q22_bb":1.25}""".stripMargin.getBytes("UTF-8"))

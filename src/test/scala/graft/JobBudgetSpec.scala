@@ -69,7 +69,7 @@ class JobBudgetSpec extends SparkSpec {
     // so the footer's parquet types are converted exactly as inference
     // converts them (NANOS → Long under nanosAsLong, MICROS non-UTC → NTZ)
     Seq("NANOS" -> 1000L, "MICROS" -> 1L).foreach { case (unit, scale) =>
-      val path = java.nio.file.Files.createTempDirectory(s"events-$unit")
+      val path = graft.TestDirs.dir(s"events-$unit")
         .resolve("events.parquet").toString
       val schema = MessageTypeParser.parseMessageType(
         s"""message events { optional int64 event_id;

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
 class MakeScaleSpec extends SparkSpec {
 
   private lazy val out: String = {
-    val dir = java.nio.file.Files.createTempDirectory("makescale").toString
+    val dir = graft.TestDirs.dir("makescale").toString
     MakeScale.main(Array(sf, dir, "3"))
     dir
   }
@@ -100,7 +100,7 @@ class MakeScaleSpec extends SparkSpec {
   }
 
   test("the synthesis is deterministic: a second run is byte-identical") {
-    val dir2 = java.nio.file.Files.createTempDirectory("makescale2").toString
+    val dir2 = graft.TestDirs.dir("makescale2").toString
     MakeScale.main(Array(sf, dir2, "3"))
     Seq("lineitem", "documents", "embeddings").foreach { n =>
       val a = t(n)

@@ -20,6 +20,18 @@ class PlanShapesSpec extends AnyFunSuite {
     assert(PlanShapes.fingerprint(a) == PlanShapes.fingerprint(b))
   }
 
+  test("Column-API lambda variable counters normalize away") {
+    // the same stopword filter built early and late in one JVM: only
+    // the x_N counter differs
+    def filterPlan(n: Int) =
+      s"Project [size(filter(split(text#12, , -1), lambdafunction((lambda x_$n#40 = the), " +
+        s"lambda x_$n#40, false)), true) AS n#41]"
+    assert(PlanShapes.fingerprint(filterPlan(1)) == PlanShapes.fingerprint(filterPlan(23)))
+    // a named SQL lambda variable is not a counter: renaming it shows
+    val sql = "transform(w#3, lambdafunction(upper(lambda t#9), lambda t#9, false))"
+    assert(PlanShapes.fingerprint(sql) != PlanShapes.fingerprint(sql.replace("lambda t#", "lambda u#")))
+  }
+
   test("absolute paths outside known roots normalize too (tmpdir-independent)") {
     // a macOS-style tmpdir has no testdata/tmp/warehouse segment — the
     // q255/q256 scratch roots must still fingerprint host-independently

@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,7 +13,7 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+        TestDirs.dir("graft-warehouse").toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
@@ -27,6 +28,25 @@ object TestSpark {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+}
+
+/** Temp dirs and files for specs, made under `java.io.tmpdir` and
+  * deleted, whole trees, when the test JVM exits — so a suite run
+  * leaves no warehouses, checkpoints or fixtures behind. */
+object TestDirs {
+  private val made = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+  Runtime.getRuntime.addShutdownHook(new Thread(() =>
+    made.forEach { p =>
+      try graft.model.Fs.deleteRecursively(p)
+      catch { case _: java.io.IOException | _: java.io.UncheckedIOException => }
+    }))
+
+  def dir(prefix: String): Path = track(Files.createTempDirectory(prefix))
+
+  def file(prefix: String, suffix: String): Path =
+    track(Files.createTempFile(prefix, suffix))
+
+  private def track(p: Path): Path = { made.add(p); p }
 }
 
 abstract class SparkSpec extends AnyFunSuite {

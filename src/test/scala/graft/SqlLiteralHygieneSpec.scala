@@ -61,6 +61,7 @@ class SqlLiteralHygieneSpec extends AnyFunSuite {
     "pat" -> "regex from the code-level lexicon (TextAnalysis)",
     "src" -> "column-name string chosen in code (Dedup)",
     "stackArgs" -> "stack() args built from code-level rule names (MixPlan)",
+    "Grams.windows" -> "SQL-text window generator; its inputs are a column name and an Int width chosen in code (TextAnalysis CDC boundaries)",
     "winnowFold" -> "SQL-text helper parameterized only by Int w (TextAnalysis)")
 
   test("every expr-site interpolation is allowlisted (corpus strings must ride lit())") {

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
 class IvfLayoutSpec extends SparkSpec {
 
   test("cell-partitioned embedding layout prunes probe scans to probed cells") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-layout").toString
+    val dir = graft.TestDirs.dir("graft-ivf-layout").toString
     val model = KMeans.fit(spark, sf, k = 4, iters = 2)
     val distArr = array(model.centroids.map { case (cid, c) =>
       struct(KMeans.sqDist(col("embedding"), c).as("d"), lit(cid).as("cid"))

@@ -154,7 +154,7 @@ class ModelCacheSpec extends SparkSpec {
     "overwrite of the corpus is a miss, never a stale hit") {
     import spark.implicits._
     ModelCache.invalidate()
-    val path = java.nio.file.Files.createTempDirectory("memo-versions")
+    val path = graft.TestDirs.dir("memo-versions")
       .resolve("corpus.parquet").toString
     def write(ids: Range, mode: String): Unit =
       ids.map(i => (i.toLong, s"text $i")).toDF("doc_id", "text")

@@ -36,7 +36,7 @@ class NearDupLabelStoreSpec extends SparkSpec {
   private val allDocs = batch0 ++ batch1 ++ batch2
 
   private def freshDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-$tag").toString
+    graft.TestDirs.dir(s"graft-$tag").toString
 
   /** Batch-built expectation: the verified pair graph's connected
     * components, min-labeled — computed independently of the store. */

@@ -99,7 +99,7 @@ class PQSpec extends SparkSpec {
     // encode row-locally against them
     val coarse = KMeans.fitOf(emb, Pipeline.IvfCells, Pipeline.IvfIters)
     val books = PQ.fit(emb)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-art").toString
+    val dir = graft.TestDirs.dir("graft-ivfpq-art").toString
     val art = PQ.streamedIndexArtifact(dir, coarse, books)
     // three arrival batches partitioning the corpus by vec_id band
     val n = emb.agg(max("vec_id")).head.getLong(0)

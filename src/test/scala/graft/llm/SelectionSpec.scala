@@ -31,7 +31,7 @@ class SelectionSpec extends SparkSpec {
     // the target uses heavily, cand_unlike uses vocabulary absent
     // from the target. With add-one smoothing the unlike doc's buckets
     // carry weight ~SCALE/B while the like doc's carry the full ratio.
-    val dir = java.nio.file.Files.createTempDirectory("dsir").toString
+    val dir = graft.TestDirs.dir("dsir").toString
     val docs = spark.createDataFrame(Seq(
       (1L, "alpha beta alpha beta alpha beta alpha beta", "en", "src0", 40L),
       (2L, "alpha beta alpha beta alpha beta", "en", "src0", 30L),

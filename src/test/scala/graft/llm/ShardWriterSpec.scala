@@ -2,7 +2,6 @@ package graft.llm
 
 import graft.SparkSpec
 import graft.model.Tables
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 class ShardWriterSpec extends SparkSpec {
@@ -13,7 +12,7 @@ class ShardWriterSpec extends SparkSpec {
       .toSeq
 
   test("training shards: split layout, per-file cap, lossless round-trip") {
-    val out = Files.createTempDirectory("shards").toString
+    val out = graft.TestDirs.dir("shards").toString
     val docs = Tables.documents(spark, sf)
     Pipeline.writeTrainingShards(docs, out, shardRecords = 100)
 
@@ -46,7 +45,7 @@ class ShardWriterSpec extends SparkSpec {
   }
 
   test("rerun reproduces the identical shard layout") {
-    val out = Files.createTempDirectory("shards2").toString
+    val out = graft.TestDirs.dir("shards2").toString
     val docs = Tables.documents(spark, sf)
     def layout(): Map[String, Seq[Long]] = {
       Pipeline.writeTrainingShards(docs, out, shardRecords = 100)

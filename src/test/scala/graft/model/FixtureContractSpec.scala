@@ -24,7 +24,7 @@ class FixtureContractSpec extends SparkSpec {
   private val offsetsUs = Seq(0L, 1L, 61000001L, 86399999999L)
 
   private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(name).toString
+    graft.TestDirs.dir(name).toString
 
   test("Tables.events normalizes ns-Long and µs-NTZ fixtures identically") {
     import spark.implicits._

@@ -12,7 +12,7 @@ class MarkerStoreSpec extends AnyFunSuite {
 
   test("putIfAbsent under contention: one winner, losers see the winner's " +
     "complete bytes, readers never observe a torn marker") {
-    val dir = Files.createTempDirectory("marker-race")
+    val dir = graft.TestDirs.dir("marker-race")
     val threads = 8
     val rounds = 25
     (0 until rounds).foreach { r =>
@@ -59,7 +59,7 @@ class MarkerStoreSpec extends AnyFunSuite {
   }
 
   test("listBatches/deletePrefix retire exactly the requested prefixes") {
-    val dir = Files.createTempDirectory("marker-prune")
+    val dir = graft.TestDirs.dir("marker-prune")
     val store = Fs.PosixMarkerStore
     Seq(0L, 1L, 7L, 12L).foreach { b =>
       val d = dir.resolve(s"b$b").resolve("p0")

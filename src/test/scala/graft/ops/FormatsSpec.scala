@@ -45,7 +45,7 @@ class FormatsSpec extends SparkSpec {
     // negative control: the traps are sharp enough to CATCH a
     // mis-configured reader — the same CSV bytes read without
     // multiLine split every embedded newline into a phantom row
-    val tmp = java.nio.file.Files.createTempDirectory("fmt-neg").toString
+    val tmp = graft.TestDirs.dir("fmt-neg").toString
     val slice = li
       .select((col("l_orderkey") * 10 + col("l_linenumber")).cast("long")
         .as("key"))
@@ -104,7 +104,7 @@ class FormatsSpec extends SparkSpec {
     // that fails to entity-escape — hand-written XML bytes with the
     // bare-markup trap UNescaped either lose content at the phantom
     // element or fail the row entirely; both corrupt the checksums
-    val tmp = java.nio.file.Files.createTempDirectory("xml-neg")
+    val tmp = graft.TestDirs.dir("xml-neg")
     val trap = "a < b & c > d"
     java.nio.file.Files.writeString(tmp.resolve("part-0.xml"),
       "<ROWS><r><key>1</key><s>" + trap + "</s></r>" +

@@ -184,7 +184,7 @@ class GlobalOrderSpec extends SparkSpec {
   }
 
   test("pin honors the reliable-checkpoint escape hatch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = graft.TestDirs.dir("graft-ckpt").toString
     val sc = spark.sparkContext
     val hadDir = sc.getCheckpointDir
     sc.setCheckpointDir(dir)
@@ -214,7 +214,7 @@ class GlobalOrderSpec extends SparkSpec {
     // pin + rank machinery + driver fold) run at sf0.001 in both modes;
     // rows must match exactly (the pin is a materialization boundary,
     // so the failure-story flag may never change results).
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-e2e").toString
+    val dir = graft.TestDirs.dir("graft-ckpt-e2e").toString
     val sc = spark.sparkContext
     val hadDir = sc.getCheckpointDir
     def rows(name: String): Seq[String] =
@@ -319,5 +319,56 @@ class GlobalOrderSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("test sliver") &&
       e.getMessage.contains("sliver bound"))
+  }
+
+  test("a lazy pin read twice by its first job (the q140 union) equals the eager pin") {
+    // q140's pinned (priority, order, start, end) table: a shuffle
+    // join's output, so a recomputed partition may come back in another
+    // row order
+    def orders = {
+      val span = Tables.lineitem(spark, sf).groupBy(col("l_orderkey"))
+        .agg(max(Tables.epochMs(col("l_shipdate"))).as("end_ms"))
+      Tables.orders(spark, sf)
+        .join(span, col("o_orderkey") === col("l_orderkey"))
+        .select(col("o_orderpriority"), col("o_orderkey"),
+          Tables.epochMs(col("o_orderdate")).as("start_ms"), col("end_ms"))
+    }
+    // the +1/-1 union reads `o` twice, the grouped running sum over it
+    def concurrency(o: org.apache.spark.sql.DataFrame) = {
+      val deltas = o.select(col("o_orderpriority"), col("o_orderkey"),
+          col("start_ms").as("ts"), lit(1L).as("delta"))
+        .unionByName(o.select(col("o_orderpriority"), col("o_orderkey"),
+          (col("end_ms") + 1L).as("ts"), lit(-1L).as("delta")))
+      GlobalOrder.groupedRankAndPrefix(deltas,
+          keys = Seq(col("o_orderpriority")),
+          order = Seq(col("ts"), col("delta").desc, col("o_orderkey")),
+          values = Seq((col("delta"), "prefix_delta")))
+        .withColumn("conc", col("prefix_delta") + col("delta"))
+        .groupBy(col("o_orderpriority"))
+        .agg(max(col("conc")).as("max_concurrent"), count(lit(1)).as("n"))
+        .orderBy(col("o_orderpriority"))
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+    }
+    // driver reference: the same sweep over the collected rows
+    val rows = orders.collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    val want = rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (p, os) =>
+      val ev = os.toSeq.flatMap { case (_, k, s, e) => Seq((s, 1L, k), (e + 1L, -1L, k)) }
+        .sortBy { case (ts, d, k) => (ts, -d, k) }
+      (p, ev.scanLeft(0L)(_ + _._2).tail.max, ev.size.toLong)
+    }
+    val eager = concurrency(orders.localCheckpoint(eager = true))
+    assert(eager == want)
+    for (round <- 1 to 3) {
+      val lazyPin = GlobalOrder.pin(orders)
+      val stored = lazyPin.queryExecution.analyzed.collectFirst {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      }.get
+      def cached = spark.sparkContext.getRDDStorageInfo
+        .find(_.id == stored).map(_.numCachedPartitions).getOrElse(0)
+      assert(cached == 0, "the pin must still be lazy before its first job")
+      assert(concurrency(lazyPin) == eager, s"round $round")
+      assert(cached > 0, "the first job stored the pin's blocks")
+    }
   }
 }

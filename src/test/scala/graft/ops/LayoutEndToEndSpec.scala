@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
 class LayoutEndToEndSpec extends SparkSpec {
 
   private def withTempDir[T](f: String => T): T = {
-    val out = java.nio.file.Files.createTempDirectory("graft-layouts")
+    val out = graft.TestDirs.dir("graft-layouts")
     try f(out.toString)
     finally graft.model.Fs.deleteRecursively(out)
   }

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
 class PartitionPruningSpec extends SparkSpec {
 
   test("entity filter prunes partitions of an event_type-partitioned layout") {
-    val dir = Files.createTempDirectory("events_part").toString
+    val dir = graft.TestDirs.dir("events_part").toString
     Tables.events(spark, sf)
       .select(col("event_id"), col("ts_ns"), col("user_id"),
         col("event_type"), col("value"), col("props"))
@@ -44,7 +44,7 @@ class PartitionPruningSpec extends SparkSpec {
     // join key, the dim filter is only known at runtime — Catalyst must
     // inject a DynamicPruning subquery into the fact scan instead of
     // reading every partition
-    val tmp = Files.createTempDirectory("dpp")
+    val tmp = graft.TestDirs.dir("dpp")
     val factDir = tmp.resolve("fact").toString
     val dimDir = tmp.resolve("dim").toString
     Tables.events(spark, sf)

@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.SparkSpec
 import graft.model.Tables
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /**
@@ -14,7 +13,7 @@ import org.apache.spark.sql.functions._
 class SchemaEvolutionSpec extends SparkSpec {
 
   test("mergeSchema read unions old and new file schemas, null-filling old rows") {
-    val dir = Files.createTempDirectory("evolve").toString
+    val dir = graft.TestDirs.dir("evolve").toString
     val ev = Tables.events(spark, sf)
       .select(col("event_id"), col("event_type"), col("value"))
     // epoch 1: three columns

@@ -21,7 +21,7 @@ class CrmPagesSourceSpec extends SparkSpec {
   private lazy val twentyPageDir: Path = writePages("crmpages20", 50)
 
   private def writePages(prefix: String, perPage: Int): Path = {
-    val dir = Files.createTempDirectory(prefix)
+    val dir = graft.TestDirs.dir(prefix)
     val rows = fixtureRows
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val pages = rows.grouped(perPage).toSeq
@@ -214,7 +214,7 @@ class CrmPagesSourceSpec extends SparkSpec {
   test("page-aligned ts filter keeps COUNT(*) complete (containment path)") {
     // dedicated fixture with DISJOINT page ts ranges so a boundary
     // filter can contain whole pages: page i covers [i*1000, i*1000+999]
-    val dir = Files.createTempDirectory("crmdisjoint")
+    val dir = graft.TestDirs.dir("crmdisjoint")
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     (0 until 4).foreach { p =>
       val root = mapper.createObjectNode()
@@ -243,7 +243,7 @@ class CrmPagesSourceSpec extends SparkSpec {
 
   test("null ts_ms rows: excluded by range filters, included by bare COUNT(*)") {
     // one page, three records, one of them without ts_ms
-    val dir = Files.createTempDirectory("crmnullts")
+    val dir = graft.TestDirs.dir("crmnullts")
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = mapper.createObjectNode()
     root.put("total", 3)
@@ -372,7 +372,7 @@ class CrmPagesSourceSpec extends SparkSpec {
   }
 
   test("malformed page degrades to zero rows instead of failing the scan") {
-    val dir = Files.createTempDirectory("crmbad")
+    val dir = graft.TestDirs.dir("crmbad")
     val good = CrmPagesSource.pageChain(pageDir.toString).head
     Files.copy(pageDir.resolve(good), dir.resolve("page-00000.json"))
     Files.writeString(dir.resolve("page-00001.json"), "{\"results\": [{trunca")
@@ -490,7 +490,7 @@ class CrmPagesSourceSpec extends SparkSpec {
   }
 
   test("a malformed page inside a batch page group reads as empty; its neighbours still read") {
-    val dir = Files.createTempDirectory("crmbadgroup")
+    val dir = graft.TestDirs.dir("crmbadgroup")
     val good = CrmPagesSource.pageChain(pageDir.toString).take(2)
     Files.copy(pageDir.resolve(good(0)), dir.resolve("page-00000.json"))
     Files.writeString(dir.resolve("page-00001.json"), "{\"results\": [{trunca")
@@ -503,14 +503,14 @@ class CrmPagesSourceSpec extends SparkSpec {
 
   test("micro-batch stream: page cursor is the offset; new pages arrive incrementally") {
     // dedicated directory: seed with the first 2 pages, then append one
-    val streamDir = Files.createTempDirectory("crmstream")
+    val streamDir = graft.TestDirs.dir("crmstream")
     val all = CrmPagesSource.pageChain(pageDir.toString)
     assert(all.size >= 3, "fixture should produce >=3 pages")
     all.take(2).foreach(p => Files.copy(pageDir.resolve(p), streamDir.resolve(p)))
     val q = spark.readStream.format("graft.sources.CrmPagesSource")
       .load(streamDir.toString)
       .writeStream.format("memory").queryName("crm_stream")
-      .option("checkpointLocation", Files.createTempDirectory("ck").toString)
+      .option("checkpointLocation", graft.TestDirs.dir("ck").toString)
       .start()
     q.processAllAvailable()
     val after2 = spark.table("crm_stream").count()
@@ -525,7 +525,7 @@ class CrmPagesSourceSpec extends SparkSpec {
   test("runtime filtering: a DPP join prunes pages by build-side ts values") {
     // disjoint page ts ranges (page p covers [p*1000, p*1000+999]) so a
     // selective build side can exclude whole pages at runtime
-    val dir = Files.createTempDirectory("crmruntime")
+    val dir = graft.TestDirs.dir("crmruntime")
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     (0 until 4).foreach { p =>
       val root = mapper.createObjectNode()
@@ -549,7 +549,7 @@ class CrmPagesSourceSpec extends SparkSpec {
     // LocalRelation, ConvertToLocalRelation folds the filter away
     // before the pruning rule looks for it.
     import spark.implicits._
-    val dimDir = Files.createTempDirectory("crmdim").toString
+    val dimDir = graft.TestDirs.dir("crmdim").toString
     Seq((1000L, "a"), (1500L, "b"), (9999999L, "z"))
       .toDF("ts_ms", "tag").write.mode("overwrite").parquet(dimDir)
     val dim = spark.read.parquet(dimDir).filter(col("tag").isin("a", "b"))

@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.SparkSpec
-import java.nio.file.Files
 import scala.collection.mutable
 
 /**
@@ -33,7 +32,7 @@ class KinesisSourceSpec extends SparkSpec {
   test("shard reads resume from checkpointed sequences across restart, exactly once") {
     val fake = new FakeKinesis
     KinesisSource.registerClient("fake-restart", fake)
-    val ck = Files.createTempDirectory("kinesis-ck").toString
+    val ck = graft.TestDirs.dir("kinesis-ck").toString
     fake.push("shard-0", "a", "b")
     fake.push("shard-1", "c")
 
@@ -77,7 +76,7 @@ class KinesisSourceSpec extends SparkSpec {
     // micro-batch than any child record.
     val fake = new FakeKinesis
     KinesisSource.registerClient("fake-split", fake)
-    val ck = Files.createTempDirectory("kinesis-split-ck").toString
+    val ck = graft.TestDirs.dir("kinesis-split-ck").toString
 
     val batches = mutable.Buffer.empty[(Long, String, String)] // (batch, shard, value)
     val q = spark.readStream
@@ -269,7 +268,7 @@ class KinesisSourceSpec extends SparkSpec {
     val fake = new FakeKinesis
     KinesisSource.registerClient("fake-e2e-cap", fake)
     fake.push("shard-0", (0 until 300).map(i => s"v$i"): _*)
-    val ck = Files.createTempDirectory("kinesis-cap-ck").toString
+    val ck = graft.TestDirs.dir("kinesis-cap-ck").toString
     val batchSizes = mutable.Buffer.empty[Long]
     val seen = mutable.Buffer.empty[String]
     val q = spark.readStream
@@ -307,7 +306,7 @@ class KinesisSourceSpec extends SparkSpec {
     // is necessarily after prepareForTriggerAvailableNow latched the
     // frontier (the latch only lists shards / reads head sequences)
     KinesisSource.registerClient("fake-avnow", new PostLatchArrivals(fake))
-    val ck = Files.createTempDirectory("kinesis-avnow-ck").toString
+    val ck = graft.TestDirs.dir("kinesis-avnow-ck").toString
     def runAvailableNow(): mutable.Buffer[(Long, String, String, String)] = {
       val got = mutable.Buffer.empty[(Long, String, String, String)]
       val q = spark.readStream
@@ -375,7 +374,7 @@ class KinesisSourceSpec extends SparkSpec {
     val fake = new FakeKinesis
     KinesisSource.registerClient("avnow-eo", fake)
     fake.push("shard-0", (0 until 500).map(i => s"r$i"): _*)
-    val tmp = Files.createTempDirectory("avnow-eo")
+    val tmp = graft.TestDirs.dir("avnow-eo")
     val sink = new ExactlyOnceSink.ExactlyOnceEventSink(
       crashyClient, "s", KinesisSink.Policy(maxBatch = 40, sleep = _ => ()),
       tmp.resolve("ledger").toString)
@@ -435,7 +434,7 @@ class KinesisSourceSpec extends SparkSpec {
     fake.push("shard-p", (0 until 6000).map(i => s"p$i"): _*)
     fake.split("shard-p", "shard-c")
     fake.push("shard-c", (0 until 4000).map(i => s"c$i"): _*)
-    val tmp = Files.createTempDirectory("handoff")
+    val tmp = graft.TestDirs.dir("handoff")
     val sink = new ExactlyOnceSink.ExactlyOnceEventSink(
       crashyClient, "s", KinesisSink.Policy(maxBatch = 1000, sleep = _ => ()),
       tmp.resolve("ledger").toString)
@@ -492,7 +491,7 @@ class KinesisSourceSpec extends SparkSpec {
     "zero batches") {
     val fake = new FakeKinesis
     KinesisSource.registerClient("avnow-empty", fake)
-    val ck = Files.createTempDirectory("avnow-empty-ck").toString
+    val ck = graft.TestDirs.dir("avnow-empty-ck").toString
     val got = mutable.Buffer.empty[String]
     val q = spark.readStream
       .format("graft.sources.KinesisSource")
@@ -522,7 +521,7 @@ class KinesisSourceSpec extends SparkSpec {
     val fake = new FakeKinesis
     KinesisSource.registerClient("avnow-minrows", fake)
     fake.push("shard-0", (0 until 95).map(i => s"m$i"): _*)
-    val ck = Files.createTempDirectory("avnow-minrows-ck").toString
+    val ck = graft.TestDirs.dir("avnow-minrows-ck").toString
     val got = mutable.Buffer.empty[String]
     val q = spark.readStream
       .format("graft.sources.KinesisSource")
@@ -604,7 +603,7 @@ class KinesisSourceSpec extends SparkSpec {
   test("lag metrics surface in real StreamingQueryProgress reports") {
     val fake = new FakeKinesis
     KinesisSource.registerClient("fake-progress", fake)
-    val ck = Files.createTempDirectory("kinesis-ck-progress").toString
+    val ck = graft.TestDirs.dir("kinesis-ck-progress").toString
     fake.push("shard-0", "x1", "x2", "x3")
     val got = mutable.Buffer.empty[(String, String, String)]
     val q = collectStream("fake-progress", ck, got)

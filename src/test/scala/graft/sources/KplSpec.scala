@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.SparkSpec
-import java.nio.file.Files
 import scala.collection.mutable
 
 class KplSpec extends SparkSpec {
@@ -127,7 +126,7 @@ class KplSpec extends SparkSpec {
     // most ceil(125/16)×2 = 16 Kinesis records
     val blobs = fake.shardSize("shard-0")
     assert(blobs <= 16 && blobs >= 2, s"got $blobs kinesis records")
-    val ck = Files.createTempDirectory("kpl-loop-ck").toString
+    val ck = graft.TestDirs.dir("kpl-loop-ck").toString
     val got = mutable.Buffer.empty[String]
     val q = spark.readStream
       .format("graft.sources.KinesisSource")
@@ -167,7 +166,7 @@ class KplSpec extends SparkSpec {
         Kpl.UserRecord(s"k$a", rec(a * perAgg + j).getBytes("UTF-8")))))
     }
     (aggCount * perAgg until 250).foreach(i => fake.push("shard-0", rec(i)))
-    val tmp = Files.createTempDirectory("kpl-eo")
+    val tmp = graft.TestDirs.dir("kpl-eo")
     val sink = new ExactlyOnceSink.ExactlyOnceEventSink(
       crashyClient, "s", KinesisSink.Policy(maxBatch = 60, sleep = _ => ()),
       tmp.resolve("ledger").toString)
@@ -218,7 +217,7 @@ class KplSpec extends SparkSpec {
     fake.pushRaw("shard-0", "plain-before".getBytes("UTF-8"))
     fake.pushRaw("shard-0", blob)
     fake.pushRaw("shard-0", "plain-after".getBytes("UTF-8"))
-    val ck = Files.createTempDirectory("kpl-ck").toString
+    val ck = graft.TestDirs.dir("kpl-ck").toString
     val got = mutable.Buffer.empty[(String, String)]
     val q = spark.readStream
       .format("graft.sources.KinesisSource")

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 class ArtifactMaintenanceSpec extends SparkSpec {
 
   private def freshDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-$tag").toString
+    graft.TestDirs.dir(s"graft-$tag").toString
 
   private def counts(artifact: String): Map[(String, String), Long] =
     ArtifactMaintenance.lmCounts(spark, artifact)

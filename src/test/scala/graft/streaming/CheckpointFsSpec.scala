@@ -43,7 +43,7 @@ class CheckpointFsSpec extends SparkSpec {
   test("file and link status match stock RawLocalFileSystem field by field") {
     val stock = rawFs(new RawLocalFileSystem)
     val nio = rawFs(new NioRawLocalFileSystem)
-    val root = Files.createTempDirectory("ckfs-status")
+    val root = graft.TestDirs.dir("ckfs-status")
     val file = Files.write(root.resolve("file"), "abc".getBytes)
     val dir = Files.createDirectory(root.resolve("dir"))
     val sticky = Files.createDirectory(root.resolve("sticky"))
@@ -77,7 +77,7 @@ class CheckpointFsSpec extends SparkSpec {
       conf.set(ImplKey, impl)
       conf.set("fs.permissions.umask-mode", umask)
       val fc = FileContext.getFileContext(URI.create("file:///"), conf)
-      val root = Files.createTempDirectory("ckfs-perm")
+      val root = graft.TestDirs.dir("ckfs-perm")
       val at = (rel: String) => new Path(root.resolve(rel).toUri)
       fc.mkdir(at("a/b"), FsPermission.getDirDefault, true)
       val out = fc.create(at("a/b/.0.tmp"), EnumSet.of(CreateFlag.CREATE))
@@ -132,7 +132,7 @@ class CheckpointFsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val afterFirst = for ((first, second) <- Seq(Nio -> Stock, Stock -> Nio)) yield {
       val input = MemoryStream[TestEvent]
-      val ck = Files.createTempDirectory("ckfs-restart").toString
+      val ck = graft.TestDirs.dir("ckfs-restart").toString
       input.addData(TestEvent(1, ts(0), "a", 1, "{}"), TestEvent(2, ts(1), "a", 2, "{}"),
         TestEvent(1, ts(2), "a", 1, "{}"), TestEvent(3, ts(3), "a", 3, "{}"))
       val run1 = runUnder(first, input, ck)
@@ -155,7 +155,7 @@ class CheckpointFsSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[TestEvent]
-    val ck = Files.createTempDirectory("ckfs-corrupt").toString
+    val ck = graft.TestDirs.dir("ckfs-corrupt").toString
     input.addData(TestEvent(1, ts(0), "a", 1, "{}"))
     assert(runUnder(Nio, input, ck) == Seq(1L))
     val offsets = Paths.get(ck, "offsets")
@@ -189,7 +189,7 @@ class CheckpointFsSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val docs = MemoryStream[(Long, String)].toDF().toDF("doc_id", "text")
-    val dir = Files.createTempDirectory("ckfs-maintain").toString
+    val dir = graft.TestDirs.dir("ckfs-maintain").toString
     val had = spark.conf.getOption(ImplKey)
     try {
       for (writer <- Seq[() => Any](

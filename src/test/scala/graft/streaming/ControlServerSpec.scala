@@ -32,7 +32,7 @@ class ControlServerSpec extends SparkSpec {
     val fake = new graft.sources.FakeKinesis
     graft.sources.KinesisSource.registerClient("ctl-backfill", fake)
     fake.push("shard-0", (0 until 120).map(i => s"v$i"): _*)
-    val tmp = Files.createTempDirectory("ctl-backfill")
+    val tmp = graft.TestDirs.dir("ctl-backfill")
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val launcher: String => Boolean = {
       case "backfill_job" =>
@@ -83,7 +83,7 @@ class ControlServerSpec extends SparkSpec {
   }
 
   test("control plane serves start/check/stop/health over HTTP with auth") {
-    val tmp = Files.createTempDirectory("ctlsrv")
+    val tmp = graft.TestDirs.dir("ctlsrv")
     val srcDir = Files.createDirectory(tmp.resolve("in"))
     Files.copy(Paths.get(s"$sf/events.parquet"),
       srcDir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
@@ -176,7 +176,7 @@ class ControlServerSpec extends SparkSpec {
     val fake = new graft.sources.FakeKinesis
     graft.sources.KinesisSource.registerClient("ctl-lag", fake)
     fake.push("shard-0", "r1", "r2", "r3")
-    val ck = Files.createTempDirectory("ctl-lag-ck").toString
+    val ck = graft.TestDirs.dir("ctl-lag-ck").toString
     val launcher: String => Boolean = {
       case "lag_job" =>
         spark.readStream
@@ -224,7 +224,7 @@ class ControlServerSpec extends SparkSpec {
     val fake = new graft.sources.FakeKinesis
     graft.sources.KinesisSource.registerClient("ctl-contract", fake)
     fake.push("shard-0", "r1")
-    val ck = Files.createTempDirectory("ctl-contract-ck").toString
+    val ck = graft.TestDirs.dir("ctl-contract-ck").toString
     val launcher: String => Boolean = {
       case "live_job" =>
         spark.readStream

@@ -59,9 +59,9 @@ class CrmPagesIngestSpec extends SparkSpec {
   test("a truncated page fails its micro-batch naming the page; repaired, " +
     "the restart delivers every record exactly once") {
     CrmIngestAcks.acks.clear()
-    val dir = Files.createTempDirectory("crm-ingest-bad")
-    val ck = Files.createTempDirectory("crm-ingest-bad-ck")
-    val ledger = Files.createTempDirectory("crm-ingest-bad-ledger")
+    val dir = graft.TestDirs.dir("crm-ingest-bad")
+    val ck = graft.TestDirs.dir("crm-ingest-bad-ck")
+    val ledger = graft.TestDirs.dir("crm-ingest-bad-ledger")
     (0 until 2).foreach(p => writePage(dir, p, pageJson(p)))
     ingest(dir, ck, ledger)
     assertExactlyOnce(0 until 2 * perPage)
@@ -80,9 +80,9 @@ class CrmPagesIngestSpec extends SparkSpec {
   test("exactly-once across regrouping: a batch crashed after an ack on one " +
     "read task replays on four without divergence or loss") {
     CrmIngestAcks.acks.clear()
-    val dir = Files.createTempDirectory("crm-ingest-regroup")
-    val ck = Files.createTempDirectory("crm-ingest-regroup-ck")
-    val ledger = Files.createTempDirectory("crm-ingest-regroup-ledger")
+    val dir = graft.TestDirs.dir("crm-ingest-regroup")
+    val ck = graft.TestDirs.dir("crm-ingest-regroup-ck")
+    val ledger = graft.TestDirs.dir("crm-ingest-regroup-ledger")
     val pages = 20
     (0 until pages).foreach(p => writePage(dir, p, pageJson(p)))
     val key = "spark.sql.files.minPartitionNum"

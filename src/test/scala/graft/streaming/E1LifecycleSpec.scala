@@ -4,7 +4,6 @@ import graft.SparkSpec
 import graft.sources.KinesisSource
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.nio.file.Files
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -89,7 +88,7 @@ class E1LifecycleSpec extends SparkSpec {
     val fake = new FakeKinesis
     KinesisSource.registerClient("e1-src", fake)
     E1Recorder.clear()
-    val ckRoot = Files.createTempDirectory("e1-ck").toString
+    val ckRoot = graft.TestDirs.dir("e1-ck").toString
     val source = new KinesisEventSource("crm_feed", "e1-src")
     val sinkClient = new RecordingKinesisClient
 

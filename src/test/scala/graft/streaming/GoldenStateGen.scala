@@ -30,7 +30,7 @@ object GoldenStateGen {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("golden-wh").toString)
+        graft.TestDirs.dir("golden-wh").toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

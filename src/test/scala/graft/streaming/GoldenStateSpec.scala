@@ -25,7 +25,7 @@ class GoldenStateSpec extends SparkSpec {
     assert(Files.exists(src), s"golden fixture missing: $src — run " +
       "sbt 'Test/runMain graft.streaming.GoldenStateGen' ONLY for a " +
       "deliberate format migration")
-    val dst = Files.createTempDirectory(s"golden-$sub-")
+    val dst = graft.TestDirs.dir(s"golden-$sub-")
     val walk = Files.walk(src)
     try walk.forEach { p =>
       val t = dst.resolve(src.relativize(p).toString)

@@ -26,7 +26,7 @@ class MicroBatchSpec extends SparkSpec {
       input.toDF(), properties = Seq("value", "props"))
     val q = piped.writeStream.format("memory").queryName("dedup_out")
       .outputMode("append").option("checkpointLocation",
-        Files.createTempDirectory("ck").toString)
+        graft.TestDirs.dir("ck").toString)
       .start()
     q.processAllAvailable()
     // a late second batch far in the future closes all dedup state
@@ -48,7 +48,7 @@ class MicroBatchSpec extends SparkSpec {
     val q = MicroBatch.windowedCounts(input.toDF(), windowLen = "1 minute")
       .writeStream.format("memory").queryName("win_out")
       .outputMode("append").option("checkpointLocation",
-        Files.createTempDirectory("ck").toString)
+        graft.TestDirs.dir("ck").toString)
       .start()
     q.processAllAvailable()
     // watermark-advancing event closes the earlier windows
@@ -62,7 +62,7 @@ class MicroBatchSpec extends SparkSpec {
   }
 
   test("restart from checkpoint resumes offsets: no reprocessing, new data flows") {
-    val tmp = Files.createTempDirectory("restart")
+    val tmp = graft.TestDirs.dir("restart")
     val srcDir = Files.createDirectory(tmp.resolve("in"))
     val ckpt = tmp.resolve("ck").toString
     val outDir = tmp.resolve("out").toString
@@ -94,7 +94,7 @@ class MicroBatchSpec extends SparkSpec {
         raw.withColumn("ts", expr("ts + cast(40 as bigint) * 86400 * 1000000000"))
       else
         raw.withColumn("ts", expr("ts + INTERVAL 40 DAYS"))
-    val stage = Files.createTempDirectory("stage")
+    val stage = graft.TestDirs.dir("stage")
     shifted.coalesce(1).write.mode("overwrite").parquet(stage.toString)
     val part = Files.list(stage).filter(_.toString.endsWith(".parquet")).findFirst.get
     Files.copy(part, srcDir.resolve("part2.parquet"), StandardCopyOption.REPLACE_EXISTING)
@@ -104,7 +104,7 @@ class MicroBatchSpec extends SparkSpec {
   }
 
   test("file-source fan-out writes per-entity sinks with checkpointed offsets") {
-    val tmp = Files.createTempDirectory("fanout")
+    val tmp = graft.TestDirs.dir("fanout")
     // file stream sources consume directories: stage the fixture file
     val srcDir = Files.createDirectory(tmp.resolve("events"))
     Files.copy(Paths.get(s"$sf/events.parquet"),

@@ -126,7 +126,7 @@ class SinksAndControlSpec extends SparkSpec {
   test("metrics listener accumulates per-query batch and row counts") {
     val l = JobControl.attachMetrics(spark)
     try {
-      val tmp = Files.createTempDirectory("metrics")
+      val tmp = graft.TestDirs.dir("metrics")
       val srcDir = Files.createDirectory(tmp.resolve("in"))
       Files.copy(Paths.get(s"$sf/events.parquet"),
         srcDir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
@@ -149,7 +149,7 @@ class SinksAndControlSpec extends SparkSpec {
   }
 
   test("job control reports, inspects and stops a named query") {
-    val tmp = Files.createTempDirectory("jobctl")
+    val tmp = graft.TestDirs.dir("jobctl")
     val srcDir = Files.createDirectory(tmp.resolve("in"))
     Files.copy(Paths.get(s"$sf/events.parquet"),
       srcDir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
@@ -196,7 +196,7 @@ class SinksAndControlSpec extends SparkSpec {
     "acked exactly once") {
     import ExactlyOnceLedger._
     acks.clear(); calls.set(0); failOnCall.set(2)
-    val ledger = Files.createTempDirectory("graft-eo-ledger").toString
+    val ledger = graft.TestDirs.dir("graft-eo-ledger").toString
     val df = spark.range(0, 10).selectExpr("id", "id * 2 AS v")
       .coalesce(1).toDF()
     val policy = KinesisSink.Policy(maxBatch = 4, sleep = _ => ())
@@ -221,7 +221,7 @@ class SinksAndControlSpec extends SparkSpec {
   test("exactly-once sink refuses a replay that diverges from acked chunks") {
     import ExactlyOnceLedger._
     acks.clear(); calls.set(0); failOnCall.set(Int.MaxValue)
-    val ledger = Files.createTempDirectory("graft-eo-ledger2").toString
+    val ledger = graft.TestDirs.dir("graft-eo-ledger2").toString
     val policy = KinesisSink.Policy(maxBatch = 4, sleep = _ => ())
     val df = spark.range(0, 4).coalesce(1).toDF()
     ExactlyOnceSink.write(crashyClient, "s", policy, ledger)(df, 1L)
@@ -251,7 +251,7 @@ class SinksAndControlSpec extends SparkSpec {
     // actual crash surface)
     failOnCall.set(Int.MaxValue); acks.clear(); calls.set(0)
     val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val dry = Files.createTempDirectory("eo-dry").toString
+    val dry = graft.TestDirs.dir("eo-dry").toString
     try {
       ExactlyOnceSink.crashPoint = l => { labels.add(l); () }
       ExactlyOnceSink.write(crashyClient, "s", policy, dry)(df, 1L)
@@ -262,7 +262,7 @@ class SinksAndControlSpec extends SparkSpec {
         s"crash surface drifted: ${labels.asScala.toList}")
       labels.asScala.toList.foreach { boundary =>
         acks.clear(); calls.set(0)
-        val ledger = Files.createTempDirectory("eo-enum").toString
+        val ledger = graft.TestDirs.dir("eo-enum").toString
         ExactlyOnceSink.crashPoint =
           l => if (l == boundary) throw new RuntimeException(s"died at $l")
         intercept[org.apache.spark.SparkException] {
@@ -292,7 +292,7 @@ class SinksAndControlSpec extends SparkSpec {
   test("exactly-once ledger prunes batches at or below the committed watermark") {
     import ExactlyOnceLedger._
     acks.clear(); calls.set(0); failOnCall.set(Int.MaxValue)
-    val ledger = Files.createTempDirectory("graft-eo-ledger3").toString
+    val ledger = graft.TestDirs.dir("graft-eo-ledger3").toString
     val policy = KinesisSink.Policy(sleep = _ => ())
     val df = spark.range(0, 3).coalesce(1).toDF()
     Seq(0L, 1L, 2L).foreach(b =>
@@ -308,7 +308,7 @@ class SinksAndControlSpec extends SparkSpec {
     "checkpoint batch dedups through the ledger") {
     import ExactlyOnceLedger._
     acks.clear(); calls.set(0)
-    val tmp = Files.createTempDirectory("eo-e2e")
+    val tmp = graft.TestDirs.dir("eo-e2e")
     val srcDir = Files.createDirectory(tmp.resolve("in"))
     Files.copy(Paths.get(s"$sf/events.parquet"),
       srcDir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
@@ -398,7 +398,7 @@ class SinksAndControlSpec extends SparkSpec {
     "losing attempt verifies the winner's identical marker (speculation race)") {
     import ExactlyOnceLedger._
     acks.clear(); calls.set(0); failOnCall.set(Int.MaxValue)
-    val ledger = Files.createTempDirectory("eo-race").toString
+    val ledger = graft.TestDirs.dir("eo-race").toString
     val policy = KinesisSink.Policy(maxBatch = 10, sleep = _ => ())
     val rows = (0 until 4).map(i => s"""{"id":$i}""")
     // deterministic interleave at the widest race: attempt A passes the
@@ -446,7 +446,7 @@ class SinksAndControlSpec extends SparkSpec {
     "conditional-put MarkerStore gives the same crash/restart exactly-once") {
     import ExactlyOnceLedger._
     acks.clear(); calls.set(0); failOnCall.set(2)
-    val ledger = Files.createTempDirectory("eo-s3").toString
+    val ledger = graft.TestDirs.dir("eo-s3").toString
     ConditionalPutStore.blobs.clear()
     val df = spark.range(0, 10).selectExpr("id", "id * 2 AS v")
       .coalesce(1).toDF()
@@ -488,7 +488,7 @@ class SinksAndControlSpec extends SparkSpec {
   test("the event-sink adapter retires old ledgers as batches commit") {
     import ExactlyOnceLedger._
     acks.clear(); calls.set(0); failOnCall.set(Int.MaxValue)
-    val ledger = Files.createTempDirectory("graft-eo-ledger4").toString
+    val ledger = graft.TestDirs.dir("graft-eo-ledger4").toString
     val sink = new ExactlyOnceSink.ExactlyOnceEventSink(
       crashyClient, "s", KinesisSink.Policy(sleep = _ => ()), ledger,
       retainBatches = 2)

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.model.Tables
-import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -24,7 +23,7 @@ class StatefulOpsSpec extends SparkSpec {
     val q = StatefulOps.sessionize(input.toDS())
       .writeStream.format("memory").queryName("sess_out")
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ck").toString)
+      .option("checkpointLocation", graft.TestDirs.dir("ck").toString)
       .start()
     q.processAllAvailable(); q.stop()
     val closed = spark.table("sess_out").as[StatefulOps.SessionOutput]
@@ -45,7 +44,7 @@ class StatefulOpsSpec extends SparkSpec {
       input.toDF().toDF("doc_id", "text", "ts"), cap = 3)
       .writeStream.format("memory").queryName("lsh_out")
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ck").toString)
+      .option("checkpointLocation", graft.TestDirs.dir("ck").toString)
       .start()
     val dup = "the quick brown fox jumps over the lazy dog"
     // batch 1: two identical docs + one unrelated
@@ -109,7 +108,7 @@ class StatefulOpsSpec extends SparkSpec {
         threshold = threshold)
         .writeStream.format("memory").queryName(name)
         .outputMode("append")
-        .option("checkpointLocation", Files.createTempDirectory("ck").toString)
+        .option("checkpointLocation", graft.TestDirs.dir("ck").toString)
         .start()
       batches.foreach { b =>
         input.addData(b.map(i => ("a", i.toLong, values(i), ts(i))))
@@ -145,7 +144,7 @@ class StatefulOpsSpec extends SparkSpec {
       threshold = threshold, maxPending = cap)
       .writeStream.format("memory").queryName("z_flood")
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ck").toString)
+      .option("checkpointLocation", graft.TestDirs.dir("ck").toString)
       .start()
     // one large batch on a single key while the watermark is still at
     // its initial floor — the stalled-watermark flood the cap guards
@@ -194,7 +193,7 @@ class StatefulOpsSpec extends SparkSpec {
       idleTtlMs = 30 * 1000L)
     val q = joined.writeStream.format("memory").queryName("asof_out")
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ck").toString)
+      .option("checkpointLocation", graft.TestDirs.dir("ck").toString)
       .start()
     // batch 1: version A@t0, event e1@t5 — watermark too low to emit
     updates.addData((1L, ts(0), "A"))
@@ -246,7 +245,7 @@ class StatefulOpsSpec extends SparkSpec {
       events, Tables.customer(spark, sf))
     val q = enriched.writeStream.format("memory").queryName("enrich_out")
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ck").toString)
+      .option("checkpointLocation", graft.TestDirs.dir("ck").toString)
       .start()
     q.processAllAvailable(); q.stop()
     val rows = spark.table("enrich_out").collect()
@@ -273,7 +272,7 @@ class StatefulOpsSpec extends SparkSpec {
       purchases.toDF().toDF("user_id", "ts", "event_id", "value"))
     val q = funnel.writeStream.format("memory").queryName("funnel_out")
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ck").toString)
+      .option("checkpointLocation", graft.TestDirs.dir("ck").toString)
       .start()
     q.processAllAvailable(); q.stop()
     val rows = spark.table("funnel_out")
@@ -293,7 +292,7 @@ class StatefulOpsSpec extends SparkSpec {
       joinType = "left_outer")
     val q = funnel.writeStream.format("memory").queryName("funnel_outer")
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ck").toString)
+      .option("checkpointLocation", graft.TestDirs.dir("ck").toString)
       .start()
     // batch 1: user 1 converts inside the hour; user 3 never converts
     signups.addData((1L, ts(0), 10L), (3L, ts(0), 30L))
@@ -336,7 +335,7 @@ class StatefulOpsSpec extends SparkSpec {
       joinType = "left_outer")
     val q = funnel.writeStream.format("memory").queryName("funnel_late")
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ck").toString)
+      .option("checkpointLocation", graft.TestDirs.dir("ck").toString)
       .start()
     signups.addData((7L, ts(0), 70L))
     q.processAllAvailable()
