@@ -22,19 +22,12 @@ class SessionSpec extends SparkSpec {
   }
 
   test("SparkSession.builder() appears exactly once under src/main") {
-    val root = java.nio.file.Paths.get("src/main/scala")
-    val walk = java.nio.file.Files.walk(root)
-    val files = try {
-      val it = walk.iterator()
-      val b = List.newBuilder[java.nio.file.Path]
-      while (it.hasNext) { val p = it.next(); if (p.toString.endsWith(".scala")) b += p }
-      b.result()
-    } finally walk.close()
+    val files = MainSources.files
     assert(files.size > 50, s"source walk found only ${files.size} files")
     val builder = java.util.regex.Pattern.quote("SparkSession.builder()").r
     val hits = files.flatMap { p =>
       val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-      Seq.fill(builder.findAllMatchIn(txt).size)(root.relativize(p).toString)
+      Seq.fill(builder.findAllMatchIn(txt).size)(MainSources.root.relativize(p).toString)
     }
     assert(hits == Seq("graft/Session.scala"), s"builders: $hits")
   }

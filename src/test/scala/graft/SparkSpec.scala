@@ -49,6 +49,22 @@ object TestDirs {
   private def track(p: Path): Path = { made.add(p); p }
 }
 
+/** The `.scala` files under `src/main/scala`, for specs that scan the
+  * source (run from the repo root). */
+object MainSources {
+  val root: Path = java.nio.file.Paths.get("src/main/scala")
+
+  def files: List[Path] = {
+    val walk = Files.walk(root)
+    try {
+      val it = walk.iterator()
+      val b = List.newBuilder[Path]
+      while (it.hasNext) { val p = it.next(); if (p.toString.endsWith(".scala")) b += p }
+      b.result()
+    } finally walk.close()
+  }
+}
+
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sf: String = TestSpark.sf

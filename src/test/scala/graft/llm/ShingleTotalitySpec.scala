@@ -109,14 +109,7 @@ class ShingleTotalitySpec extends SparkSpec {
   }
 
   test("no word-window sequence(…) enumeration under src/main outside Grams") {
-    val root = java.nio.file.Paths.get("src/main/scala")
-    val walk = java.nio.file.Files.walk(root)
-    val files = try {
-      val it = walk.iterator()
-      val b = List.newBuilder[java.nio.file.Path]
-      while (it.hasNext) { val p = it.next(); if (p.toString.endsWith(".scala")) b += p }
-      b.result()
-    } finally walk.close()
+    val files = graft.MainSources.files
     assert(files.size > 50, s"source walk found only ${files.size} files")
     // sequence(1, size(ws) - k) or sequence(k, size(ws)) for k > 1, in
     // SQL text or the Column API (lit(1), size(col("ws"))), clamped
@@ -133,7 +126,7 @@ class ShingleTotalitySpec extends SparkSpec {
         // source set: not a window over tokens
         txt.substring(m.end, math.min(txt.length, m.end + 120))
           .contains("sequence(i + 1, size(")
-      }.map(m => s"${root.relativize(p)}: ${m.matched}")
+      }.map(m => s"${graft.MainSources.root.relativize(p)}: ${m.matched}")
     }
     assert(hits.isEmpty, s"hand-built word windows: $hits")
   }
