@@ -1,8 +1,14 @@
 package graft.ops
 
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DecimalType, LongType}
+import org.apache.spark.sql.types.{DataType, DecimalType, LongType, StructType}
 
 /**
  * Distributed global ranking and prefix sums — the scale-safe
@@ -658,32 +664,40 @@ object GlobalOrder {
   }
 
   /**
-   * Exact linear-interpolation quantiles per key via grouped global
-   * ranks — the scale-safe replacement for `percentile()`, whose
-   * TypedImperativeAggregate ships EVERY group value into
-   * key-cardinality reducer tasks and sorts there (the few-key
-   * parallelism ceiling). Here [[groupedRankAndPrefix]]
-   * range-partitions (key, value) so every core ranks a slice, and
-   * only the ≤2 boundary rows per (group, quantile) reach the final
-   * aggregate.
+   * Exact linear-interpolation quantiles per key — the scale-safe
+   * replacement for `percentile()`, whose TypedImperativeAggregate
+   * ships EVERY group value into key-cardinality reducer tasks and
+   * sorts there (the few-key parallelism ceiling). Here one range sort
+   * on (key, value) spreads every key over all cores, and only the ≤2
+   * boundary rows per (key, quantile) ever reach the driver:
+   *  1. range-repartition on (keys, value ASC NULLS LAST), sort within,
+   *     [[pin]] (both passes below must read the same partition
+   *     contents — the class doc);
+   *  2. one local walk over the pinned rows returns, per (partition,
+   *     key) segment, its first row index and its non-null count —
+   *     ≤ `distinctKeys + partitions − 1` segments, guarded by
+   *     `graft.groupedOrder.maxSegments` before anything is kept;
+   *  3. the driver sums each key's non-null count N and maps ranks
+   *     `lo = floor(1 + p·(N−1))` and `lo + 1` to (partition, row
+   *     index): nulls sort last within a key, so a segment's non-null
+   *     rows are its first ones;
+   *  4. one job over only the partitions holding wanted rows reads
+   *     those ≤ 2·|ps|·keys values back.
+   * The result is a LocalRelation built on the driver: consuming it
+   * launches no job.
    *
    * Interpolation is `v_lo·(1−frac) + v_hi·frac` — DuckDB
    * quantile_cont's IEEE shape exactly; the algebraically-equal
    * `v_lo + (v_hi−v_lo)·frac` differs in the last ulp on
    * non-representable doubles and breaks oracle hash-matching
-   * (measured on q45).
+   * (measured on q45). The arithmetic stays a Catalyst projection over
+   * the picked rows.
    *
-   * NULL values of `valueCol` are excluded up front: quantile_cont
-   * (and Spark `percentile`) interpolate over the NON-NULL multiset,
-   * while the rank machinery would otherwise count nulls in
-   * `g_total_rows` and sort them first, shifting every boundary row.
-   * Keys whose values are ALL null still appear in the output with
-   * NULL quantiles — a GROUP BY keeps the key and quantile_cont
-   * returns NULL over an empty multiset, so dropping the row would
-   * break oracle row counts on a fixture regeneration that emits such
-   * a group. That guarantee costs one extra key-distinct aggregate
-   * over the input (cheap next to the range sort) joined back against
-   * the boundary rows (both sides are key-cardinality by then).
+   * NULL values of `valueCol` are not counted: quantile_cont (and
+   * Spark `percentile`) interpolate over the NON-NULL multiset. Every
+   * key keeps its row — a NULL key is a group like any other, and a
+   * key whose values are ALL null has N = 0 and gets NULL quantiles,
+   * as a GROUP BY over quantile_cont does.
    *
    * @param ps (output column name, fraction in [0,1]) per quantile
    * @return one row per key: key columns ++ one double per quantile
@@ -693,20 +707,102 @@ object GlobalOrder {
       keyCols: Seq[String],
       valueCol: String,
       ps: Seq[(String, Double)]): DataFrame = {
-    val ranked = groupedRankAndPrefix(
-      df.select((keyCols :+ valueCol).map(col): _*)
-        .filter(col(valueCol).isNotNull),
-      keys = keyCols.map(col),
-      order = Seq(col(valueCol)))
-    def lo(p: Double) = floor(lit(1.0) +
-      lit(p) * (col("g_total_rows") - 1L).cast("double")).cast("long")
-    val aggs = count(lit(1)).as("__n") +: ps.flatMap { case (nm, p) =>
-      Seq(
-        max(when(col("g_rank") === lo(p), col(valueCol))).as(s"__lo_$nm"),
-        max(when(col("g_rank") === lo(p) + 1L, col(valueCol))).as(s"__hi_$nm"))
+    val spark = df.sparkSession
+    val sc = spark.sparkContext
+    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val order = keyCols.map(col) :+ col(valueCol).asc_nulls_last
+    val sorted = pin(df.select((keyCols :+ valueCol).map(col): _*)
+      .repartitionByRange(parts, order: _*)
+      .sortWithinPartitions(order: _*))
+    val nk = keyCols.size
+    val keySchema = StructType(sorted.schema.fields.take(nk))
+    val vType = sorted.schema(nk).dataType
+    val keyRefs = keySchema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+      BoundReference(i, f.dataType, f.nullable)
     }
-    val quantiles = ranked
-      .groupBy(keyCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    val rows = sorted.queryExecution.toRdd
+    val maxSegs = spark.conf
+      .get("graft.groupedOrder.maxSegments", (1 << 20).toString).toInt
+    // the walk: (key, first row index, non-null count) per segment, in
+    // row order. A task stops at maxSegs + 1 segments and the handler
+    // keeps nothing past the bound, so the guard binds before the
+    // segments pile up on the driver
+    val segs = ArrayBuffer.empty[(Int, UnsafeRow, Long, Long)]
+    sc.runJob(rows, (it: Iterator[InternalRow]) => {
+      val keyOf = UnsafeProjection.create(keyRefs)
+      val out = ArrayBuffer.empty[(UnsafeRow, Long, Long)]
+      var cur: UnsafeRow = null
+      var first, nonNull, i = 0L
+      while (it.hasNext && out.length <= maxSegs) {
+        val r = it.next()
+        val k = keyOf(r)
+        if (cur == null || k != cur) {
+          if (cur != null) out += ((cur, first, nonNull))
+          cur = k.copy(); first = i; nonNull = 0L
+        }
+        if (!r.isNullAt(nk)) nonNull += 1
+        i += 1
+      }
+      if (cur != null) out += ((cur, first, nonNull))
+      out.toArray
+    }, (pid: Int, got: Array[(UnsafeRow, Long, Long)]) =>
+      if (segs.length <= maxSegs) got.foreach { case (k, f, n) => segs += ((pid, k, f, n)) })
+    require(segs.length <= maxSegs,
+      s"groupedQuantiles saw more than $maxSegs (partition, key) " +
+        "segments: key cardinality is large enough that a plain " +
+        "per-key aggregate already parallelizes — use that instead, or " +
+        "raise graft.groupedOrder.maxSegments")
+    // per key, in partition order: N and the (partition, row index) of
+    // ranks lo and lo + 1 per quantile (None past N)
+    val perKey = segs.groupBy(_._2).values.toSeq.map { ss =>
+      val inOrder = ss.sortBy(_._1)
+      val before = inOrder.scanLeft(0L)(_ + _._4)
+      val n = before.last
+      def at(rank: Long): Option[(Int, Long)] =
+        if (rank < 1 || rank > n) None
+        else {
+          val s = before.lastIndexWhere(_ < rank)
+          Some((inOrder(s)._1, inOrder(s)._3 + rank - before(s) - 1))
+        }
+      val bounds = ps.flatMap { case (_, p) =>
+        val lo = math.floor(1.0 + p * (n - 1).toDouble).toLong
+        Seq(at(lo), at(lo + 1))
+      }
+      (inOrder.head._2, n, bounds)
+    }
+    val wanted = perKey.flatMap(_._3.flatten).groupBy(_._1).map {
+      case (pid, at) => pid -> at.map(_._2).distinct.sorted.toArray
+    }
+    // the pick: one job over the partitions that hold wanted rows
+    val pids = wanted.keys.toSeq.sorted
+    val picked: Map[(Int, Long), Any] =
+      if (pids.isEmpty) Map.empty
+      else pids.zip(sc.runJob(rows, (ctx: TaskContext, it: Iterator[InternalRow]) => {
+        val want = wanted(ctx.partitionId())
+        val got = new Array[Any](want.length)
+        var i = 0L
+        var j = 0
+        while (j < want.length && it.hasNext) {
+          val r = it.next()
+          if (i == want(j)) {
+            got(j) = CatalystTypeConverters.convertToScala(r.get(nk, vType), vType)
+            j += 1
+          }
+          i += 1
+        }
+        want.zip(got)
+      }, pids)).flatMap { case (pid, got) =>
+        got.map { case (i, v) => (pid, i) -> v }
+      }.toMap
+    val keyToRow = CatalystTypeConverters.createToScalaConverter(keySchema)
+    val table = perKey.map { case (k, n, bounds) =>
+      Row.fromSeq(keyToRow(k).asInstanceOf[Row].toSeq ++
+        (n +: bounds.map(_.map(picked).orNull)))
+    }
+    val tableSchema = ps.foldLeft(keySchema.add("__n", LongType, nullable = false)) {
+      case (st, (nm, _)) => st.add(s"__lo_$nm", vType).add(s"__hi_$nm", vType)
+    }
+    spark.createDataFrame(table.asJava, tableSchema)
       .select(keyCols.map(col) ++ ps.map { case (nm, p) =>
         val pos = lit(1.0) + lit(p) * (col("__n") - 1L).cast("double")
         val frac = pos - floor(pos)
@@ -714,7 +810,5 @@ object GlobalOrder {
         val vhi = coalesce(col(s"__hi_$nm"), col(s"__lo_$nm")).cast("double")
         (vlo * (lit(1.0) - frac) + vhi * frac).as(nm)
       }: _*)
-    val allKeys = df.select(keyCols.map(col): _*).distinct()
-    allKeys.join(quantiles, keyCols, "left")
   }
 }

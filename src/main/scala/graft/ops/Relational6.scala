@@ -62,11 +62,11 @@ object Relational6 {
     // cores and only boundary rows reach the median aggregate
     val med = graft.ops.GlobalOrder.groupedQuantiles(
       ev, Seq("event_type"), "value", Seq(("med", 0.5)))
-    // pinned: withDev feeds the MAD quantile (whose range sampler +
-    // shuffle + all-keys pass each re-execute their input's lineage)
-    // AND the final outlier aggregate — unpinned, the events scan +
-    // median join would run four times (guide §2.4: the sampling pass
-    // is an invisible extra execution of everything upstream)
+    // pinned: withDev feeds the MAD quantile (whose range sampler and
+    // shuffle each re-execute their input's lineage) AND the final
+    // outlier aggregate — unpinned, the events scan + median join
+    // would run three times (guide §2.4: the sampling pass is an
+    // invisible extra execution of everything upstream)
     val withDev = graft.ops.GlobalOrder.pin(ev.join(med, "event_type")
       .withColumn("adev", abs(col("value") - col("med"))))
     val mad = graft.ops.GlobalOrder.groupedQuantiles(

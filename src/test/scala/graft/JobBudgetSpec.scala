@@ -6,6 +6,7 @@ import graft.model.Tables
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.LogicalRDD
 
 /**
@@ -118,5 +119,47 @@ class JobBudgetSpec extends SparkSpec {
     assert(construct + execute <= 21,
       s"warm q257 launched $construct + $execute jobs (budget 21)")
     graft.llm.ModelCache.invalidate()
+  }
+
+  /** Construct plus execute jobs of `q`, built and run warm after one
+    * memo-cold run. */
+  private def warmJobs(q: String): (Int, Int) = {
+    val build = SparkEntry.queries(q)
+    noop(build(spark, sf))
+    val (df, construct) = jobsOf(build(spark, sf))
+    val (_, execute) = jobsOf(noop(df))
+    (construct, execute)
+  }
+
+  test("a warm q135_mad_outliers launches at most 14 jobs") {
+    // 14 = the count measured when this budget was set (sf0.001,
+    // local[4], 4 shuffle partitions; 21 before it). Each of the two
+    // groupedQuantiles tables costs its range exchange, one segment
+    // walk and one boundary-row pick, and comes back as a LocalRelation
+    val (construct, execute) = warmJobs("q135_mad_outliers")
+    assert(construct + execute <= 14,
+      s"warm q135 launched $construct + $execute jobs (budget 14)")
+  }
+
+  test("a warm q268_trim_bucket_shift launches at most 18 jobs") {
+    // 18 = the count measured when this budget was set (sf0.001,
+    // local[4], 4 shuffle partitions; 22 before it): the tercile
+    // thresholds are a driver-built table, so the matrix plan no
+    // longer carries the quantile aggregate and its join
+    val (construct, execute) = warmJobs("q268_trim_bucket_shift")
+    assert(construct + execute <= 18,
+      s"warm q268 launched $construct + $execute jobs (budget 18)")
+  }
+
+  test("a groupedQuantiles result is a LocalRelation: consuming it launches 0 jobs") {
+    val ev = Tables.events(spark, sf)
+    val q = graft.ops.GlobalOrder.groupedQuantiles(ev, Seq("event_type"), "value",
+      Seq(("p25", 0.25), ("p50", 0.5)))
+    val (rows, jobs) = jobsOf(q.collect())
+    assert(jobs == 0, s"consuming the quantile table launched $jobs jobs")
+    assert(rows.nonEmpty)
+    val leaves = q.queryExecution.analyzed.collectLeaves()
+    assert(leaves.nonEmpty && leaves.forall(_.isInstanceOf[LocalRelation]),
+      s"quantile table re-plans its build:\n${q.queryExecution.analyzed}")
   }
 }

@@ -152,6 +152,22 @@ class GlobalOrderSpec extends SparkSpec {
     assert(got(1).getString(0) == "b" && got(1).isNullAt(1), got(1))
   }
 
+  test("grouped quantiles: a NULL key is a group with its own quantiles") {
+    // GROUP BY puts NULL keys in one group and quantile_cont
+    // interpolates over its values like any other group's
+    import spark.implicits._
+    val src = Seq(
+      (Option("a"), 1.0), (Option("a"), 3.0),
+      (None: Option[String], 10.0), (None: Option[String], 20.0))
+      .toDF("k", "v")
+    val got = GlobalOrder.groupedQuantiles(src, Seq("k"), "v",
+        ps = Seq(("p50", 0.5)))
+      .orderBy(col("k").asc_nulls_first).collect()
+    assert(got.length == 2, got.toSeq)
+    assert(got(0).isNullAt(0) && got(0).getDouble(1) == 15.0, got(0))
+    assert(got(1).getString(0) == "a" && got(1).getDouble(1) == 2.0, got(1))
+  }
+
   test("grouped: double value columns are rejected (order-dependent sums)") {
     intercept[IllegalArgumentException] {
       GlobalOrder.groupedRankAndPrefix(li, Seq(col("l_orderkey")),
@@ -260,6 +276,21 @@ class GlobalOrderSpec extends SparkSpec {
       val e = intercept[IllegalArgumentException] {
         GlobalOrder.groupedRankAndPrefix(li, Seq(col("l_orderkey")),
           Seq(col("l_linenumber")))
+      }
+      assert(e.getMessage.contains("maxSegments"), e.getMessage)
+    } finally {
+      spark.conf.unset("graft.groupedOrder.maxSegments")
+    }
+  }
+
+  test("grouped quantiles: the segment guard binds before the driver collect") {
+    // ~1.5k order keys at sf0.001 against a cap of 1: the walk stops
+    // at the bound and the guard rejects with the envelope message
+    spark.conf.set("graft.groupedOrder.maxSegments", "1")
+    try {
+      val e = intercept[IllegalArgumentException] {
+        GlobalOrder.groupedQuantiles(li, Seq("l_orderkey"), "l_extendedprice",
+          ps = Seq(("p50", 0.5)))
       }
       assert(e.getMessage.contains("maxSegments"), e.getMessage)
     } finally {

@@ -486,14 +486,16 @@ class PlanAuditSpec extends SparkSpec {
       // threshold scalar, the doc reassembly aggregate, output sort
       "q266_paragraph_lm_trim"  -> (4, 1, 1, 0),
       // q267: everything downstream of the PINNED q260 score sliver is
-      // doc-cardinality — the GlobalOrder tercile pass (its grouped
-      // rank machinery), the broadcast threshold + total scalars, the
-      // 3-row bucket rollup and its presentation sort
-      "q267_perplexity_buckets" -> (4, 4, 1, 0),
-      // q268: pre/post re-aggregations + the tercile machinery + the
-      // pre⋈post doc join and matrix rollup, ALL over the pinned score
-      // sliver — the one fact-scale join lives inside the pin build
-      "q268_trim_bucket_shift"  -> (7, 5, 2, 0))
+      // doc-cardinality — the broadcast total scalar, the 3-row bucket
+      // rollup and its presentation sort; the tercile thresholds are a
+      // driver-built LocalRelation (GlobalOrder.groupedQuantiles), so
+      // no quantile exchange or join survives into the served plan
+      "q267_perplexity_buckets" -> (2, 2, 0, 0),
+      // q268: pre/post re-aggregations + the pre⋈post doc join and
+      // matrix rollup, ALL over the pinned score sliver — the one
+      // fact-scale join lives inside the pin build; the tercile
+      // thresholds arrive as a LocalRelation, as in q267
+      "q268_trim_bucket_shift"  -> (5, 3, 1, 0))
     pinned.foreach { case (q, (shuffles, bcasts, joins, windows)) =>
       val a = auditOf(q)
       assert((a.shuffleExchanges, a.broadcastExchanges, a.joins, a.windows) ==

@@ -15,11 +15,17 @@ For every metric it prints each side's median and quartiles, the change's
 wins over the parent pair by pair (ties count for neither side), and the
 verdict of the rule for claiming a gain: the change wins at least 9 in 10
 pairs, and the medians differ by more than the parent's interquartile
-range.
+range. For a serve workload it also prints each seed's query panel and
+each query's median warm wall per side, read from the run's
+`[perfbench] panel (...)` and `query <name> median X s` lines: the
+panel's latency p50 is whichever of its queries sits in the middle, so
+a per-query table shows when that median moves from one query to
+another.
 """
 import argparse
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
@@ -53,6 +59,24 @@ def archive(rev, dest):
     return sha
 
 
+PANEL = re.compile(r"^\[perfbench\] panel \(\d+\): (.*)$")
+QUERY = re.compile(r"^\[perfbench\] query (\S+)\s+median ([0-9.]+) s")
+
+
+def serve_notes(stdout):
+    """(panel query names, {query: median warm wall in s}) from a serve
+    run's notes; both empty for the other workloads."""
+    panel, medians = [], {}
+    for line in stdout.splitlines():
+        m = PANEL.match(line)
+        if m:
+            panel = [q.split("[")[0] for q in m.group(1).split()]
+        m = QUERY.match(line)
+        if m:
+            medians[m.group(1)] = float(m.group(2))
+    return panel, medians
+
+
 def run_once(copy, workload, seed, seconds, trace):
     p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
                         "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)],
@@ -61,9 +85,11 @@ def run_once(copy, workload, seed, seconds, trace):
     if p.returncode != 0 or not lines:
         return {"ok": False, "error": (p.stderr or p.stdout).strip()[-400:]}
     res = json.loads(lines[-1])
+    panel, medians = serve_notes(p.stdout)
     return {"ok": True, "correct": res["correct"], "failed": res["failed"],
             "attempted": res["attempted"],
-            "metrics": {k: v["value"] for k, v in res["metrics"].items()}}
+            "metrics": {k: v["value"] for k, v in res["metrics"].items()},
+            "panel": panel, "query_median_s": medians}
 
 
 def quartiles(xs):
@@ -92,6 +118,23 @@ def summarize(pairs, better):
         rows.append((m, pm, pq1, pq3, cm, cq1, cq3, wins, len(pairs),
                      "gain" if claim else "-"))
     return rows
+
+
+def print_panels(pairs):
+    """Per seed: the panel, then each query's median warm wall per side."""
+    if not any(p[s].get("panel") for p in pairs for s in ("parent", "change")):
+        return
+    print("\nper-query median warm wall (s) per seed; panel order as run")
+    print(f"{'seed':>6s} {'query':34s} {'parent':>8s} {'change':>8s}")
+    for p in pairs:
+        names = p["parent"].get("panel") or p["change"].get("panel") or []
+        print(f"{p['seed']:>6d} panel: {' '.join(names)}")
+        for q in names:
+            a = p["parent"].get("query_median_s", {}).get(q)
+            b = p["change"].get("query_median_s", {}).get(q)
+            fa = f"{a:8.3f}" if a is not None else f"{'-':>8s}"
+            fb = f"{b:8.3f}" if b is not None else f"{'-':>8s}"
+            print(f"{'':>6s} {q:34s} {fa} {fb}")
 
 
 def main():
@@ -136,6 +179,7 @@ def main():
     for m, pm, pq1, pq3, cm, cq1, cq3, wins, n, verdict in rows:
         print(f"{m:44s} {pm:>12.6g} ({pq1:.6g}-{pq3:.6g}) {cm:>12.6g} ({cq1:.6g}-{cq3:.6g}) "
               f"{wins:>3d}/{n:<2d} {verdict}")
+    print_panels(pairs)
     bad = [(p["seed"], s) for p in pairs for s in ("parent", "change")
            if not (p[s]["ok"] and p[s]["correct"])]
     print(f"[ab] runs failed or wrong: {bad if bad else 'none'}")
