@@ -273,9 +273,9 @@ object GlobalOrder {
     }
     val nv = values.size
     val rankOnly = nv == 0
-    // phase-1 local pass. RANK-ONLY callers (every groupedQuantiles,
-    // the distribution-rank family, the global ntile buckets) stay
-    // INSIDE whole-stage codegen: over the pinned blocks
+    // phase-1 local pass. RANK-ONLY callers (the distribution-rank
+    // family, the global ntile buckets) stay INSIDE whole-stage
+    // codegen: over the pinned blocks
     // monotonically_increasing_id() is, by its documented
     // construction, (pid << 33) + rowIndex — the PARTITION
     // rank; the per-(key, segment) rank is recovered after the offset

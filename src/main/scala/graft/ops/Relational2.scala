@@ -124,20 +124,20 @@ object Relational2 {
   }
 
   /** Exact linear-interpolation percentiles per return flag — via
-    * grouped global ranks, NOT `percentile()`: the builtin is a
-    * TypedImperativeAggregate that ships EVERY group value into
-    * key-cardinality reducers (3 here) and sorts there — the few-key
-    * parallelism ceiling this repo bans. The grouped-rank form
-    * (q146's pattern) range-partitions (flag, price) so every core
-    * ranks a slice, then only the ≤2 boundary rows per (group,
-    * quantile) reach the final aggregate. Interpolation is
-    * `v_lo·(1−frac) + v_hi·frac` — DuckDB's quantile_cont IEEE shape
-    * exactly (the algebraically-equal `v_lo + (v_hi−v_lo)·frac`
-    * differs in the last ulp on non-representable inputs and breaks
-    * the hash-match; verified against the oracle both ways). History:
-    * four scalar `percentile` calls → one array-arg call (6.8 s →
-    * ~1.7 s at sf0.1) → grouped ranks (removes the per-key buffer
-    * entirely). */
+    * [[graft.ops.GlobalOrder.groupedQuantiles]], NOT `percentile()`:
+    * the builtin is a TypedImperativeAggregate that ships EVERY group
+    * value into key-cardinality reducers (3 here) and sorts there —
+    * the few-key parallelism ceiling this repo bans. The grouped form
+    * range-partitions (flag, price) so every core sorts a slice, then
+    * only the ≤2 boundary rows per (group, quantile) reach the
+    * driver. Interpolation is `v_lo·(1−frac) + v_hi·frac` — DuckDB's
+    * quantile_cont IEEE shape exactly (the algebraically-equal
+    * `v_lo + (v_hi−v_lo)·frac` differs in the last ulp on
+    * non-representable inputs and breaks the hash-match; verified
+    * against the oracle both ways). History: four scalar `percentile`
+    * calls → one array-arg call (6.8 s → ~1.7 s at sf0.1) → grouped
+    * ranks (removes the per-key buffer entirely) → one range sort and
+    * a driver-side pick of the boundary rows. */
   def percentiles(spark: SparkSession, dir: String): DataFrame =
     graft.ops.GlobalOrder.groupedQuantiles(
       Tables.lineitem(spark, dir),

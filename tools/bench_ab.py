@@ -130,11 +130,9 @@ def print_panels(pairs):
         names = p["parent"].get("panel") or p["change"].get("panel") or []
         print(f"{p['seed']:>6d} panel: {' '.join(names)}")
         for q in names:
-            a = p["parent"].get("query_median_s", {}).get(q)
-            b = p["change"].get("query_median_s", {}).get(q)
-            fa = f"{a:8.3f}" if a is not None else f"{'-':>8s}"
-            fb = f"{b:8.3f}" if b is not None else f"{'-':>8s}"
-            print(f"{'':>6s} {q:34s} {fa} {fb}")
+            cells = [p[s].get("query_median_s", {}).get(q) for s in ("parent", "change")]
+            print(f"{'':>6s} {q:34s} " +
+                  " ".join(f"{x:8.3f}" if x is not None else f"{'-':>8s}" for x in cells))
 
 
 def main():
