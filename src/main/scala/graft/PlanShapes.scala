@@ -1,14 +1,17 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /**
  * Per-query PLAN FINGERPRINTS for the regression gate (round-13
  * verdict #3): a bench regression flag is only acceptable as
  * "host/re-measurement variance" when the query's physical plan is
  * UNCHANGED — a flag that coincides with a plan-shape change is a real
  * regression no ledger entry may wave through. This main renders every
- * query's (unexecuted) physical plan at the smallest fixture, strips
- * run-dependent noise (expression ids, plan ids, file paths, object
- * hashes), and emits one JSON line of {"query": "md5-of-shape"}.
+ * query's (unexecuted) physical plan at the smallest fixture with scan
+ * metadata untruncated ([[untruncated]]), strips run-dependent noise
+ * (expression ids, plan ids, file paths, object hashes), and emits one
+ * JSON line of {"query": "md5-of-shape"}.
  *
  * tools/closing_gate.sh compares fresh fingerprints against
  * tools/plan_shapes.json for every flagged regression — ratio breach
@@ -124,6 +127,21 @@ object PlanShapes {
   private[graft] def fingerprint(plan: String): String =
     md5hex(normalize(plan))
 
+  /** Runs `body` — building a query and rendering its plan — with scan
+    * metadata untruncated. Spark cuts `DataFilters`/`PushedFilters` at
+    * `spark.sql.maxMetadataStringLength` characters when it plans the
+    * scan, BEFORE [[normalize]] strips the `#id` digits, so a truncated
+    * rendering ends at a point that moves with the length of the ids:
+    * the same plan would fingerprint differently once earlier queries
+    * in the JVM pushed the expression-id counter past a power of ten. */
+  private[graft] def untruncated[T](spark: SparkSession)(body: => T): T = {
+    val key = "spark.sql.maxMetadataStringLength"
+    val had = spark.conf.getOption(key)
+    spark.conf.set(key, Int.MaxValue.toString)
+    try body
+    finally had.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   /** Shuffle width of the plan tools' session, PINNED rather than
     * core-derived: partition counts render into plan strings
     * (rangepartitioning(x, 32)), so a fingerprint taken at 16 CPUs
@@ -136,7 +154,9 @@ object PlanShapes {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outPath = if (args.length > 1) args(1) else "/tmp/plan_shapes.json"
     val shapes = SparkEntry.queries.toSeq.map { case (name, fn) =>
-      val fp = try fingerprint(fn(spark, sfDir).queryExecution.executedPlan.toString)
+      val fp = try untruncated(spark) {
+        fingerprint(fn(spark, sfDir).queryExecution.executedPlan.toString)
+      }
       catch { case e: Throwable =>
         // class name only: exception MESSAGES carry quotes/backslashes
         // (would corrupt the hand-built JSON) and host paths (would

@@ -29,7 +29,7 @@ object Profile {
     Files.createDirectories(Paths.get(outDir))
     val names = SparkEntry.queries.keys.filter(n => only.forall(_.contains(n)))
     names.foreach { name =>
-      val text = try {
+      val text = try PlanShapes.untruncated(spark) {
         val df = SparkEntry.queries(name)(spark, sfDir)
         val audit = graft.plans.PlanChecks.audit(df)
         val explain = df.queryExecution.explainString(

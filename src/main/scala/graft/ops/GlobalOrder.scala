@@ -1,5 +1,7 @@
 package graft.ops
 
+import java.math.{BigDecimal => JBigDecimal}
+
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
@@ -8,7 +10,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DecimalType, LongType, StructType}
+import org.apache.spark.sql.types.{DataType, DecimalType, LongType, StructField, StructType}
 
 /**
  * Distributed global ranking and prefix sums — the scale-safe
@@ -26,11 +28,12 @@ import org.apache.spark.sql.types.{DataType, DecimalType, LongType, StructType}
  *     (a `Window.partitionBy(pid)` here would re-shuffle everything on
  *     pid). Rank-only callers stay inside whole-stage codegen; running
  *     sums take one imperative `mapPartitions` pass;
- *  2. per-partition row/value totals (a map-side partial aggregate —
- *     ONE row per partition crosses the wire) fold into exclusive
- *     offsets ON THE DRIVER, come back as a broadcast LocalRelation,
- *     and compose: global rank = partition offset + local rank, global
- *     prefix = value offset + local sum. The plan has no window.
+ *  2. the segment census — one walk over the pinned rows that returns
+ *     each partition's row/value totals, ONE tuple per partition — folds
+ *     into exclusive offsets ON THE DRIVER; they come back as a broadcast
+ *     LocalRelation and compose: global rank = partition offset + local
+ *     rank, global prefix = value offset + local sum. The plan has no
+ *     window.
  *
  * The ranged-and-sorted data is materialized ONCE (`localCheckpoint`)
  * and both phases read it: this is load-bearing, not an optimization —
@@ -123,7 +126,7 @@ object GlobalOrder {
    * materializes more than `maxRows + 1` rows: the limit caps the pin
    * regardless of the true count, and when the guard passes the
    * limited pin IS the complete set — the same discipline as the
-   * segment-fold guard below. A pathological input (e.g. an eval set
+   * segment census guard below. A pathological input (e.g. an eval set
    * leaked wholesale into the corpus, round-10 verdict #7) fails with
    * this message instead of blowing a broadcast on some executor.
    */
@@ -147,11 +150,8 @@ object GlobalOrder {
       kCols: Seq[String],
       vCols: Seq[String],
       kIdx: Array[Int],
-      vIdx: Array[Int],
-      vScale: Array[Option[Int]]) {
-    def prefixType(i: Int): DataType =
-      vScale(i).map(s => DecimalType(38, s): DataType).getOrElse(LongType)
-    def schema: org.apache.spark.sql.types.StructType = sorted.schema
+      sums: ExactSums) {
+    def schema: StructType = sorted.schema
   }
 
   private def stageGrouped(
@@ -187,15 +187,184 @@ object GlobalOrder {
     GroupedStage(
       sorted, kCols, vCols,
       kCols.map(schema.fieldIndex).toArray,
-      vCols.map(schema.fieldIndex).toArray,
-      // per-value emit type: Long stays Long; decimal(p, s) emits at
-      // the widened decimal(38, s) its phase-2 Spark sum also lands on
-      vCols.map { c =>
+      ExactSums(vCols.map(schema.fieldIndex).toArray, vCols.map { c =>
         schema(c).dataType match {
-          case d: DecimalType => Some(d.scale)
+          case d: DecimalType => Some(d)
           case _              => None
         }
-      }.toArray)
+      }.toArray))
+  }
+
+  /**
+   * Exact sums over the staged value columns, one slot per column (at
+   * `idx` of the pinned rows). Long slots fail with an
+   * `ArithmeticException` on overflow — as the ANSI window sums these
+   * operators replace do — instead of wrapping; decimal slots sum as
+   * BigDecimal and emit at the decimal(38, s) their window formulation
+   * widens to. A NULL value contributes zero. Every operation returns
+   * a new array and none writes to its arguments, so `zero` is shared.
+   * Every pass of the grouped operators — phase 1, the census folds,
+   * the driver folds — sums through this one helper.
+   */
+  private final case class ExactSums(idx: Array[Int], dec: Array[Option[DecimalType]]) {
+    def types: Seq[DataType] =
+      dec.toSeq.map(_.fold[DataType](LongType)(d => DecimalType(38, d.scale)))
+    val zero: Array[Any] = dec.map(_.fold[Any](0L)(_ => JBigDecimal.ZERO))
+    def plus(a: Array[Any], b: Array[Any]): Array[Any] =
+      combine(a, b)(Math.addExact(_, _), _ add _)
+    def minus(a: Array[Any], b: Array[Any]): Array[Any] =
+      combine(a, b)(Math.subtractExact(_, _), _ subtract _)
+    def emit(a: Array[Any]): Seq[Any] = a.toSeq.zip(dec).map {
+      case (d: JBigDecimal, Some(t)) => d.setScale(t.scale)
+      case (v, _)                    => v
+    }
+    def of(r: Row): Array[Any] = Array.tabulate(idx.length) { i =>
+      if (r.isNullAt(idx(i))) zero(i)
+      else if (dec(i).isEmpty) r.getLong(idx(i)) else r.getDecimal(idx(i))
+    }
+    def of(r: InternalRow): Array[Any] = Array.tabulate(idx.length) { i =>
+      if (r.isNullAt(idx(i))) zero(i)
+      else dec(i).fold[Any](r.getLong(idx(i))) { d =>
+        r.getDecimal(idx(i), d.precision, d.scale).toJavaBigDecimal
+      }
+    }
+    private def combine(a: Array[Any], b: Array[Any])(
+        l: (Long, Long) => Long, d: (JBigDecimal, JBigDecimal) => JBigDecimal): Array[Any] =
+      Array.tabulate(a.length) { i =>
+        (a(i), b(i)) match {
+          case (x: Long, y: Long)               => l(x, y)
+          case (x: JBigDecimal, y: JBigDecimal) => d(x, y)
+        }
+      }
+  }
+
+  /** One (partition, key) segment of a pinned, range-sorted stage: its
+    * partition, its key, the index of its first row within the
+    * partition, its row count and the caller's fold over its rows. */
+  private final case class Seg[S](pid: Int, key: UnsafeRow, first: Long, n: Long, acc: S)
+
+  /**
+   * The segment census behind every grouped operator: ONE job walks the
+   * pinned rows (`UnsafeProjection` keys, `UnsafeRow` equality) and
+   * returns each (partition, key) segment, in partition order, with
+   * `step` folded over its rows from `zero`. Because a key's rows occupy
+   * CONTIGUOUS partitions under the range exchange there are at most
+   * `distinctKeys + partitions − 1` segments — metadata-size by
+   * construction — and `graft.groupedOrder.maxSegments` (read here
+   * only) enforces that envelope: a task stops at `min(maxSegments,
+   * cap) + 1` segments and the result handler keeps nothing past that
+   * bound, so the guard binds before segments pile up on the driver and
+   * a caller outside the few-key envelope gets this error, never a
+   * driver OOM. A census of at most `cap` segments is complete; a longer
+   * one is only the evidence that the tighter `cap` was exceeded.
+   */
+  private def segments[S](sorted: DataFrame, kIdx: Seq[Int], caller: String,
+      cap: Long = Long.MaxValue)(zero: => S)(step: (S, InternalRow) => S): IndexedSeq[Seg[S]] = {
+    val maxSegs = sorted.sparkSession.conf
+      .get("graft.groupedOrder.maxSegments", (1 << 20).toString).toLong
+    val bound = math.min(maxSegs, cap)
+    val fields = sorted.schema.fields
+    val keyRefs = kIdx.map(i => BoundReference(i, fields(i).dataType, fields(i).nullable))
+    val rows = sorted.queryExecution.toRdd
+    val got = new Array[Array[Seg[S]]](rows.getNumPartitions)
+    var kept = 0L
+    sorted.sparkSession.sparkContext.runJob(rows, (ctx: TaskContext, it: Iterator[InternalRow]) => {
+      val keyOf = UnsafeProjection.create(keyRefs)
+      val out = ArrayBuffer.empty[Seg[S]]
+      var cur: UnsafeRow = null
+      var first, i = 0L
+      var acc = zero
+      def close(): Unit =
+        if (cur != null) out += Seg(ctx.partitionId(), cur, first, i - first, acc)
+      while (it.hasNext && out.length <= bound) {
+        val r = it.next()
+        val k = keyOf(r)
+        if (cur == null || k != cur) {
+          close(); cur = k.copy(); first = i; acc = zero
+        }
+        acc = step(acc, r)
+        i += 1
+      }
+      close()
+      out.toArray
+    }, (pid: Int, part: Array[Seg[S]]) =>
+      if (kept <= bound) { got(pid) = part; kept += part.length })
+    val segs = got.toIndexedSeq.flatMap(s => Option(s).toSeq.flatten)
+    require(segs.length <= maxSegs,
+      s"$caller saw more than $maxSegs (partition, key) segments: key " +
+        "cardinality is large enough that a plain per-key window or " +
+        "aggregate already parallelizes — use that instead, or raise " +
+        "graft.groupedOrder.maxSegments")
+    segs
+  }
+
+  /** The driver fold of [[groupedRankAndPrefix]] and
+    * [[groupedTrailingSums]]: one walk over each key's segments in
+    * partition order, emitting per segment the join-back row (pid,
+    * keys…, rows of its key before it, its key's total rows) ++ `extra`
+    * and threading per-key state from one segment to the next. */
+  private def offsetRows[S, T](st: GroupedStage, segs: Seq[Seg[S]], zero: T)(
+      extra: (Seg[S], Seq[Any], T) => Seq[Any])(next: (T, Seg[S]) => T): java.util.List[Row] = {
+    val toKey = CatalystTypeConverters.createToScalaConverter(
+      StructType(st.kIdx.map(st.schema.fields(_))))
+    val rows = new java.util.ArrayList[Row](segs.length)
+    segs.groupBy(_.key).values.foreach { ss =>
+      val k = toKey(ss.head.key).asInstanceOf[Row].toSeq
+      val total = ss.map(_.n).sum
+      ss.foldLeft((0L, zero)) { case ((off, t), s) =>
+        rows.add(Row.fromSeq((s.pid.toLong +: k) ++ (off +: total +: extra(s, k, t))))
+        (off + s.n, next(t, s))
+      }
+    }
+    rows
+  }
+
+  /** Phase 1's imperative local pass over the pinned rows: appends
+    * `__pid`, the local rank `__lrank` and one `<prefix><i>` sum per
+    * value to every row. The per-segment state starts at `start(pid,
+    * key)` at every key boundary and `step` emits each row's sums. */
+  private def localPass[S](st: GroupedStage, prefix: String)(start: (Long, Seq[Any]) => S)(
+      step: (S, Row) => (S, Seq[Any])): DataFrame = {
+    val kIdx = st.kIdx
+    val schema = StructType(st.schema.fields ++
+      Seq(StructField("__pid", LongType, nullable = false),
+        StructField("__lrank", LongType, nullable = false)) ++
+      st.sums.types.zipWithIndex.map { case (t, i) => StructField(s"$prefix$i", t, nullable = false) })
+    st.sorted.mapPartitions { rows =>
+      val pid = TaskContext.getPartitionId().toLong
+      var curKey: Seq[Any] = null
+      var rank = 0L
+      var state: S = null.asInstanceOf[S]
+      rows.map { r =>
+        val k: Seq[Any] = kIdx.map(r.get).toSeq
+        if (curKey == null || k != curKey) {
+          curKey = k
+          rank = 0L
+          state = start(pid, k)
+        }
+        rank += 1
+        val (next, sums) = step(state, r)
+        state = next
+        Row.fromSeq(r.toSeq ++ (pid +: rank +: sums))
+      }
+    }(Encoders.row(schema))
+  }
+
+  /** Broadcast-joins the folded rows of [[offsetRows]] back to phase 1's
+    * `local` rows on (pid, keys) — null-safe on keys, since a
+    * usingColumns join would drop null-key rows — keeping every local
+    * column plus `__rank_off`, `totalRowsCol` and the `extra` fields. */
+  private def joinOffsets(st: GroupedStage, local: DataFrame, rows: java.util.List[Row],
+      totalRowsCol: String, extra: Seq[StructField]): DataFrame = {
+    val offs = StructField("__rank_off", LongType, nullable = false) +:
+      StructField(totalRowsCol, LongType, nullable = false) +: extra
+    val schema = StructType((StructField("__pid", LongType, nullable = false) +:
+      st.kCols.map(st.schema(_))) ++ offs)
+    val f = broadcast(local.sparkSession.createDataFrame(rows, schema)).alias("f")
+    val cond = (col("l.__pid") === col("f.__pid")) +: st.kCols.map(c =>
+      col(s"l.$c") <=> col(s"f.$c"))
+    local.alias("l").join(f, cond.reduce(_ && _))
+      .select((col("l.*") +: offs.map(o => col(s"f.${o.name}"))): _*)
   }
 
   /**
@@ -213,14 +382,15 @@ object GlobalOrder {
    *     local pass assigns each row its rank/exclusive sums WITHIN its
    *     (key, partition) segment (the pass watches the key tuple and
    *     resets at boundaries);
-   *  2. per-(partition, key) segment totals fold into per-key
-   *     exclusive offsets. Because a key's rows occupy CONTIGUOUS
-   *     partitions under the range exchange, the segments table has at
-   *     most `distinctKeys + partitions − 1` rows — metadata-size by
-   *     construction. It folds on the DRIVER (the k-row-collect
-   *     class) and rebuilds as a LocalRelation, so the broadcast back
-   *     is provably bounded and the final plan contains NO window at
-   *     all — fact-scale or otherwise.
+   *  2. the segment census (one walk over the same pinned rows) returns
+   *     each (partition, key) segment's row count, first row index and
+   *     exact value sums; the driver folds them into per-key exclusive
+   *     offsets in partition order. The census is metadata-size by
+   *     construction (at most `distinctKeys + partitions − 1`
+   *     segments, guarded by `graft.groupedOrder.maxSegments`), and the
+   *     folded offsets come back as a LocalRelation, so the broadcast
+   *     back is provably bounded and the final plan contains NO window
+   *     at all — fact-scale or otherwise.
    *
    * Adds `rankCol` (1-based per-key rank, Long), `totalRowsCol`
    * (per-key row count N_k — `percent_rank = (rank−1)/(N_k−1)`,
@@ -228,12 +398,12 @@ object GlobalOrder {
    * [[ntileFromRank]] all derive from these two), and one exclusive
    * per-key prefix column per `values` entry.
    *
-   * `values` columns must be integral (summed exactly as Long) or
-   * DecimalType (summed exactly as BigDecimal, emitted at
-   * decimal(38, s) — the same widen-before-sum discipline as the
-   * window formulations this replaces). Doubles are rejected: a
-   * float running sum is evaluation-order dependent, which this
-   * operator exists to keep deterministic.
+   * `values` columns must be integral (summed exactly as Long, failing
+   * on overflow) or DecimalType (summed exactly as BigDecimal, emitted
+   * at decimal(38, s) — the same widen-before-sum discipline as the
+   * window formulations this replaces); see [[ExactSums]]. Doubles are
+   * rejected: a float running sum is evaluation-order dependent, which
+   * this operator exists to keep deterministic.
    *
    * Envelope: designed for key cardinality ≪ cluster parallelism
    * (the regime where a plain window is a parallelism ceiling). With
@@ -255,167 +425,38 @@ object GlobalOrder {
       values: Seq[(Column, String)] = Nil,
       rankCol: String = "g_rank",
       totalRowsCol: String = "g_total_rows"): DataFrame = {
-    val spark = df.sparkSession
     val st = stageGrouped(df, keys, values, order, "groupedRankAndPrefix")
     val sorted = st.sorted
-    val kCols = st.kCols
-    val vCols = st.vCols
-    val schema = st.schema
-    val kIdx = st.kIdx
-    val vIdx = st.vIdx
-    val vScale = st.vScale
-    val prefixType: Int => DataType = st.prefixType
-    val outSchema = values.indices.foldLeft(
-      schema
-        .add("__pid", LongType, nullable = false)
-        .add("__lrank", LongType, nullable = false)) { (sch, i) =>
-      sch.add(s"__ls$i", prefixType(i), nullable = false)
-    }
-    val nv = values.size
-    val rankOnly = nv == 0
+    val ex = st.sums
+    val rankOnly = values.isEmpty
     // phase-1 local pass. RANK-ONLY callers (the distribution-rank
     // family, the global ntile buckets) stay INSIDE whole-stage
-    // codegen: over the pinned blocks
-    // monotonically_increasing_id() is, by its documented
-    // construction, (pid << 33) + rowIndex — the PARTITION
-    // rank; the per-(key, segment) rank is recovered after the offset
-    // join as (partition rank − segment start + 1), with each
-    // segment's start collected by phase 2 as min(partition rank).
-    // The running-sum path keeps the imperative per-partition pass
-    // (an exclusive scan has no codegen equivalent).
-    def withMid(df: DataFrame): DataFrame = df
-      .withColumn("__mid", monotonically_increasing_id())
-      .withColumn("__pid", shiftrightunsigned(col("__mid"), 33).cast("long"))
-      .withColumn("__plrank", col("__mid").bitwiseAND(lit((1L << 33) - 1)) + 1L)
-      .drop("__mid")
+    // codegen: over the pinned blocks monotonically_increasing_id() is,
+    // by its documented construction, (pid << 33) + rowIndex — the
+    // PARTITION rank; the per-(key, segment) rank is recovered after the
+    // offset join as (partition rank − segment start + 1), the start
+    // being the census's first row index + 1 (both count rows of the
+    // same pinned partition in the same order). The running-sum path
+    // keeps the imperative per-partition pass (an exclusive scan has no
+    // codegen equivalent).
     val local =
-      if (rankOnly) withMid(sorted)
-      else sorted.mapPartitions { rows =>
-        val pid = org.apache.spark.TaskContext.getPartitionId().toLong
-        var curKey: Seq[Any] = null
-        var rank = 0L
-        val cumL = Array.fill(nv)(0L)
-        val cumD = Array.fill(nv)(java.math.BigDecimal.ZERO)
-        rows.map { r =>
-          val k: Seq[Any] = kIdx.map(r.get).toSeq
-          if (curKey == null || k != curKey) {
-            curKey = k
-            rank = 0L
-            java.util.Arrays.fill(cumL, 0L)
-            java.util.Arrays.fill(cumD.asInstanceOf[Array[AnyRef]],
-              java.math.BigDecimal.ZERO)
-          }
-          rank += 1
-          val before: Seq[Any] = (0 until nv).map { i =>
-            vScale(i) match {
-              case Some(s) => cumD(i).setScale(s)
-              case None    => cumL(i)
-            }
-          }
-          (0 until nv).foreach { i =>
-            if (!r.isNullAt(vIdx(i))) vScale(i) match {
-              case Some(_) => cumD(i) = cumD(i).add(r.getDecimal(vIdx(i)))
-              case None    => cumL(i) += r.getLong(vIdx(i))
-            }
-          }
-          Row.fromSeq(r.toSeq ++ (pid +: rank +: before))
-        }
-      }(Encoders.row(outSchema))
-    // phase-2 segment totals: one partial-aggregated row per
-    // (partition, key) segment — ≤ K + parts − 1 rows total (a key's
-    // rows occupy CONTIGUOUS partitions under the range exchange) —
-    // read from the SAME pinned blocks as phase 1. The fold runs on
-    // the driver: the segments table is metadata-size by construction
-    // (the k-row-collect class), and rebuilding the folded offsets as
-    // a LocalRelation makes the broadcast below PROVABLY bounded — the
-    // forced-broadcast audit accepts LocalRelation leaves, and no
-    // window of any size appears in the plan.
-    // rank-only: phase 2 additionally collects each segment's START
-    // (min partition rank) over the SAME mid projection as phase 1 —
-    // mid is stable across the two reads because the blocks are pinned
-    // and the id is a pure function of (partition, iteration position)
-    val segAggs =
-      if (rankOnly) Seq(count(lit(1)).as("__n"),
-        min(col("__plrank")).as("__segstart"))
-      else count(lit(1)).as("__n") +:
-        values.indices.map(i => sum(col(s"__v$i")).as(s"__s$i"))
-    val maxSegs = spark.conf
-      .get("graft.groupedOrder.maxSegments", (1 << 20).toString).toInt
-    // collect through a LIMIT of maxSegs+1 so the guard binds BEFORE
-    // driver materialization: a caller outside the few-key envelope
-    // gets this error, never a driver OOM — the limit caps what can
-    // land on the driver regardless of the true segment count, and
-    // when the guard passes the limited collect IS the full segment
-    // set (length ≤ maxSegs < limit)
-    val segSrc =
-      if (rankOnly) withMid(sorted)
-      else sorted.withColumn("__pid", spark_partition_id().cast("long"))
-    val segs = segSrc
-      .groupBy((col("__pid") +: kCols.map(col)): _*)
-      .agg(segAggs.head, segAggs.tail: _*)
-      .limit(maxSegs + 1)
-      .collect()
-    require(segs.length <= maxSegs,
-      s"groupedRankAndPrefix saw more than $maxSegs (partition, key) " +
-        "segments: key cardinality is large enough that a plain " +
-        "per-key window already parallelizes — use that instead, or " +
-        "raise graft.groupedOrder.maxSegments")
-    // exclusive fold per key in pid order (exact: Long / BigDecimal)
-    val nKeys = keys.size
-    val foldedRows = new java.util.ArrayList[Row](segs.length)
-    segs.groupBy(r => (0 until nKeys).map(i => r.get(1 + i)))
-      .foreach { case (_, segRows) =>
-        val inOrder = segRows.sortBy(_.getLong(0))
-        val totalN = inOrder.map(_.getLong(1 + nKeys)).sum
-        var rankOff = 0L
-        val offL = Array.fill(nv)(0L)
-        val offD = Array.fill(nv)(java.math.BigDecimal.ZERO)
-        inOrder.foreach { r =>
-          val offs: Seq[Any] = (0 until nv).map { i =>
-            vScale(i) match {
-              case Some(s) => offD(i).setScale(s)
-              case None    => offL(i)
-            }
-          }
-          // rank-only rows additionally carry the segment's start
-          // (min partition rank) so the join can recover the per-key
-          // local rank as (__plrank − __segstart + 1)
-          val tail: Seq[Any] =
-            if (rankOnly) Seq(rankOff, totalN, r.getLong(2 + nKeys))
-            else rankOff +: totalN +: offs
-          foldedRows.add(Row.fromSeq(
-            (r.getLong(0) +: (0 until nKeys).map(i => r.get(1 + i))) ++ tail))
-          rankOff += r.getLong(1 + nKeys)
-          (0 until nv).foreach { i =>
-            val si = 2 + nKeys + i
-            if (!r.isNullAt(si)) vScale(i) match {
-              case Some(_) => offD(i) = offD(i).add(r.getDecimal(si))
-              case None    => offL(i) += r.getLong(si)
-            }
-          }
-        }
-      }
-    val foldBase = kCols.foldLeft(new org.apache.spark.sql.types.StructType()
-        .add("__pid", LongType, nullable = false)) { (st, c) =>
-        st.add(schema(c))
-      }
-      .add("__rank_off", LongType, nullable = false)
-      .add(totalRowsCol, LongType, nullable = false)
-    val foldSchema =
-      if (rankOnly) foldBase.add("__segstart", LongType, nullable = false)
-      else values.indices.foldLeft(foldBase) { (st, i) =>
-        st.add(s"__off$i", prefixType(i), nullable = false)
-      }
-    val keepF = Seq(col(s"f.__rank_off"), col(s"f.$totalRowsCol")) ++
-      (if (rankOnly) Seq(col("f.__segstart"))
-       else values.indices.map(i => col(s"f.__off$i")))
-    // null-safe on keys: a usingColumns join would drop null-key rows
-    val l = local.alias("l")
-    val f = broadcast(spark.createDataFrame(foldedRows, foldSchema)).alias("f")
-    val cond = (col("l.__pid") === col("f.__pid")) +: kIdx.indices.map(i =>
-      col(s"l.__k$i") <=> col(s"f.__k$i"))
-    var out = l.join(f, cond.reduce(_ && _))
-      .select((col("l.*") +: keepF): _*)
+      if (rankOnly) sorted
+        .withColumn("__mid", monotonically_increasing_id())
+        .withColumn("__pid", shiftrightunsigned(col("__mid"), 33).cast("long"))
+        .withColumn("__plrank", col("__mid").bitwiseAND(lit((1L << 33) - 1)) + 1L)
+        .drop("__mid")
+      else localPass(st, "__ls")((_, _) => ex.zero)((cum, r) =>
+        (ex.plus(cum, ex.of(r)), ex.emit(cum)))
+    // phase 2: the census's exact segment sums fold into per-key
+    // exclusive value offsets; rank-only rows carry the segment start
+    val segs = segments(sorted, st.kIdx.toSeq, "groupedRankAndPrefix")(ex.zero)(
+      (sum, r) => ex.plus(sum, ex.of(r)))
+    val rows = offsetRows(st, segs, ex.zero)((s, _, off) =>
+      if (rankOnly) Seq(s.first + 1) else ex.emit(off))((off, s) => ex.plus(off, s.acc))
+    val extra =
+      if (rankOnly) Seq(StructField("__segstart", LongType, nullable = false))
+      else ex.types.zipWithIndex.map { case (t, i) => StructField(s"__off$i", t, nullable = false) }
+    var out = joinOffsets(st, local, rows, totalRowsCol, extra)
       .withColumn(rankCol,
         if (rankOnly)
           col("__rank_off") + (col("__plrank") - col("__segstart") + 1L)
@@ -425,7 +466,7 @@ object GlobalOrder {
     }
     val temp = Seq("__pid", "__lrank", "__plrank", "__segstart",
         "__rank_off") ++
-      kCols ++ vCols ++
+      st.kCols ++ st.vCols ++
       values.indices.flatMap(i => Seq(s"__ls$i", s"__off$i"))
     out.drop(temp: _*)
   }
@@ -443,27 +484,30 @@ object GlobalOrder {
    * trick (`P(r) − P(r−frame)`) needs a self equi-join on (key, rank)
    * that exchanges the whole table twice more. This operator does
    * neither: the phase-1 local pass keeps an exact ring buffer of the
-   * last `frame` contributions (Long or BigDecimal — add AND evict
-   * are exact, so retraction is safe where floats would drift), and
-   * segment boundaries are SEEDED with the tail of the preceding
-   * segments: a second metadata-size pass collects the last `frame`
-   * contributions of every (partition, key) segment — at most
-   * `frame × (keys + partitions − 1)` scalars, the k-row-collect
-   * class — and the driver threads them together in pid order. Total
-   * cost: the one range exchange, two passes over the pinned blocks,
-   * and a frame×segments broadcast. Nothing is O(rows × frame) and
-   * nothing re-exchanges the data.
+   * last `frame` contributions (Long or BigDecimal through
+   * [[ExactSums]] — add AND evict are exact, so retraction is safe
+   * where floats would drift), and segment boundaries are SEEDED with
+   * the tail of the preceding segments: the segment census folds the
+   * last `frame` contributions of every (partition, key) segment — at
+   * most `frame × (keys + partitions − 1)` scalars, the k-row-collect
+   * class — and the driver threads them together in pid order, in the
+   * same walk that folds the rank offsets. Total cost: the one range
+   * exchange, the census and the local pass over the pinned blocks, and
+   * a frame×segments broadcast. Nothing is O(rows × frame) and nothing
+   * re-exchanges the data.
    *
    * Null values contribute zero to the sums but still occupy their
    * frame slot — exactly the window function's semantics. Emitted
-   * types match [[groupedRankAndPrefix]] (Long, or decimal(38, s)).
+   * types match [[groupedRankAndPrefix]] (Long, or decimal(38, s)), and
+   * a Long sum that overflows fails instead of wrapping.
    *
    * Envelope: `frame × segments` must stay metadata-size — ENFORCED
-   * before anything is collected, by `graft.groupedOrder.maxSegments`
-   * on the segment count and `graft.groupedOrder.maxTailContribs`
-   * (default 2²⁴) on the frame × segments product. For unbounded
-   * trailing frames use the exclusive prefix from
-   * [[groupedRankAndPrefix]] directly.
+   * before anything is collected: the census stops at
+   * `min(graft.groupedOrder.maxSegments,
+   * graft.groupedOrder.maxTailContribs / frame)` + 1 segments
+   * (`maxTailContribs` defaults to 2²⁴), and the segment bound is
+   * checked first. For unbounded trailing frames use the exclusive
+   * prefix from [[groupedRankAndPrefix]] directly.
    */
   def groupedTrailingSums(
       df: DataFrame,
@@ -477,153 +521,44 @@ object GlobalOrder {
     require(values.nonEmpty, "groupedTrailingSums needs at least one value")
     val spark = df.sparkSession
     val st = stageGrouped(df, keys, values, order, "groupedTrailingSums")
-    val sorted = st.sorted
-    val kIdx = st.kIdx
-    val vIdx = st.vIdx
-    val vScale = st.vScale
-    val nv = values.size
-    val nKeys = keys.size
-    // contribution of a row to value i: Long or BigDecimal; null → zero
-    // (occupies its frame slot, adds nothing — window semantics)
-    def contrib(r: Row, i: Int): Any = vScale(i) match {
-      case Some(_) =>
-        if (r.isNullAt(vIdx(i))) java.math.BigDecimal.ZERO else r.getDecimal(vIdx(i))
-      case None =>
-        if (r.isNullAt(vIdx(i))) 0L else r.getLong(vIdx(i))
-    }
-    // Guards run BEFORE the tails collect so a caller outside the
-    // few-key envelope gets a friendly error, never a driver OOM. The
-    // pre-count is one cheap pass over the already-pinned blocks
-    // (scan + partial distinct; nothing recomputes), and the LIMIT
-    // caps its own cost at maxSegs+1 rows. When the first guard
-    // passes, nSegs is the EXACT segment count, so the frame×segments
-    // product bound is exact too — the scaladoc's "frames are
-    // typically 10–10⁴" envelope, enforced: at the default caps a
-    // frame=10⁴ caller is held to ≤ ~1.7k segments instead of being
-    // allowed to pull frame × 2²⁰ boxed contributions onto the driver.
-    val maxSegs = spark.conf
-      .get("graft.groupedOrder.maxSegments", (1 << 20).toString).toInt
+    val ex = st.sums
+    // the census keeps per segment the contribution tuples of its last
+    // ≤ frame rows (null → zero: it occupies its frame slot and adds
+    // nothing — window semantics). Capping it at maxTail / frame
+    // segments holds the frame × segments product to maxTail: at the
+    // default caps a frame = 10⁴ caller gets ≤ ~1.7k segments instead of
+    // pulling frame × 2²⁰ boxed contributions onto the driver
     val maxTail = spark.conf
       .get("graft.groupedOrder.maxTailContribs", (1 << 24).toString).toLong
-    val nSegs = sorted
-      .withColumn("__pid", spark_partition_id().cast("long"))
-      .select((col("__pid") +: st.kCols.map(col)): _*)
-      .distinct()
-      .limit(maxSegs + 1)
-      .count()
-    require(nSegs <= maxSegs,
-      s"groupedTrailingSums saw more than $maxSegs (partition, key) " +
-        "segments: with that many keys a plain per-key window already " +
-        "parallelizes — use that instead, or raise " +
-        "graft.groupedOrder.maxSegments")
-    require(frame.toLong * nSegs <= maxTail,
+    val segs = segments(st.sorted, st.kIdx.toSeq, "groupedTrailingSums", maxTail / frame)(
+      Vector.empty[Array[Any]])((tail, r) => (tail :+ ex.of(r)).takeRight(frame))
+    require(frame.toLong * segs.length <= maxTail,
       s"groupedTrailingSums would buffer frame × segments = $frame × " +
-        s"$nSegs > $maxTail contribution tuples on the driver: shrink " +
-        "the frame, reduce key cardinality (a plain per-key window " +
+        s"${segs.length} > $maxTail contribution tuples on the driver: " +
+        "shrink the frame, reduce key cardinality (a plain per-key window " +
         "already parallelizes at high cardinality), or raise " +
         "graft.groupedOrder.maxTailContribs")
-    // tails pass: per (partition, key) segment, the last ≤ frame rows'
-    // contribution tuples in order + the segment row count (reused for
-    // the rank fold — one collect serves both). Bounded by the guards
-    // above: ≤ nSegs rows, ≤ frame × nSegs ≤ maxTail tuples.
-    val tailsRaw: Array[(Long, Seq[Any], Long, Vector[Array[Any]])] =
-      sorted.rdd.mapPartitionsWithIndex { (pid, rows) =>
-        val acc = scala.collection.mutable.LinkedHashMap
-          .empty[Seq[Any], (Long, scala.collection.mutable.ArrayDeque[Array[Any]])]
-        rows.foreach { r =>
-          val k: Seq[Any] = kIdx.map(r.get).toSeq
-          val (n, buf) = acc.getOrElseUpdate(k,
-            (0L, scala.collection.mutable.ArrayDeque.empty[Array[Any]]))
-          buf.append(Array.tabulate[Any](nv)(i => contrib(r, i)))
-          if (buf.size > frame) buf.removeHead()
-          acc(k) = (n + 1, buf)
-        }
-        acc.iterator.map { case (k, (n, buf)) => (pid.toLong, k, n, buf.toVector) }
-      }.collect()
-    // driver fold in pid order per key: rank offsets + per-key totals
-    // (as groupedRankAndPrefix) and the SEED for each segment — the
+    // the driver fold's per-key state is the SEED of each segment: the
     // last ≤ frame contributions of all preceding segments of its key
-    val seedBySeg = new java.util.HashMap[(Long, Seq[Any]), Array[Array[Any]]]()
-    val foldedRows = new java.util.ArrayList[Row](tailsRaw.length)
-    tailsRaw.groupBy(_._2).foreach { case (k, segRows) =>
-      val inOrder = segRows.sortBy(_._1)
-      val totalN = inOrder.map(_._3).sum
-      var rankOff = 0L
-      var rolling = Vector.empty[Array[Any]]
-      inOrder.foreach { case (pid, _, n, tail) =>
-        seedBySeg.put((pid, k), rolling.takeRight(frame).toArray)
-        foldedRows.add(Row.fromSeq((pid +: k) ++ Seq(rankOff, totalN)))
-        rankOff += n
-        // a segment with n ≥ frame rows fully determines the next
-        // seed; otherwise its tail extends what came before
-        rolling = if (n >= frame) tail else (rolling ++ tail).takeRight(frame)
-      }
-    }
+    val seedBySeg = new java.util.HashMap[(Long, Seq[Any]), Vector[Array[Any]]]()
+    val rows = offsetRows(st, segs, Vector.empty[Array[Any]]) { (s, k, seed) =>
+      seedBySeg.put((s.pid.toLong, k), seed)
+      Nil
+    }((seed, s) => (seed ++ s.acc).takeRight(frame))
     val seeds = spark.sparkContext.broadcast(seedBySeg)
-    // phase-1 local pass: seeded ring buffer per segment; add and
-    // evict are exact, so the running frame sums never drift
-    val outSchema = values.indices.foldLeft(
-      st.schema
-        .add("__pid", LongType, nullable = false)
-        .add("__lrank", LongType, nullable = false)) { (sch, i) =>
-      sch.add(s"__t$i", st.prefixType(i), nullable = false)
+    // phase-1 local pass: a ring of the last ≤ frame contributions and
+    // their sum per segment, seeded at the segment start; evict and add
+    // are exact, so the running frame sums never drift
+    type Ring = (Vector[Array[Any]], Array[Any])
+    def push(ring: Ring, c: Array[Any]): Ring = ring match {
+      case (cs, sum) if cs.size == frame => (cs.tail :+ c, ex.plus(ex.minus(sum, cs.head), c))
+      case (cs, sum)                     => (cs :+ c, ex.plus(sum, c))
     }
-    val local = sorted.mapPartitions { rows =>
-      val pid = org.apache.spark.TaskContext.getPartitionId().toLong
-      var curKey: Seq[Any] = null
-      var rank = 0L
-      val ring = scala.collection.mutable.ArrayDeque.empty[Array[Any]]
-      val sumL = Array.fill(nv)(0L)
-      val sumD = Array.fill(nv)(java.math.BigDecimal.ZERO)
-      def add(c: Array[Any], sign: Int): Unit = (0 until nv).foreach { i =>
-        vScale(i) match {
-          case Some(_) =>
-            val d = c(i).asInstanceOf[java.math.BigDecimal]
-            sumD(i) = if (sign > 0) sumD(i).add(d) else sumD(i).subtract(d)
-          case None =>
-            val l = c(i).asInstanceOf[Long]
-            sumL(i) = if (sign > 0) sumL(i) + l else sumL(i) - l
-        }
-      }
-      rows.map { r =>
-        val k: Seq[Any] = kIdx.map(r.get).toSeq
-        if (curKey == null || k != curKey) {
-          curKey = k
-          rank = 0L
-          ring.clear()
-          java.util.Arrays.fill(sumL, 0L)
-          java.util.Arrays.fill(sumD.asInstanceOf[Array[AnyRef]],
-            java.math.BigDecimal.ZERO)
-          Option(seeds.value.get((pid, k))).foreach(_.foreach { c =>
-            ring.append(c); add(c, 1)
-            if (ring.size > frame) add(ring.removeHead(), -1)
-          })
-        }
-        rank += 1
-        val sums: Seq[Any] = (0 until nv).map { i =>
-          vScale(i) match {
-            case Some(s) => sumD(i).setScale(s)
-            case None    => sumL(i)
-          }
-        }
-        val c = Array.tabulate[Any](nv)(i => contrib(r, i))
-        ring.append(c); add(c, 1)
-        if (ring.size > frame) add(ring.removeHead(), -1)
-        Row.fromSeq(r.toSeq ++ (pid +: rank +: sums))
-      }
-    }(Encoders.row(outSchema))
-    val foldSchema = st.kCols.foldLeft(new org.apache.spark.sql.types.StructType()
-        .add("__pid", LongType, nullable = false)) { (s2, c) =>
-      s2.add(st.schema(c))
-    }
-      .add("__rank_off", LongType, nullable = false)
-      .add(totalRowsCol, LongType, nullable = false)
-    val l = local.alias("l")
-    val f = broadcast(spark.createDataFrame(foldedRows, foldSchema)).alias("f")
-    val cond = (col("l.__pid") === col("f.__pid")) +: kIdx.indices.map(i =>
-      col(s"l.__k$i") <=> col(s"f.__k$i"))
-    var out = l.join(f, cond.reduce(_ && _))
-      .select((col("l.*") +: Seq(col("f.__rank_off"), col(s"f.$totalRowsCol"))): _*)
+    val local = localPass(st, "__t")((pid, k) =>
+      seeds.value.getOrDefault((pid, k), Vector.empty)
+        .foldLeft((Vector.empty[Array[Any]], ex.zero))(push))((ring, r) =>
+      (push(ring, ex.of(r)), ex.emit(ring._2)))
+    var out = joinOffsets(st, local, rows, totalRowsCol, Nil)
       .withColumn(rankCol, col("__rank_off") + col("__lrank"))
     values.zipWithIndex.foreach { case ((_, name), i) =>
       out = out.withColumn(name, col(s"__t$i"))
@@ -673,10 +608,11 @@ object GlobalOrder {
    *  1. range-repartition on (keys, value ASC NULLS LAST), sort within,
    *     [[pin]] (both passes below must read the same partition
    *     contents — the class doc);
-   *  2. one local walk over the pinned rows returns, per (partition,
-   *     key) segment, its first row index and its non-null count —
-   *     ≤ `distinctKeys + partitions − 1` segments, guarded by
-   *     `graft.groupedOrder.maxSegments` before anything is kept;
+   *  2. the segment census (one walk over the pinned rows) returns,
+   *     per (partition, key) segment, its first row index and its
+   *     non-null count — ≤ `distinctKeys + partitions − 1` segments,
+   *     guarded by `graft.groupedOrder.maxSegments` before anything is
+   *     kept;
    *  3. the driver sums each key's non-null count N and maps ranks
    *     `lo = floor(1 + p·(N−1))` and `lo + 1` to (partition, row
    *     index): nulls sort last within a key, so a segment's non-null
@@ -717,58 +653,26 @@ object GlobalOrder {
     val nk = keyCols.size
     val keySchema = StructType(sorted.schema.fields.take(nk))
     val vType = sorted.schema(nk).dataType
-    val keyRefs = keySchema.fields.toSeq.zipWithIndex.map { case (f, i) =>
-      BoundReference(i, f.dataType, f.nullable)
-    }
     val rows = sorted.queryExecution.toRdd
-    val maxSegs = spark.conf
-      .get("graft.groupedOrder.maxSegments", (1 << 20).toString).toInt
-    // the walk: (key, first row index, non-null count) per segment, in
-    // row order. A task stops at maxSegs + 1 segments and the handler
-    // keeps nothing past the bound, so the guard binds before the
-    // segments pile up on the driver
-    val segs = ArrayBuffer.empty[(Int, UnsafeRow, Long, Long)]
-    sc.runJob(rows, (it: Iterator[InternalRow]) => {
-      val keyOf = UnsafeProjection.create(keyRefs)
-      val out = ArrayBuffer.empty[(UnsafeRow, Long, Long)]
-      var cur: UnsafeRow = null
-      var first, nonNull, i = 0L
-      while (it.hasNext && out.length <= maxSegs) {
-        val r = it.next()
-        val k = keyOf(r)
-        if (cur == null || k != cur) {
-          if (cur != null) out += ((cur, first, nonNull))
-          cur = k.copy(); first = i; nonNull = 0L
-        }
-        if (!r.isNullAt(nk)) nonNull += 1
-        i += 1
-      }
-      if (cur != null) out += ((cur, first, nonNull))
-      out.toArray
-    }, (pid: Int, got: Array[(UnsafeRow, Long, Long)]) =>
-      if (segs.length <= maxSegs) got.foreach { case (k, f, n) => segs += ((pid, k, f, n)) })
-    require(segs.length <= maxSegs,
-      s"groupedQuantiles saw more than $maxSegs (partition, key) " +
-        "segments: key cardinality is large enough that a plain " +
-        "per-key aggregate already parallelizes — use that instead, or " +
-        "raise graft.groupedOrder.maxSegments")
+    // the census: each segment's first row index and non-null count
+    val segs = segments(sorted, 0 until nk, "groupedQuantiles")(0L)(
+      (nonNull, r) => if (r.isNullAt(nk)) nonNull else nonNull + 1)
     // per key, in partition order: N and the (partition, row index) of
     // ranks lo and lo + 1 per quantile (None past N)
-    val perKey = segs.groupBy(_._2).values.toSeq.map { ss =>
-      val inOrder = ss.sortBy(_._1)
-      val before = inOrder.scanLeft(0L)(_ + _._4)
+    val perKey = segs.groupBy(_.key).values.toSeq.map { inOrder =>
+      val before = inOrder.scanLeft(0L)(_ + _.acc)
       val n = before.last
       def at(rank: Long): Option[(Int, Long)] =
         if (rank < 1 || rank > n) None
         else {
           val s = before.lastIndexWhere(_ < rank)
-          Some((inOrder(s)._1, inOrder(s)._3 + rank - before(s) - 1))
+          Some((inOrder(s).pid, inOrder(s).first + rank - before(s) - 1))
         }
       val bounds = ps.flatMap { case (_, p) =>
         val lo = math.floor(1.0 + p * (n - 1).toDouble).toLong
         Seq(at(lo), at(lo + 1))
       }
-      (inOrder.head._2, n, bounds)
+      (inOrder.head.key, n, bounds)
     }
     val wanted = perKey.flatMap(_._3.flatten).groupBy(_._1).map {
       case (pid, at) => pid -> at.map(_._2).distinct.sorted.toArray

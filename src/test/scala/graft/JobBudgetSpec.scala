@@ -3,9 +3,11 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.model.Tables
+import graft.ops.GlobalOrder
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -149,6 +151,49 @@ class JobBudgetSpec extends SparkSpec {
     val (construct, execute) = warmJobs("q268_trim_bucket_shift")
     assert(construct + execute <= 18,
       s"warm q268 launched $construct + $execute jobs (budget 18)")
+  }
+
+  test("a warm q231_curation_report launches at most 15 jobs") {
+    // 15 = the count measured when this budget was set (sf0.001,
+    // local[4], 4 shuffle partitions; 16 before it): its keyless
+    // rank/prefix census is one walk over the pinned rows instead of a
+    // grouped aggregate and its collect
+    val (construct, execute) = warmJobs("q231_curation_report")
+    assert(construct + execute <= 15,
+      s"warm q231 launched $construct + $execute jobs (budget 15)")
+  }
+
+  private def lineitem = Tables.lineitem(spark, sf)
+    .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"),
+      col("l_extendedprice"), col("l_quantity").cast("long").as("q"))
+
+  test("building a groupedRankAndPrefix launches at most 3 jobs") {
+    // 3 = the count measured when this budget was set (4 before it),
+    // keyed or global, rank-only or with a running sum: the range
+    // exchange's sampling and shuffle-map jobs and one segment census
+    val order = Seq(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber"))
+    for (keys <- Seq(Seq(col("l_returnflag")), Nil);
+         values <- Seq(Nil, Seq((col("q"), "pfx")))) {
+      val (_, jobs) = jobsOf(GlobalOrder.groupedRankAndPrefix(lineitem, keys, order, values))
+      assert(jobs <= 3, s"keys=$keys values=$values: $jobs jobs to build (budget 3)")
+    }
+  }
+
+  test("building a groupedTrailingSums launches at most 3 jobs") {
+    // 3 = the count measured when this budget was set (6 before it):
+    // the census carries the segment tails, so the distinct pre-count
+    // and the separate tails collect are gone
+    val (_, jobs) = jobsOf(GlobalOrder.groupedTrailingSums(lineitem,
+      Seq(col("l_returnflag")), Seq(col("l_orderkey"), col("l_linenumber")),
+      values = Seq((col("q"), "tsum")), frame = 5))
+    assert(jobs <= 3, s"groupedTrailingSums launched $jobs jobs to build (budget 3)")
+  }
+
+  test("building a groupedQuantiles launches at most 4 jobs") {
+    // the range exchange's two jobs, one census, one boundary-row pick
+    val (_, jobs) = jobsOf(GlobalOrder.groupedQuantiles(lineitem, Seq("l_returnflag"),
+      "l_extendedprice", Seq(("p50", 0.5))))
+    assert(jobs <= 4, s"groupedQuantiles launched $jobs jobs to build (budget 4)")
   }
 
   test("a groupedQuantiles result is a LocalRelation: consuming it launches 0 jobs") {

@@ -42,6 +42,30 @@ class PlanShapesSpec extends AnyFunSuite {
     assert(PlanShapes.fingerprint(a) == PlanShapes.fingerprint(b))
   }
 
+  test("a fingerprint does not depend on how many expression ids the JVM allocated") {
+    // the q210 flip: a scan whose DataFilters/PushedFilters render past
+    // Spark's 100-character metadata cut fingerprinted differently once
+    // earlier queries pushed the expression ids to one more digit
+    import org.apache.spark.sql.functions.col
+    val spark = TestSpark.spark
+    def fp = PlanShapes.untruncated(spark) {
+      PlanShapes.fingerprint(graft.model.Tables.lineitem(spark, TestSpark.sf)
+        .filter(col("l_quantity") > 10 && col("l_discount") < 0.05 &&
+          col("l_tax") > 0.01 && col("l_linestatus") =!= "F" &&
+          col("l_returnflag") =!= "N")
+        .select(col("l_orderkey"))
+        .queryExecution.executedPlan.toString)
+    }
+    val before = fp
+    // every id of `before` is below the next power of ten; every id of
+    // the second rendering is at or above it
+    val next = org.apache.spark.sql.catalyst.expressions.NamedExpression.newExprId.id
+    val power = Iterator.iterate(10L)(_ * 10).dropWhile(_ <= next).next()
+    (next until power).foreach(_ =>
+      org.apache.spark.sql.catalyst.expressions.NamedExpression.newExprId)
+    assert(fp == before)
+  }
+
   test("a real operator change survives normalization") {
     val smj = "SortMergeJoin [a#1], [b#2], Inner"
     val bhj = "BroadcastHashJoin [a#1], [b#2], Inner, BuildRight"

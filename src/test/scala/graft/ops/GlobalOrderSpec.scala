@@ -168,6 +168,27 @@ class GlobalOrderSpec extends SparkSpec {
     assert(got(1).getString(0) == "a" && got(1).getDouble(1) == 2.0, got(1))
   }
 
+  test("grouped Long sums fail on overflow instead of wrapping") {
+    // o = 3 needs (Long.MaxValue − 1) + 5 in both operators: the ANSI
+    // windows they replace raise ARITHMETIC_OVERFLOW there, so a wrapped
+    // -9223372036854775805 would be a silently wrong answer
+    import spark.implicits._
+    val src = Seq((1, 1L, Long.MaxValue - 1), (1, 2L, 5L), (1, 3L, 7L)).toDF("k", "o", "v")
+    def overflows(what: String)(build: => org.apache.spark.sql.DataFrame): Unit = {
+      val e = intercept[Exception](build.collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException]), s"$what: $e")
+    }
+    overflows("trailing sums") {
+      GlobalOrder.groupedTrailingSums(src, Seq(col("k")), Seq(col("o")),
+        values = Seq((col("v"), "t")), frame = 2)
+    }
+    overflows("prefix sums") {
+      GlobalOrder.groupedRankAndPrefix(src, Seq(col("k")), Seq(col("o")),
+        values = Seq((col("v"), "p")))
+    }
+  }
+
   test("grouped: double value columns are rejected (order-dependent sums)") {
     intercept[IllegalArgumentException] {
       GlobalOrder.groupedRankAndPrefix(li, Seq(col("l_orderkey")),
@@ -293,6 +314,23 @@ class GlobalOrderSpec extends SparkSpec {
           ps = Seq(("p50", 0.5)))
       }
       assert(e.getMessage.contains("maxSegments"), e.getMessage)
+    } finally {
+      spark.conf.unset("graft.groupedOrder.maxSegments")
+    }
+  }
+
+  test("trailing sums: the segment guard binds before the driver collect") {
+    // ~1.5k order keys at sf0.001 against a cap of 1: the census stops
+    // at the bound, and the segment guard is checked before the
+    // frame × segments product
+    spark.conf.set("graft.groupedOrder.maxSegments", "1")
+    try {
+      val e = intercept[IllegalArgumentException] {
+        GlobalOrder.groupedTrailingSums(li, Seq(col("l_orderkey")),
+          Seq(col("l_linenumber")), values = Seq((col("q"), "tsum")), frame = 3)
+      }
+      assert(e.getMessage.contains("maxSegments"), e.getMessage)
+      assert(!e.getMessage.contains("maxTailContribs"), e.getMessage)
     } finally {
       spark.conf.unset("graft.groupedOrder.maxSegments")
     }

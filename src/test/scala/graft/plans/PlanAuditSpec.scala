@@ -311,7 +311,7 @@ class PlanAuditSpec extends SparkSpec {
       "q95_repeated_passages" -> (2, 0, 0, 0),
       "q100_rank_rewrite"    -> (2, 0, 0, 0),
       // grouped-GlobalOrder family (round 7): the range exchange is
-      // the only fact-scale shuffle (the segment fold runs as its own
+      // the only fact-scale shuffle (the segment census runs as its own
       // tiny job at build time); offsets come back as LocalRelation
       // broadcasts; zero windows by construction
       "q67_distribution_ranks"  -> (1, 1, 1, 0),
