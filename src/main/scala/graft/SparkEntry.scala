@@ -834,9 +834,9 @@ object SparkEntry {
       s"""WITH RECURSIVE $minhashPairsCtes,
         |$clusterCtes
         |SELECT doc_id, cluster FROM cl ORDER BY doc_id""".stripMargin,
-    // q257: star-contraction CC lands on the SAME fixpoint as q72's
-    // min-label propagation (component minimum as the label), so one
-    // oracle pins two independent algorithms; degree = distinct
+    // q257: the near-dup labels q72 serves (star contraction's
+    // fixpoint: component minimum as the label, which the recursive
+    // CTE's min-label propagation replays); degree = distinct
     // pair-graph neighbors
     "q257_cc_stars" ->
       s"""WITH RECURSIVE $minhashPairsCtes,

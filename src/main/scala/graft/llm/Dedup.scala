@@ -902,21 +902,48 @@ object Dedup {
   }
 
   /**
+   * Near-dup connected components with each node's pair-graph degree
+   * (q257; the degree is the hub-document signal a dedup triage reads).
+   * The labels are the shared `neardup-labels` artifact
+   * ([[graft.llm.Pipeline.nearDupClusters]], built by [[ccStarLabels]])
+   * that q72 serves too, so a warm call runs no star round. The degree
+   * is a plain row count: the pair artifact holds each unordered pair
+   * once (`id_a < id_b`), so the symmetric graph has no repeated
+   * (src, dst) row.
+   */
+  def ccStarClusters(spark: SparkSession, dir: String): DataFrame = {
+    val deg = pairGraph(spark, dir).groupBy(col("src").as("doc_id"))
+      .agg(count(lit(1)).as("degree"))
+    Pipeline.nearDupClusters(spark, dir).join(deg, Seq("doc_id"))
+      .select(col("doc_id"), col("cluster"), col("degree"))
+      .orderBy("doc_id")
+  }
+
+  /** The SYMMETRIC (src, dst) pair graph: every verified pair of the
+    * memoized `lsh-pairs` artifact in both directions. */
+  private[llm] def pairGraph(spark: SparkSession, dir: String): DataFrame = {
+    val pairs = minhashLsh(spark, dir).select(col("id_a"), col("id_b"))
+    pairs
+      .union(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
+      .toDF("src", "dst")
+  }
+
+  /**
    * Connected components via alternating LARGE-STAR / SMALL-STAR
-   * rounds (q257) — the round-bounded CC algorithm (Kiveris et al.,
-   * "Connected Components in MapReduce and Beyond", SoCC 2014) beside
-   * q72's min-label propagation. Propagation needs one round per unit
-   * of component DIAMETER (its 64-round backstop is a correctness
-   * fail-loud, so a 100-doc duplication chain — boilerplate evolving
-   * one edit at a time across a crawl — would legitimately abort);
-   * star contraction converges in O(log² n) rounds REGARDLESS of
-   * diameter, because every round rewires whole neighborhoods onto
-   * their local minimum instead of leaking labels one hop. Both
-   * algorithms provably land on the same fixpoint (each component
-   * becomes a star centered on its minimum doc_id), so the q72 oracle
-   * replays this query too — two independent algorithms pinned to one
-   * oracle, and the output adds each node's pair-graph degree (the
-   * hub-document signal a dedup triage reads).
+   * rounds over a SYMMETRIC edge frame (src, dst), no self-loops:
+   * returns (labels (doc_id, cluster), rounds taken). This is the
+   * round-bounded CC algorithm of Kiveris et al. ("Connected
+   * Components in MapReduce and Beyond", SoCC 2014), and it builds the
+   * `neardup-labels` artifact over [[pairGraph]]. Min-label
+   * propagation would need one round per unit of component DIAMETER,
+   * so a 100-doc duplication chain — boilerplate evolving one edit at a
+   * time across a crawl — would need 100 rounds; star contraction
+   * converges in O(log² n) rounds REGARDLESS of diameter, because every
+   * round rewires whole neighborhoods onto their local minimum instead
+   * of leaking labels one hop. Each component becomes a star centered
+   * on its minimum doc_id, the fixpoint the q72 oracle replays; the
+   * planted-path spec feeds a synthetic chain of diameter 1023 and
+   * asserts the logarithmic round count.
    *
    * Per round, on the canonical (big > small) edge set E:
    *  - LARGE-STAR: for every directed (u,v) with v > u, emit
@@ -931,36 +958,16 @@ object Dedup {
    * never the corpus; the per-key skew is that of the equi-join back
    * it replaces. `distinct` collapses the multigraph between rounds.
    *
-   * Convergence via the endpoint-sum invariant (the q72 discipline,
-   * lifted from labels to edges): both ops replace an edge's partner
-   * with a value ≤ it and dedup only removes rows, so the sum of all
-   * canonical endpoints (DECIMAL — Long endpoint sums overflow at
-   * 100 TB edge counts; 0 for no edges) strictly decreases on ANY
-   * change; an unchanged sum IS the fixpoint — no next-vs-previous diff
-   * join, and no job of its own: the sum is an unnamed `Observation`
-   * collected by the round's checkpoint job. `localCheckpoint`
-   * truncates lineage at each round boundary exactly like
-   * [[graft.llm.Pipeline.nearDupClusters]]. The pair set is already a
-   * pinned artifact ([[minhashLshFrom]]), so it is read as is.
+   * Convergence via the endpoint-sum invariant: both ops replace an
+   * edge's partner with a value ≤ it and dedup only removes rows, so
+   * the sum of all canonical endpoints (DECIMAL — Long endpoint sums
+   * overflow at 100 TB edge counts; 0 for no edges) strictly decreases
+   * on ANY change; an unchanged sum IS the fixpoint — no
+   * next-vs-previous diff join, and no job of its own: the sum is an
+   * unnamed `Observation` collected by the round's checkpoint job.
+   * `localCheckpoint` truncates lineage at each round boundary, so a
+   * round's plan never embeds the previous rounds' trees.
    */
-  def ccStarClusters(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = minhashLsh(spark, dir).select(col("id_a"), col("id_b"))
-    val sym = pairs
-      .union(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
-      .toDF("src", "dst")
-    val (labels, _) = ccStarLabels(sym)
-    val deg = sym.groupBy(col("src").as("doc_id"))
-      .agg(countDistinct(col("dst")).as("degree"))
-    labels.join(deg, Seq("doc_id"))
-      .select(col("doc_id"), col("cluster"), col("degree"))
-      .orderBy("doc_id")
-  }
-
-  /** Star-contraction core over a SYMMETRIC edge frame (src, dst), no
-    * self-loops: returns (labels (doc_id, cluster), rounds taken).
-    * Spec entry point — the planted-path spec feeds a synthetic chain
-    * whose diameter exceeds propagation's backstop and asserts the
-    * logarithmic round count. */
   private[graft] def ccStarLabels(sym: DataFrame): (DataFrame, Int) = {
     // canonical storage: one row per undirected edge, big > small
     var edges = sym.filter(col("src") > col("dst"))

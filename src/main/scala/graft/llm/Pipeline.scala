@@ -61,68 +61,27 @@ object Pipeline {
   /**
    * Near-duplicate CLUSTERS: connected components over the MinHash-LSH
    * pair graph (dedup must drop whole duplicate groups, not just pairs).
-   * Iterative min-label propagation — each round is one join + one
-   * min-aggregate, converging in O(component diameter) rounds (near-dup
-   * components are tiny, so 2–3). The driver loop only checks a scalar
-   * convergence count; labels never leave the cluster.
+   * Built by star contraction ([[Dedup.ccStarLabels]]), whose round
+   * count grows with the pair graph's size (O(log² n)), not with any
+   * component's diameter — a duplication chain of any length converges.
+   * Each component is labeled by its minimum doc_id; labels never leave
+   * the cluster.
    */
   def nearDupClusters(spark: SparkSession, dir: String): DataFrame =
-    // memoized per corpus: the label table is the artifact a dedup
-    // stage persists — the survivor report (q69) reads the clusters
-    // (q72) computed, never re-propagates
+    // memoized per corpus as a PINNED artifact: the label table is the
+    // artifact a dedup stage persists — the survivor reports (q69,
+    // q169), the leakage splits (q223/q224) and q257 read the labels
+    // q72 computed, never re-run the rounds; memoIndex's count forces
+    // the pin inside the timed build
     ModelCache.memoIndex(Tables.documents(spark, dir), "neardup-labels") {
-      nearDupClustersImpl(spark, dir)
+      graft.ops.GlobalOrder.pin(
+        Dedup.ccStarLabels(Dedup.pairGraph(spark, dir))._1.orderBy("doc_id"))
     }
-
-  private def nearDupClustersImpl(spark: SparkSession, dir: String): DataFrame = {
-    // localCheckpoint truncates lineage at each round boundary: without
-    // it every round's plan embeds all previous rounds' trees and
-    // re-optimization cost grows per iteration (measured 18s -> ~6s on
-    // the sf0.1 bench)
-    val pairs = Dedup.minhashLsh(spark, dir)
-      .select(col("id_a"), col("id_b")).localCheckpoint()
-    val edges = pairs
-      .union(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
-      .toDF("src", "dst").localCheckpoint()
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("lab", col("node")).localCheckpoint()
-    var converged = false
-    var rounds = 0
-    // convergence via the label-sum invariant: min-propagation only ever
-    // DECREASES labels, so the sum strictly drops on any change and an
-    // unchanged sum == convergence — one scalar aggregate per round
-    // instead of a next-vs-previous join. The cap is a LOUD backstop,
-    // not a silent exit: q223/q224 build a zero-leakage guarantee on
-    // these labels, so stopping before convergence must fail the job
-    // rather than ship mislabeled components (rounds needed = component
-    // diameter; near-dup components are tiny, 64 covers any real chain)
-    val maxRounds = 64
-    var prevSum = Option.empty[Long]
-    while (!converged && rounds < maxRounds) {
-      val viaEdges = edges
-        .join(labels, edges("src") === labels("node"))
-        .select(col("dst").as("node"), col("lab"))
-      val next = labels.select(col("node"), col("lab")).union(viaEdges)
-        .groupBy(col("node")).agg(min(col("lab")).as("lab")).localCheckpoint()
-      val s = next.agg(sum(col("lab"))).first().getLong(0)
-      labels = next
-      converged = prevSum.contains(s)
-      prevSum = Some(s)
-      rounds += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"near-dup label propagation did not converge within $maxRounds " +
-          "rounds — component diameter exceeds the backstop; labels would " +
-          "be wrong and the q223 split-leakage guarantee would not hold")
-    labels.select(col("node").as("doc_id"), col("lab").as("cluster"))
-      .orderBy("doc_id")
-  }
 
   /**
    * The corpus that SURVIVES near-dup deduplication — the step a real
-   * pipeline runs after [[nearDupClusters]]: min-label propagation makes
-   * each cluster label the cluster's minimum doc_id, so the canonical
+   * pipeline runs after [[nearDupClusters]]: star contraction labels
+   * each cluster with the cluster's minimum doc_id, so the canonical
    * member is exactly the node whose label equals itself; every other
    * clustered node is dropped, and docs in no cluster pass through
    * untouched (left-anti join against the non-canonical set — the
@@ -155,7 +114,7 @@ object Pipeline {
    * cleanest copy.
    *
    * Scale shape: reads the STORED cluster-label artifact
-   * ([[nearDupClusters]], memoized — no re-propagation) and joins it
+   * ([[nearDupClusters]], memoized — no rounds re-run) and joins it
    * with a row-local quality projection; the ranking window partitions
    * by cluster over the LABELED docs only — a near-dup-sized sliver of
    * the corpus, not the corpus itself (the few-key window ban targets

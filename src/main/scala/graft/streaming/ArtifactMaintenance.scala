@@ -709,8 +709,8 @@ object ArtifactMaintenance {
    * Streamed maintenance of the near-dup CLUSTER LABEL artifact
    * (`neardup-labels` — what q69/q190/q223/q224/q229/q230/q231 serve
    * from): connected components of the MinHash-LSH pair graph,
-   * maintained under document INSERTS without ever re-running global
-   * propagation — at 100 TB you cannot rebuild connected components
+   * maintained under document INSERTS without ever re-running the
+   * global build — at 100 TB you cannot rebuild connected components
    * per ingest (round-10 verdict #3).
    *
    * The insight that makes increments cheap: new documents only ever
@@ -738,7 +738,7 @@ object ArtifactMaintenance {
    *     insert) and `remap` rows for existing roots a merge re-roots
    *     (old_root → new min). Roots are always component MINIMUMS
    *     (min-union), so served labels equal the batch builder's
-   *     min-label propagation exactly.
+   *     component-minimum labels exactly.
    *
    * The verified pairs themselves persist too ([[servePairs]] — the
    * `lsh-pairs` artifact's live twin): a pair is an immutable fact
@@ -749,8 +749,8 @@ object ArtifactMaintenance {
    * Serve resolves assign through the remap forest iteratively (the
    * label-sum invariant proves convergence — min-union only ever
    * decreases labels); chain depth is bounded by how many times a
-   * root can be re-rooted between compactions, with the same loud
-   * backstop as the batch propagation. Each sub-store is a
+   * root can be re-rooted between compactions, with a loud 64-round
+   * backstop. Each sub-store is a
    * [[ManifestArtifact]], so crash/replay idempotence is inherited;
    * commit order (docs, bands, pairs, remap, assign) is chosen so a
    * replay after ANY prefix recomputes the identical remaining
@@ -898,8 +898,8 @@ object ArtifactMaintenance {
     def serve(spark: SparkSession): DataFrame = {
       val remap = remapArt.serve(spark).localCheckpoint()
       var labels = assignArt.serve(spark).localCheckpoint()
-      // label-sum invariant, as in the batch propagation: min-union
-      // remaps only ever DECREASE labels, so an unchanged sum means
+      // label-sum invariant: min-union remaps only ever DECREASE
+      // labels, so an unchanged sum means
       // every chain is fully resolved
       var prevSum = Option.empty[Long]
       var converged = false

@@ -106,20 +106,37 @@ class JobBudgetSpec extends SparkSpec {
     graft.llm.ModelCache.invalidate()
   }
 
-  test("a warm q257_cc_stars launches at most 21 jobs") {
-    // 21 = the count measured when this budget was set (sf0.001,
-    // local[4], 4 shuffle partitions; 46 before it): 14 while the frame
-    // is built — the memo-hit pair set costs none, the canonical edge
-    // set 2, each of the 2 star rounds 6 (two windowed mins, two
-    // distincts; the convergence sum rides the round's checkpoint job
-    // as an Observation) — and 7 to execute the label/degree plan
+  test("a warm q257_cc_stars launches at most 6 jobs") {
+    // 6 = the count measured when this budget was set (sf0.001,
+    // local[4], 4 shuffle partitions; 21 before it, 46 before that):
+    // none while the frame is built — the labels and the pair set are
+    // both memo hits, so no star round runs — and 6 to execute the
+    // degree count and its join onto the labels
     graft.llm.ModelCache.invalidate()
     val q = SparkEntry.queries("q257_cc_stars")
-    noop(q(spark, sf)) // memo-cold: builds lsh-bands and lsh-pairs
+    noop(q(spark, sf)) // memo-cold: builds lsh-bands, lsh-pairs and neardup-labels
     val (df, construct) = jobsOf(q(spark, sf))
     val (_, execute) = jobsOf(noop(df))
-    assert(construct + execute <= 21,
-      s"warm q257 launched $construct + $execute jobs (budget 21)")
+    assert(construct + execute <= 6,
+      s"warm q257 launched $construct + $execute jobs (budget 6)")
+    graft.llm.ModelCache.invalidate()
+  }
+
+  test("after q72 builds neardup-labels, building q257 launches 0 jobs and " +
+    "its label leaf is a LogicalRDD") {
+    graft.llm.ModelCache.invalidate()
+    noop(SparkEntry.queries("q72_neardup_clusters")(spark, sf))
+    val (df, jobs) = jobsOf(SparkEntry.queries("q257_cc_stars")(spark, sf))
+    assert(jobs == 0, s"building q257 over built labels launched $jobs jobs")
+    // the memoized label table is one pinned leaf, and q257 reads its rows
+    def rdds(d: DataFrame) = d.queryExecution.analyzed.collectLeaves()
+      .collect { case l: LogicalRDD => l.rdd }
+    val labels = graft.llm.Pipeline.nearDupClusters(spark, sf)
+    assert(labels.queryExecution.analyzed.collectLeaves().size == 1 &&
+      rdds(labels).size == 1,
+      s"the label artifact is not pinned:\n${labels.queryExecution.analyzed}")
+    assert(rdds(df).exists(_ eq rdds(labels).head),
+      s"q257 does not read the label artifact:\n${df.queryExecution.analyzed}")
     graft.llm.ModelCache.invalidate()
   }
 

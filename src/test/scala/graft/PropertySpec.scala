@@ -282,17 +282,7 @@ class PropertySpec extends SparkSpec {
     // the empty graph is a case too: no edges, no labels
     (List.empty[(Long, Long)] +: cases).foreach { es =>
       // ground truth: union-find, components labeled by their minimum
-      val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct
-      val parent = scala.collection.mutable.Map(nodes.map(v => v -> v): _*)
-      def find(v: Long): Long = {
-        var r = v; while (parent(r) != r) r = parent(r); r
-      }
-      es.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b)); if (ra != rb) parent(ra) = rb
-      }
-      val truth = nodes.groupBy(find).flatMap { case (_, vs) =>
-        val m = vs.min; vs.map(_ -> m)
-      }
+      val truth = UnionFind.minLabels(es)
       val sym = es.toDF("src", "dst")
         .union(es.map(_.swap).toDF("src", "dst"))
       val (labels, rounds) = graft.llm.Dedup.ccStarLabels(sym)

@@ -267,6 +267,29 @@ class DedupSpec extends SparkSpec {
     assert(prop.except(stars).count() == 0)
   }
 
+  test("the lsh-pairs artifact holds each unordered pair once, id_a < id_b") {
+    // q257's degree counts rows of the symmetric pair graph, which is
+    // exact only while no pair repeats and none is stored reversed
+    val pairs = Dedup.minhashLsh(spark, sf).select(col("id_a"), col("id_b"))
+    val n = pairs.count()
+    assert(n > 0, "the fixture plants near-dup pairs")
+    assert(pairs.filter(col("id_a") >= col("id_b")).count() == 0,
+      "a pair is stored with id_a >= id_b")
+    assert(pairs.distinct().count() == n, "a pair is stored twice")
+  }
+
+  test("near-dup labels equal a driver-side union-find over the sf0.001 pair set") {
+    val es = Dedup.minhashLsh(spark, sf).select(col("id_a"), col("id_b"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val truth = graft.UnionFind.minLabels(es)
+    assert(truth.nonEmpty, "the fixture plants near-dup pairs")
+    val rows = Pipeline.nearDupClusters(spark, sf).collect()
+    val ids = rows.map(_.getLong(0))
+    assert(ids.sameElements(ids.sorted), "labels are not ordered by doc_id")
+    assert(rows.map(r => r.getLong(0) -> r.getLong(1)).toMap == truth,
+      "near-dup labels drifted from union-find")
+  }
+
   test("recursive-CTE reachability enumerates a diamond's paths and min hops") {
     import spark.implicits._
     // a → b → d, a → c → d, a → d: reach(a,d) via 3 paths, min 1 hop
