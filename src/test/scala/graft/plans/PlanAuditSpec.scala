@@ -442,11 +442,11 @@ class PlanAuditSpec extends SparkSpec {
       // q255: four group-less aggregates (one per format's read-back)
       // unioned — each is a map-side-complete partial + singleton merge
       "q255_format_roundtrip"   -> (4, 0, 0, 0),
-      // q257: the star-contraction rounds live behind localCheckpoint
-      // truncation — the SERVED plan is just the final-edge label
-      // aggregate, the degree aggregate, their join, and the output
+      // q257: the labels are the pinned neardup-labels artifact (the
+      // star-contraction rounds never appear) — the SERVED plan is just
+      // the degree row count, its join onto the labels, and the output
       // sort; nothing corpus-scale survives into the serve plan
-      "q257_cc_stars"           -> (4, 0, 1, 0),
+      "q257_cc_stars"           -> (3, 0, 1, 0),
       // q258: the recursion (UnionLoopExec) iterates over the PINNED
       // catalog-sized edge list — no join exec outside the loop, one
       // aggregate + the output sort
