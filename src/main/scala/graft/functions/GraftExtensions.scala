@@ -18,7 +18,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction(GraftExtensions.dotProductD)
     ext.injectFunction(GraftExtensions.dotProductFD)
-    // whole-operator extension: plans graft.plans.TopKPerKeyNode
+    // whole-operator extension: plans graft.plans.TopKPerKeyNode and
+    // graft.plans.GroupedOrderNode
     ext.injectPlannerStrategy(_ => new graft.plans.GraftStrategies)
     // optimizer extension: rewrite discarded-rank row_number filters
     // into TopKPerKeyNode (see graft.plans.InferTopKPerKey)

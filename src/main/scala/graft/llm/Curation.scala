@@ -481,8 +481,7 @@ object Curation {
   def vocabGrowth(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     // the rank side's columns are RENAMED before the join: the grouped
-    // rank's codegen path (r17) preserves attribute lineage where the
-    // old mapPartitions boundary regenerated it, so joining two frames
+    // rank passes its input's attributes through, so joining two frames
     // derived from the same `docs` scan on same-named columns now
     // trips Spark's ambiguous-self-join detection — unique names make
     // the resolution explicit instead of lineage-accidental

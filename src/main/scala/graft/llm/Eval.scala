@@ -215,8 +215,8 @@ object Eval {
     * batch aggregate or its streamed twin). */
   private[graft] def prCurveFrom(perScore: DataFrame): DataFrame = {
     // BOTH cumulative counts ride ONE rank pass: two single-value
-    // passes would pay the range exchange + pin + offset fold +
-    // broadcast join twice for the same (score) order — the global
+    // passes would pay the range exchange + segment census + offset
+    // pass twice for the same (score) order — the global
     // (keys = Nil) form takes any number of value columns (r18; guide
     // §2.4 "remove shuffles outright")
     val withBoth = graft.ops.GlobalOrder.groupedRankAndPrefix(

@@ -331,21 +331,23 @@ object Pipeline {
    * artifact (pair-volume-sized, NOT corpus-sized) — the corpus-side
    * assignment broadcasts it and the corpus never shuffles; the
    * re-audit joins the pair artifact against the label table twice,
-   * both broadcast, zero corpus scans.
+   * zero corpus scans. All three joins read one broadcast: the label
+   * side is the same subtree in each (its null-key filter written out,
+   * where the inner joins would infer it and the left join would not;
+   * columns renamed only after each join), so the exchange is reused.
    */
   def leakageSafeSplit(spark: SparkSession, dir: String): DataFrame = {
-    val labels = nearDupClusters(spark, dir)
+    val labels = broadcast(nearDupClusters(spark, dir).filter(col("doc_id").isNotNull))
     val asg = Tables.documents(spark, dir).select(col("doc_id"))
-      .join(broadcast(labels), Seq("doc_id"), "left")
+      .join(labels, Seq("doc_id"), "left")
       .withColumn("split", splitOf(coalesce(col("cluster"), col("doc_id"))))
     // every pair member is a cluster node, so inner joins are total;
     // splits compare equal iff the reps do — counted, not assumed
-    val leaked = Dedup.minhashLsh(spark, dir)
-      .select(col("id_a"), col("id_b"))
-      .join(broadcast(labels.select(
-        col("doc_id").as("id_a"), col("cluster").as("rep_a"))), Seq("id_a"))
-      .join(broadcast(labels.select(
-        col("doc_id").as("id_b"), col("cluster").as("rep_b"))), Seq("id_b"))
+    def rep(pairs: DataFrame, id: String, as: String): DataFrame =
+      pairs.join(labels, col(id) === col("doc_id"))
+        .drop("doc_id").withColumnRenamed("cluster", as)
+    val leaked = rep(rep(Dedup.minhashLsh(spark, dir).select(col("id_a"), col("id_b")),
+        "id_a", "rep_a"), "id_b", "rep_b")
       .filter(splitOf(col("rep_a")) =!= splitOf(col("rep_b")))
       .agg(count(lit(1)).as("leaked_pairs"))
     asg.groupBy(col("split"))

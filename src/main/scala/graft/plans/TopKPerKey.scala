@@ -63,12 +63,16 @@ case class TopKPerKeyNode(
   * EnsureRequirements from the final node's required distribution.
   * Only the final phase materializes the optional rank column — the
   * partial phase can't know a row's global rank, only whether it might
-  * still be a survivor. */
+  * still be a survivor. [[GroupedOrderNode]] plans as one
+  * [[GroupedOrderExec]], whose range exchange and sort come from its
+  * required child distribution and ordering. */
 class GraftStrategies extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TopKPerKeyNode(g, o, k, child, rank) =>
       TopKPerKeyExec(g, o, k, partial = false, rank,
         TopKPerKeyExec(g, o, k, partial = true, None, planLater(child))) :: Nil
+    case GroupedOrderNode(keys, order, values, frame, out, child) =>
+      GroupedOrderExec(keys, order, values, frame, out, planLater(child)) :: Nil
     case _ => Nil
   }
 }
@@ -166,8 +170,9 @@ case class TopKPerKeyExec(
 /** User-facing entry point. */
 object TopK {
 
-  /** Idempotently make the planner aware of [[TopKPerKeyNode]] for
-    * sessions not built with [[graft.functions.GraftExtensions]]. */
+  /** Idempotently make the planner aware of [[TopKPerKeyNode]] and
+    * [[GroupedOrderNode]] for sessions not built with
+    * [[graft.functions.GraftExtensions]]. */
   def ensureStrategy(spark: SparkSession): Unit = synchronized {
     val have = spark.experimental.extraStrategies.exists(_.isInstanceOf[GraftStrategies])
     if (!have) {

@@ -184,26 +184,27 @@ class JobBudgetSpec extends SparkSpec {
     .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"),
       col("l_extendedprice"), col("l_quantity").cast("long").as("q"))
 
-  test("building a groupedRankAndPrefix launches at most 3 jobs") {
-    // 3 = the count measured when this budget was set (4 before it),
-    // keyed or global, rank-only or with a running sum: the range
-    // exchange's sampling and shuffle-map jobs and one segment census
+  test("building a groupedRankAndPrefix launches 0 jobs") {
+    // 0 = the count measured when this budget was set (3 before it),
+    // keyed or global, rank-only or with a running sum: the operator is
+    // a planned exec, so its range exchange and segment census run when
+    // the plan executes
     val order = Seq(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber"))
     for (keys <- Seq(Seq(col("l_returnflag")), Nil);
          values <- Seq(Nil, Seq((col("q"), "pfx")))) {
       val (_, jobs) = jobsOf(GlobalOrder.groupedRankAndPrefix(lineitem, keys, order, values))
-      assert(jobs <= 3, s"keys=$keys values=$values: $jobs jobs to build (budget 3)")
+      assert(jobs == 0, s"keys=$keys values=$values: $jobs jobs to build (budget 0)")
     }
   }
 
-  test("building a groupedTrailingSums launches at most 3 jobs") {
-    // 3 = the count measured when this budget was set (6 before it):
-    // the census carries the segment tails, so the distinct pre-count
-    // and the separate tails collect are gone
+  test("building a groupedTrailingSums launches 0 jobs") {
+    // 0 = the count measured when this budget was set (3 before it, 6
+    // before that): the census carries the segment tails and runs with
+    // the plan
     val (_, jobs) = jobsOf(GlobalOrder.groupedTrailingSums(lineitem,
       Seq(col("l_returnflag")), Seq(col("l_orderkey"), col("l_linenumber")),
       values = Seq((col("q"), "tsum")), frame = 5))
-    assert(jobs <= 3, s"groupedTrailingSums launched $jobs jobs to build (budget 3)")
+    assert(jobs == 0, s"groupedTrailingSums launched $jobs jobs to build (budget 0)")
   }
 
   test("building a groupedQuantiles launches at most 4 jobs") {

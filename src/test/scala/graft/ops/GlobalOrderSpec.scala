@@ -197,27 +197,36 @@ class GlobalOrderSpec extends SparkSpec {
     }
   }
 
-  // AQE's rendering repeats nodes under "== Initial Plan ==" — audit the
-  // final plan section only. Every rank/prefix plan, keyed or global,
-  // carries no window and gets its offsets back as a broadcast
-  // LocalRelation — provably bounded, so the broadcast hint passes the
-  // forced-broadcast audit.
-  private def offsetBroadcastPlan(df: org.apache.spark.sql.DataFrame): String = {
+  // Every rank/prefix plan, keyed or global, rank-only or with sums, is
+  // one GroupedOrderExec over one range exchange: no window, and no
+  // broadcast of the operator's own (the inputs here join nothing).
+  private def groupedPlan(df: org.apache.spark.sql.DataFrame): Unit = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
     df.collect()
-    val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
-    assert(!plan.contains("Window ["), s"rank/prefix must plan NO window:\n$plan")
-    assert(plan.contains("BroadcastExchange") || plan.contains("BroadcastHashJoin"),
-      s"offsets must come back as a broadcast:\n$plan")
-    assert(graft.plans.PlanChecks.forcedBroadcastViolations(df).isEmpty)
-    plan
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p                        => p
+    }
+    val ops = plan.collect { case g: graft.plans.GroupedOrderExec => g }
+    assert(ops.size == 1, s"expected one GroupedOrderExec:\n$plan")
+    val ranges = ops.head.collect {
+      case s: ShuffleExchangeExec if s.outputPartitioning.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.physical.RangePartitioning] => s
+    }
+    assert(ranges.size == 1, s"expected one range exchange under the operator:\n$plan")
+    assert(plan.collect { case b: BroadcastExchangeExec => b }.isEmpty,
+      s"the operator adds no broadcast:\n$plan")
+    assert(!plan.toString.contains("Window ["), s"rank/prefix must plan NO window:\n$plan")
   }
 
-  test("grouped plan: no window anywhere; offsets return as a LocalRelation broadcast") {
-    val plan = offsetBroadcastPlan(GlobalOrder.groupedRankAndPrefix(liK,
+  test("grouped plan: one GroupedOrderExec over one range exchange") {
+    groupedPlan(GlobalOrder.groupedRankAndPrefix(liK,
       Seq(col("l_returnflag")),
       Seq(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber")),
       values = Seq((col("q"), "pfx"))))
-    assert(plan.contains("MapPartitions"), s"expected mapPartitions pass:\n$plan")
+    groupedPlan(GlobalOrder.groupedTrailingSums(liK, Seq(col("l_returnflag")),
+      Seq(col("l_orderkey"), col("l_linenumber")), values = Seq((col("q"), "tsum")), frame = 3))
   }
 
   test("pin honors the reliable-checkpoint escape hatch") {
@@ -296,7 +305,7 @@ class GlobalOrderSpec extends SparkSpec {
     try {
       val e = intercept[IllegalArgumentException] {
         GlobalOrder.groupedRankAndPrefix(li, Seq(col("l_orderkey")),
-          Seq(col("l_linenumber")))
+          Seq(col("l_linenumber"))).collect()
       }
       assert(e.getMessage.contains("maxSegments"), e.getMessage)
     } finally {
@@ -327,7 +336,7 @@ class GlobalOrderSpec extends SparkSpec {
     try {
       val e = intercept[IllegalArgumentException] {
         GlobalOrder.groupedTrailingSums(li, Seq(col("l_orderkey")),
-          Seq(col("l_linenumber")), values = Seq((col("q"), "tsum")), frame = 3)
+          Seq(col("l_linenumber")), values = Seq((col("q"), "tsum")), frame = 3).collect()
       }
       assert(e.getMessage.contains("maxSegments"), e.getMessage)
       assert(!e.getMessage.contains("maxTailContribs"), e.getMessage)
@@ -345,7 +354,7 @@ class GlobalOrderSpec extends SparkSpec {
       val e = intercept[IllegalArgumentException] {
         GlobalOrder.groupedTrailingSums(liK, Seq(col("l_returnflag")),
           Seq(col("l_orderkey"), col("l_linenumber")),
-          values = Seq((col("q"), "tsum")), frame = 17)
+          values = Seq((col("q"), "tsum")), frame = 17).collect()
       }
       assert(e.getMessage.contains("maxTailContribs"), e.getMessage)
     } finally {
@@ -353,25 +362,58 @@ class GlobalOrderSpec extends SparkSpec {
     }
   }
 
-  test("no global window touches the big input; one tiny offset fold remains") {
-    // the global (keys = Nil) form: the one offset fold runs on the
-    // driver over the partitions-bound table (<= shuffle.partitions rows)
-    // and returns as a broadcast LocalRelation, so no window is planned
+  test("global rank-only and prefix calls take the same one-operator plan") {
+    // the global (keys = Nil) form, with and without a running sum: the
+    // offset fold runs on the driver over at most shuffle.partitions
+    // segments, so no window and no one-task sort is planned
     val order = Seq(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber"))
-    // phase 1 of the RANK-ONLY path stays inside whole-stage codegen:
-    // local rank and pid are bit-ops on monotonically_increasing_id over
-    // the pinned blocks — no Deserialize→MapPartitions→Serialize boundary
-    val plan = offsetBroadcastPlan(GlobalOrder.groupedRankAndPrefix(li, keys = Nil, order))
-    assert(!plan.contains("MapPartitions"),
-      s"rank-only phase 1 must not leave codegen:\n$plan")
-    assert(plan.contains("shiftrightunsigned"),
-      s"expected the mid-derived pid projection:\n$plan")
-    // the running-sum path keeps the imperative per-partition pass (an
-    // exclusive scan has no codegen equivalent) — pin that here too
-    val vPlan = offsetBroadcastPlan(GlobalOrder.groupedRankAndPrefix(li, keys = Nil, order,
+    groupedPlan(GlobalOrder.groupedRankAndPrefix(li, keys = Nil, order))
+    groupedPlan(GlobalOrder.groupedRankAndPrefix(li, keys = Nil, order,
       values = Seq((col("q"), "g_prefix"))))
-    assert(vPlan.contains("MapPartitions"),
-      s"prefix-sum phase 1 keeps the imperative pass:\n$vPlan")
+  }
+
+  test("grouped rows are identical across AQE, partition counts and coalescing") {
+    // the operator's census and output pass read one exchange, so any
+    // partition count or AQE coalescing of it must give the same rows
+    val order = Seq(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber"))
+    val dec = Tables.lineitem(spark, sf)
+      .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"),
+        col("l_extendedprice").cast("decimal(28,2)").as("p"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(col("l_orderkey"), col("l_linenumber")).collect().toSeq
+    def all = Seq(
+      rows(GlobalOrder.groupedRankAndPrefix(liK, Seq(col("l_returnflag")), order,
+        values = Seq((col("q"), "pfx")))),
+      rows(GlobalOrder.groupedRankAndPrefix(li, keys = Nil, order)),
+      rows(GlobalOrder.groupedTrailingSums(dec, Seq(col("l_returnflag")),
+        Seq(col("l_orderkey"), col("l_linenumber")), values = Seq((col("p"), "tsum")), frame = 17)))
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.enabled")
+    val had = keys.map(k => k -> spark.conf.getOption(k))
+    val want = all
+    try {
+      for (aqe <- Seq("true", "false"); parts <- Seq("1", "4", "13");
+           coalesce <- Seq("true", "false")) {
+        Seq(aqe, parts, coalesce).zip(keys).foreach { case (v, k) => spark.conf.set(k, v) }
+        assert(all == want, s"aqe=$aqe partitions=$parts coalesce=$coalesce")
+      }
+    } finally had.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  test("GroupedOrderExec reports its segments and output rows as SQL metrics") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val helper = new AdaptiveSparkPlanHelper {}
+    val df = GlobalOrder.groupedRankAndPrefix(liK, Seq(col("l_returnflag")),
+      Seq(col("l_orderkey"), col("l_linenumber")), values = Seq((col("q"), "pfx")))
+    df.collect()
+    val op = helper.collect(df.queryExecution.executedPlan) {
+      case g: graft.plans.GroupedOrderExec => g
+    }.head
+    val keys = liK.select(col("l_returnflag")).distinct().count()
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    val segs = op.metrics("numSegments").value
+    assert(segs >= keys && segs <= keys + parts - 1, s"$segs segments for $keys keys")
+    assert(op.metrics("numOutputRows").value == liK.count())
   }
 
   test("pinnedSliver: loud failure past the bound, complete set within it") {

@@ -310,19 +310,20 @@ class PlanAuditSpec extends SparkSpec {
       "q94_topk_per_key"     -> (2, 0, 0, 0),
       "q95_repeated_passages" -> (2, 0, 0, 0),
       "q100_rank_rewrite"    -> (2, 0, 0, 0),
-      // grouped-GlobalOrder family (round 7): the range exchange is
-      // the only fact-scale shuffle (the segment census runs as its own
-      // tiny job at build time); offsets come back as LocalRelation
-      // broadcasts; zero windows by construction
-      "q67_distribution_ranks"  -> (1, 1, 1, 0),
+      // grouped-GlobalOrder family: each rank/prefix call is one
+      // GroupedOrderExec over its range exchange, the only fact-scale
+      // shuffle (counted here, since nothing pins it away); the census
+      // and the offsets stay inside the operator, so it adds no
+      // broadcast and no join; zero windows by construction
+      "q67_distribution_ranks"  -> (2, 0, 0, 0),
       // q107's trailing sums are the seeded ring buffer — the
       // prefix-difference self-join (2 more exchanges) is gone
-      "q107_window_zscore"      -> (1, 1, 1, 0),
-      "q110_stratified_sample"  -> (2, 2, 2, 0),
-      "q138_quantile_normalize" -> (1, 1, 1, 0),
-      "q140_order_concurrency"  -> (2, 1, 1, 0),
-      "q146_source_quantiles"   -> (2, 1, 1, 0),
-      "q147_nucleus_vocab"      -> (4, 2, 2, 0),
+      "q107_window_zscore"      -> (2, 0, 0, 0),
+      "q110_stratified_sample"  -> (3, 1, 1, 0),
+      "q138_quantile_normalize" -> (2, 0, 0, 0),
+      "q140_order_concurrency"  -> (3, 0, 0, 0),
+      "q146_source_quantiles"   -> (3, 0, 0, 0),
+      "q147_nucleus_vocab"      -> (5, 1, 1, 0),
       "q148_repetition"         -> (3, 0, 0, 0),
       // q155 winnowing: hashing + window-min selection are row-local
       // array folds; the only exchanges are the two-phase (fp, doc) →
@@ -375,11 +376,11 @@ class PlanAuditSpec extends SparkSpec {
       // (source, shard) partitioning — no third exchange
       "q186_pack_boundaries"    -> (2, 0, 0, 1),
       // q188: two-phase GlobalOrder ranks — the exclusive offsets fold
-      // on the driver over ≤ shuffle-partitions rows and come back as a
-      // broadcast LocalRelation, so the plan has no window and no
-      // offset-aggregate exchange; the only shuffle is the output sort
-      // (the range partition sits below the pin)
-      "q188_curriculum"         -> (1, 1, 1, 0),
+      // on the driver over ≤ shuffle-partitions segments inside one
+      // GroupedOrderExec, so the plan has no window, no offset join and
+      // no offset-aggregate exchange; the shuffles are the operator's
+      // range exchange and the output sort
+      "q188_curriculum"         -> (2, 0, 0, 0),
       // q189: one per-doc window (corpus-cardinality key) + output sort
       "q189_chunk_pairs"        -> (2, 0, 0, 1),
       // q190: q32's serve shape (the pinned pair set) with the split
@@ -509,9 +510,9 @@ class PlanAuditSpec extends SparkSpec {
     // key-cardinality reducer tasks (≤25 keys) and sorted there — a
     // hard parallelism ceiling at 100×. All now route through
     // GlobalOrder.groupedRankAndPrefix: range partition on
-    // (key, order), per-(key, pid) segment pass, driver-folded
-    // offsets as a LocalRelation broadcast. No Window exec of ANY
-    // size may survive in these plans.
+    // (key, order), a segment census folded into offsets on the
+    // driver, and one pass that applies them (GroupedOrderExec). No
+    // Window exec of ANY size may survive in these plans.
     Seq("q67_distribution_ranks", "q107_window_zscore",
       "q110_stratified_sample", "q138_quantile_normalize",
       "q140_order_concurrency",
