@@ -8,7 +8,7 @@ import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, GraftShims, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, BoundReference, Cast, Expression, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, BoundReference, Cast, Expression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{Project, Sort}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
@@ -236,8 +236,16 @@ object GlobalOrder {
         AttributeReference(name, ExactSums.sumType(e.dataType), nullable = false)()
       }
     val plan = df.queryExecution.analyzed
+    // a computed key or sort expression (q110's md5) is evaluated once
+    // per row in a projection below the operator, not in every
+    // comparison of the sorts that read its range exchange
+    val computed = (k ++ o.map(_.child)).filterNot(_.isInstanceOf[Attribute]).distinct
+      .zipWithIndex.map { case (e, i) => e -> Alias(e, s"__order$i")() }
+    def ref(e: Expression): Expression = computed.find(_._1 == e).fold(e)(_._2.toAttribute)
+    val child = if (computed.isEmpty) plan else Project(plan.output ++ computed.map(_._2), plan)
     val kept = plan.output.filterNot(a => out.exists(_.name.equalsIgnoreCase(a.name)))
-    GraftShims.ofRows(spark, Project(kept ++ out, GroupedOrderNode(k, o, vs, frame, out, plan)))
+    GraftShims.ofRows(spark, Project(kept ++ out, GroupedOrderNode(k.map(ref),
+      o.map(s => s.copy(child = ref(s.child))), vs, frame, out, child)))
   }
 
   /**

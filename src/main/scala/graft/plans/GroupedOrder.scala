@@ -83,7 +83,7 @@ case class GroupedOrderExec(
     // at the default caps a frame = 10⁴ caller gets ≤ ~1.7k segments
     val maxTail = conf.getConfString("graft.groupedOrder.maxTailContribs", (1 << 24).toString).toLong
     val segs = graft.ops.GlobalOrder.segments(rows, keyRefs, caller,
-        frame.fold(Long.MaxValue)(maxTail / _))(sums.empty)((ring, r) => sums.push(ring, sums.of(r)))
+        frame.fold(Long.MaxValue)(maxTail / _))(sums.empty)(sums.add)
     frame.foreach(f => require(f.toLong * segs.length <= maxTail,
       s"groupedTrailingSums would buffer frame × segments = $f × " +
         s"${segs.length} > $maxTail contribution tuples on the driver: " +
@@ -125,8 +125,8 @@ case class GroupedOrderExec(
         }
         rank += 1
         extra.setLong(0, rank)
-        sums.emit(ring).zipWithIndex.foreach { case (v, i) => extra.update(2 + i, v) }
-        ring = sums.push(ring, sums.of(r))
+        if (sums.width > 0) sums.emit(ring).zipWithIndex.foreach { case (v, i) => extra.update(2 + i, v) }
+        ring = sums.add(ring, r)
         numOut += 1
         proj(joined(r, extra))
       }
@@ -159,7 +159,11 @@ final case class ExactSums(values: Seq[Expression], frame: Option[Int]) {
   val empty: Ring = (Vector.empty, zero)
   @transient private lazy val proj = UnsafeProjection.create(values)
 
-  def of(row: InternalRow): Array[Any] = {
+  /** Adds `row`'s values; without values (a rank-only call) the ring
+    * stays as it is. */
+  def add(ring: Ring, row: InternalRow): Ring = if (width == 0) ring else push(ring, of(row))
+
+  private def of(row: InternalRow): Array[Any] = {
     val r = proj(row)
     Array.tabulate(width) { i =>
       if (r.isNullAt(i)) zero(i)

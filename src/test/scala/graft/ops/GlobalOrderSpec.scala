@@ -372,6 +372,35 @@ class GlobalOrderSpec extends SparkSpec {
       values = Seq((col("q"), "g_prefix"))))
   }
 
+  test("computed keys and sort expressions are projected once, below the range exchange") {
+    // an expression key or order (q110 sorts by md5) is evaluated once
+    // per row: the operator's sorts compare plain columns, the hidden
+    // column stays out of the output, and the rows are the window's
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val keys = Seq(lower(col("l_returnflag")))
+    val order = Seq(md5(col("l_orderkey").cast("string")), col("l_linenumber"))
+    val df = GlobalOrder.groupedRankAndPrefix(liK, keys, order, values = Seq((col("q"), "pfx")))
+    assert(df.columns.toSeq == liK.columns.toSeq ++ Seq("g_rank", "g_total_rows", "pfx"))
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.select(col("l_orderkey"), col("l_linenumber"), col("g_rank"), col("pfx"))
+        .orderBy(col("l_orderkey"), col("l_linenumber")).collect()
+    val w = Window.partitionBy(keys: _*).orderBy(order: _*)
+    val want = liK.withColumn("g_rank", row_number().over(w).cast("long"))
+      .withColumn("pfx", coalesce(
+        sum(col("q")).over(w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+    assert(rows(df).sameElements(rows(want)))
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p                        => p
+    }
+    val sorts = plan.collect { case g: graft.plans.GroupedOrderExec => g.child }
+    assert(sorts.size == 1 && sorts.head.isInstanceOf[SortExec], s"expected one sorted child:\n$plan")
+    assert(sorts.head.asInstanceOf[SortExec].sortOrder.forall(_.child.isInstanceOf[Attribute]),
+      s"the operator's sort must compare columns:\n$plan")
+  }
+
   test("grouped rows are identical across AQE, partition counts and coalescing") {
     // the operator's census and output pass read one exchange, so any
     // partition count or AQE coalescing of it must give the same rows
